@@ -359,6 +359,17 @@ _TILES_RAW_CACHE: dict[tuple[str, str], DataFrame] = {}
 _SUB_LEVELS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
+def _clear_session_caches() -> None:
+    """Forget every session-scoped cache above, so the next query rebuilds
+    its inputs through the (possibly patched) module-level loaders. The
+    cached DataFrames are dropped, not unpersisted."""
+    for cache in (
+        _TILES_CACHE, _RASTER_CACHE, _SHINGLE_CACHE, _EMB_CACHE,
+        _TILES_RAW_CACHE, _SUB_LEVELS_CACHE,
+    ):
+        cache.clear()
+
+
 def _shared_sub_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """levels_df over the 10%-subset metadata, persisted once per session
     (r7): all four render queries build the IDENTICAL `lv` relation

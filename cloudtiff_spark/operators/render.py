@@ -34,7 +34,7 @@ from pyspark.sql.types import (
 )
 
 from ..codecs import decode_image
-from .spatial import region_extract
+from .spatial import region_extract, slippy_bounds_np
 
 RENDER_SCHEMA = StructType(
     [
@@ -176,40 +176,50 @@ def _map_projected(r0, lon: np.ndarray, lat: np.ndarray) -> tuple[np.ndarray, np
     return px, py
 
 
+def _gather(
+    canvas: np.ndarray, y_off: int, x_off: int, apx: np.ndarray, apy: np.ndarray,
+    lw: int, lh: int,
+) -> np.ndarray:
+    """Nearest gather of ABSOLUTE level pixel coords (apx, apy) from a
+    canvas whose origin sits at level pixel (y_off, x_off) — the one
+    gather kernel of every render path. Pixels off the canvas or beyond
+    the level edge read 0 (a missing tile). 1-D coords (a separable map:
+    apx per output column, apy per output row) gather the rows x cols
+    outer product; 2-D coords (the projected per-pixel map) gather
+    elementwise."""
+    ch, cw = canvas.shape[0], canvas.shape[1]
+    px, py = apx - x_off, apy - y_off
+    ok_x = (px >= 0) & (px < cw) & (apx < lw)
+    ok_y = (py >= 0) & (py < ch) & (apy < lh)
+    px, py = np.clip(px, 0, cw - 1), np.clip(py, 0, ch - 1)
+    if apx.ndim == 1:
+        # single np.ix_ gather: the chained canvas[rows][:, cols] form
+        # materializes an (out_h, cw, 3) intermediate — cw (covered
+        # tile-range width) is often much wider than out_w, and this
+        # gather dominates region_render's cost at ~1.4 GP of output
+        out = canvas[np.ix_(py, px)]
+        out[~ok_y, :, :] = 0
+        out[:, ~ok_x, :] = 0
+    else:
+        out = canvas[py, px]
+        out[~(ok_x & ok_y)] = 0
+    return out
+
+
 def _render_one(r0, canvas: np.ndarray, y_off: int, x_off: int) -> dict:
-    """Render ONE (query, image) output raster from a pre-mosaicked canvas
-    — the shared kernel of the pair-grain assemble (region_render) and the
-    image-grain wmts assemble. ``r0`` is any mapping (pandas Series or
-    plain dict) carrying the level geometry + query rect keys. Both paths
-    call this with a canvas covering exactly the pair's OWN tile bbox, so
-    their outputs are byte-identical by construction."""
-    lw, lh = int(r0["lw"]), int(r0["lh"])
+    """Render ONE (query, image) output raster from a canvas covering the
+    pair's own tile bbox (region_render's per-group assemble; wmts_render
+    reaches it through region_render). ``r0`` carries the level geometry
+    + query rect keys."""
     # output pixel centers (EPSG:4326 target grid) -> absolute level
     # pixel coords. For 4326 images the affine is direct; for projected
     # images every pixel center goes through the exact CRS transform
     # (P3 / the pixel-map reprojection join J2, util.rs:155-204) — not
     # the bounds-box linear approximation.
     lon, lat, out_w, out_h = _out_lonlat(r0)
-    ch, cw = canvas.shape[0], canvas.shape[1]
-    if int(r0["epsg"]) == 4326:
-        # separable affine: gather rows x cols
-        apx, apy = _map_separable(r0, lon, lat)
-        px, py = apx - x_off, apy - y_off
-        ok_x = (px >= 0) & (px < cw) & (apx < lw)
-        ok_y = (py >= 0) & (py < ch) & (apy < lh)
-        # single np.ix_ gather: the chained canvas[rows][:, cols] form
-        # materializes an (out_h, cw, 3) intermediate — cw (covered
-        # tile-range width) is often much wider than out_w, and this
-        # gather dominates region_render's cost at ~1.4 GP of output
-        out = canvas[np.ix_(np.clip(py, 0, ch - 1), np.clip(px, 0, cw - 1))]
-        out[~ok_y, :, :] = 0
-        out[:, ~ok_x, :] = 0
-    else:
-        apx, apy = _map_projected(r0, lon, lat)
-        px, py = apx - x_off, apy - y_off
-        ok = (px >= 0) & (px < cw) & (py >= 0) & (py < ch) & (apx < lw) & (apy < lh)
-        out = canvas[np.clip(py, 0, ch - 1), np.clip(px, 0, cw - 1)]
-        out[~ok] = 0
+    mapper = _map_separable if int(r0["epsg"]) == 4326 else _map_projected
+    apx, apy = mapper(r0, lon, lat)
+    out = _gather(canvas, y_off, x_off, apx, apy, int(r0["lw"]), int(r0["lh"]))
     return {
         "query_id": r0["query_id"],
         "image_id": r0["image_id"],
@@ -303,7 +313,7 @@ def region_render(
     # into the next batch. Hash partitioning guarantees a group never
     # spans partitions; the within-partition sort guarantees contiguity;
     # per-group math is the identical `assemble` body, so outputs are
-    # byte-identical (test-pinned against the image grain and the oracle).
+    # byte-identical (test-pinned against the oracle).
     rep = joined.repartition("query_id", "image_id").sortWithinPartitions(
         "query_id", "image_id"
     )
@@ -338,8 +348,6 @@ def wmts_render(
     tiles: DataFrame,
     queries: DataFrame,
     tile_px: int = 256,
-    grain: str = "pair",
-    salt: int = 1,
 ) -> DataFrame:
     """Render each queried slippy tile (kind='wmts') as a fixed
     tile_px x tile_px raster over the tile's lon/lat bounds — the Spark
@@ -357,41 +365,8 @@ def wmts_render(
     are bit-identical to the sequential oracle recompute — and the stage
     stays fully distributed for pyramid-scale tile sets.
 
-    ``grain`` picks the physical plan (outputs are byte-identical — the
-    per-query canvas is rebuilt from the query's OWN tile set either way,
-    pinned by pytest). ``"auto"`` resolves to one of the two via a
-    metadata-only pick: mean grid tiles per LOD-picked (image, level)
-    > 4 -> "image", else "pair" (one tiny aggregation over the levels
-    relation — no tile payloads move):
-
-    - ``"pair"`` (default): the straight region_render path, one group
-      per (query, image). MEASURED faster on the fixture tile set
-      (sf0.1: ~15 s vs ~18-40 s for the image grain across salt settings)
-      because fixture image-levels hold a SINGLE tile (nt=1 for every
-      (image, level) the LOD pick lands on), so the 23x tile-ref
-      duplication costs only duplicated ~KB compressed payloads and
-      cheap re-decodes.
-    - ``"image"``: group by (image_id, level[, salt]) — each source tile
-      ships and DECODES once per group and every query tile of that
-      image-level renders from the shared decoded set. This is the scale
-      grain for real pyramids, where one level spans MANY large tiles
-      and decode dominates (the BENCH decode-cost attribution measured
-      decode at ~70% of tile cost for the JPEG corpus): the pair grain
-      would shuffle and decode each tile once per overlapping query tile
-      (~23x here), the image grain exactly once. ``salt`` (default 1)
-      splits each image-level's QUERY set into salt hash-buckets to
-      bound per-task work for pyramid-scale tile lists — tile payloads
-      then duplicate at most salt times (still << pair grain); raise it
-      when one image-level carries thousands of query tiles.
-
     Output schema matches region_render (query_id, image_id, level,
     out_w, out_h, raster)."""
-    from .spatial import region_extract, slippy_bounds_np
-
-    if grain not in ("image", "pair", "auto"):
-        raise ValueError(f"unknown wmts_render grain {grain!r}")
-    if salt < 1:
-        raise ValueError(f"salt must be >= 1, got {salt}")
     q = queries.filter(F.col("kind") == "wmts").select("query_id", "qz", "qx", "qy")
     mp = tile_px * tile_px / 1e6
 
@@ -419,126 +394,7 @@ def wmts_render(
         "query_id string, kind string, rxmin double, rymin double, "
         "rxmax double, rymax double, mp_limit double, res_w int, res_h int",
     )
-    if grain == "auto":
-        # metadata-only grain pick (no tile scan): the image grain pays
-        # off when the LOD-picked levels hold MANY tiles (decode is the
-        # dominant cost it deduplicates — BENCH.md round-6 grain study:
-        # fixture levels at ~1 tile favored pair by 1.2-2.7x, real
-        # pyramids with decode at ~70% of tile cost favor image). Join
-        # the picked (query, image, level) set to the levels relation's
-        # grid size and threshold the mean — one tiny aggregation over
-        # metadata relations, no payload movement.
-        picked = region_extract(levels, wq).select(
-            "query_id", "image_id", "level"
-        ).dropDuplicates()
-        sz = picked.join(
-            levels.select("image_id", "level", "cols", "rows"),
-            ["image_id", "level"],
-        ).agg(F.avg(F.col("cols") * F.col("rows")).alias("m")).first()
-        mean_tiles = sz["m"] or 0.0
-        grain = "image" if mean_tiles > 4.0 else "pair"
-    if grain == "pair":
-        return region_render(levels, tiles, wq)
-
-    # ---- image grain: decode-once-per-group, render all query tiles ----
-    wanted = region_extract(levels, wq)  # query_id, image_id, level, tile_idx
-    qp = wq.select(
-        "query_id", "rxmin", "rymin", "rxmax", "rymax", "mp_limit", "res_w", "res_h"
-    )
-    refs = wanted.join(F.broadcast(qp), "query_id")
-    salt_col = (
-        F.pmod(F.xxhash64("query_id"), F.lit(salt)) if salt > 1 else F.lit(0)
-    )
-    # one row per DISTINCT needed tile (per salt bucket), carrying the
-    # small list of query refs that read it — the tile payload joins once
-    tile_refs = refs.withColumn("salt", salt_col).groupBy(
-        "image_id", "level", "salt", "tile_idx"
-    ).agg(
-        F.collect_list(
-            F.struct(
-                "query_id", "rxmin", "rymin", "rxmax", "rymax",
-                "mp_limit", "res_w", "res_h",
-            )
-        ).alias("refs")
-    )
-    lv = levels.select(
-        "image_id", "level", "lw", "lh", "tile_w", "tile_h", "cols", "rows",
-        "xmin", "ymin", "xmax", "ymax", "epsg", "origin_x", "origin_y", "scale_px",
-        "w", "h",
-    )
-    keys = ["image_id", "level", "tile_idx"]
-    pre_decoded = "raw" in tiles.columns
-    tile_cols = (*keys, "raw") if pre_decoded else (*keys, "fmt", "tile_bytes")
-    rows = tile_refs.join(lv, ["image_id", "level"]).join(
-        tiles.select(*tile_cols), keys, "inner"
-    )
-
-    _LEVEL_KEYS = (
-        "image_id", "level", "lw", "lh", "xmin", "ymin", "xmax", "ymax",
-        "epsg", "origin_x", "origin_y", "scale_px", "w", "h",
-    )
-
-    def assemble_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        r0 = pdf.iloc[0]
-        lw, lh = int(r0["lw"]), int(r0["lh"])
-        tw, th, cols = int(r0["tile_w"]), int(r0["tile_h"]), int(r0["cols"])
-        idxs = pdf["tile_idx"].to_numpy().astype(np.int64)
-        fmts = None if pre_decoded else pdf["fmt"].to_numpy()
-        payloads = pdf["raw" if pre_decoded else "tile_bytes"].to_numpy()
-        refs_col = pdf["refs"].to_numpy()
-        decoded: dict[int, np.ndarray] = {}
-        qmap: dict[str, tuple[dict, list[int]]] = {}
-        for i in range(len(idxs)):
-            ti = int(idxs[i])
-            decoded[ti] = (
-                np.frombuffer(payloads[i], dtype=np.uint8).reshape(th, tw, 3)
-                if pre_decoded
-                else decode_image(payloads[i], fmts[i], tw, th)
-            )
-            for ref in refs_col[i]:
-                ent = qmap.get(ref["query_id"])
-                if ent is None:
-                    qmap[ref["query_id"]] = (ref, [ti])
-                else:
-                    ent[1].append(ti)
-        base = {k: r0[k] for k in _LEVEL_KEYS}
-        out_rows = []
-        for qid, (ref, tlist) in qmap.items():
-            # per-QUERY canvas over the query's own tile bbox — identical
-            # to the pair-grain _mosaic_bbox canvas, so _render_one output
-            # bytes match the pair grain exactly
-            tarr = np.asarray(tlist, dtype=np.int64)
-            rs, cs = tarr // cols, tarr % cols
-            r_min, c_min = int(rs.min()), int(cs.min())
-            y_off, x_off = r_min * th, c_min * tw
-            canvas = np.zeros(
-                ((int(rs.max()) - r_min + 1) * th, (int(cs.max()) - c_min + 1) * tw, 3),
-                dtype=np.uint8,
-            )
-            for pos in range(len(tarr)):
-                tile = decoded[int(tarr[pos])]
-                y0 = int(rs[pos]) * th - y_off
-                x0 = int(cs[pos]) * tw - x_off
-                hh = min(th, lh - int(rs[pos]) * th)
-                ww = min(tw, lw - int(cs[pos]) * tw)
-                canvas[y0 : y0 + hh, x0 : x0 + ww] = tile[:hh, :ww]
-            r0q = dict(base)
-            r0q.update(
-                {
-                    k: ref[k]
-                    for k in (
-                        "rxmin", "rymin", "rxmax", "rymax",
-                        "mp_limit", "res_w", "res_h",
-                    )
-                }
-            )
-            r0q["query_id"] = qid
-            out_rows.append(_render_one(r0q, canvas, y_off, x_off))
-        return pd.DataFrame(out_rows)
-
-    return rows.groupBy("image_id", "level", "salt").applyInPandas(
-        assemble_group, RENDER_SCHEMA
-    )
+    return region_render(levels, tiles, wq)
 
 
 BLOCK_SCHEMA = StructType(
@@ -761,21 +617,9 @@ def region_render_blocked(
             canvas, y_off, x_off = _mosaic_bbox(have, tw, th, cols, lw, lh)
         else:
             canvas, y_off, x_off = np.zeros((th, tw, 3), dtype=np.uint8), 0, 0
-        ch, cw = canvas.shape[0], canvas.shape[1]
-        if int(r0["epsg"]) == 4326:
-            apx, apy = _map_separable(r0, lon[col0:col1], lat[row0:row1])
-            px, py = apx - x_off, apy - y_off
-            ok_x = (px >= 0) & (px < cw) & (apx < lw)
-            ok_y = (py >= 0) & (py < ch) & (apy < lh)
-            out = canvas[np.ix_(np.clip(py, 0, ch - 1), np.clip(px, 0, cw - 1))]
-            out[~ok_y, :, :] = 0
-            out[:, ~ok_x, :] = 0
-        else:
-            apx, apy = _map_projected(r0, lon[col0:col1], lat[row0:row1])
-            px, py = apx - x_off, apy - y_off
-            ok = (px >= 0) & (px < cw) & (py >= 0) & (py < ch) & (apx < lw) & (apy < lh)
-            out = canvas[np.clip(py, 0, ch - 1), np.clip(px, 0, cw - 1)]
-            out[~ok] = 0
+        mapper = _map_separable if int(r0["epsg"]) == 4326 else _map_projected
+        apx, apy = mapper(r0, lon[col0:col1], lat[row0:row1])
+        out = _gather(canvas, y_off, x_off, apx, apy, lw, lh)
         return pd.DataFrame(
             [
                 {
@@ -906,24 +750,16 @@ def crop_render(
         r0_ = pdf.iloc[0]
         lw_, lh_ = int(r0_["lw"]), int(r0_["lh"])
         tw_, th_, cols = int(r0_["tile_w"]), int(r0_["tile_h"]), int(r0_["cols"])
-        rw, rh = du, dv
-        out_h = int(max(1, round(np.sqrt(mp_limit * 1e6 / (rw / rh)))))
-        out_w = int(max(1, round((rw / rh) * out_h)))
-        us = u0 + (np.arange(out_w) + 0.5) / out_w * rw
-        vs = v0 + (np.arange(out_h) + 0.5) / out_h * rh
+        out_w, out_h = _out_dims(du, dv, mp_limit)
+        us = u0 + (np.arange(out_w) + 0.5) / out_w * du
+        vs = v0 + (np.arange(out_h) + 0.5) / out_h * dv
         px = np.clip(np.floor(us * lw_).astype(np.int64), 0, lw_ - 1)
         py = np.clip(np.floor(vs * lh_).astype(np.int64), 0, lh_ - 1)
         # bounded canvas (see _mosaic_bbox): peak memory O(crop tiles);
         # pixels landing outside the covered box read 0, byte-identical to
         # the old full-level sparse canvas
         canvas, y_off, x_off = _mosaic_bbox(pdf, tw_, th_, cols, lw_, lh_)
-        ch, cw = canvas.shape[0], canvas.shape[1]
-        lpx, lpy = px - x_off, py - y_off
-        ok_x = (lpx >= 0) & (lpx < cw)
-        ok_y = (lpy >= 0) & (lpy < ch)
-        out = canvas[np.clip(lpy, 0, ch - 1)][:, np.clip(lpx, 0, cw - 1)]
-        out[~ok_y, :, :] = 0
-        out[:, ~ok_x, :] = 0
+        out = _gather(canvas, y_off, x_off, px, py, lw_, lh_)
         return pd.DataFrame(
             [
                 {

@@ -2,15 +2,17 @@
 
 The benchmark stage (BASELINE.json metric): tile assignment -> cell-keyed
 equi-join against the vector (query) side -> exact refine. Join strategy is
-explicit (north_rule): the query side is broadcast when small, otherwise
-both sides are range-repartitioned on the cell key; hot cells (the fixture
-plants 3 hot regions) are salted with ``phash % S`` before the shuffle.
+explicit (north_rule): pip_join broadcasts the query cover unless the caller
+passes ``broadcast_queries=False``, which range-repartitions both sides on
+the cell key instead; hot cells (the fixture plants 3 hot regions) are
+salted with ``phash % S`` before the shuffle.
 
 Reference analogs: the tile-cache hash join (render/tiles.rs:26-57,
 renderer.rs:137-175) and the crop -> tile-range pruning (level.rs:204-231);
 the PIP refine generalizes the reference's in-bounds containment checks
-(level.rs:254-256, 384-402) to arbitrary polygons via a crossing-number
-test over Arrow coordinate arrays (vectorized numpy, no per-row Python).
+(level.rs:254-256, 384-402) to arbitrary polygons: one Arrow UDF tests each
+batch against padded per-query edge matrices in a single numpy broadcast,
+under the even-odd (crossing number) or nonzero (winding number) rule.
 """
 
 from __future__ import annotations
@@ -28,107 +30,6 @@ from ..cells import Z_JOIN, cell_xy_expr, pack_expr
 SALT = 8
 #: a cell is "hot" when it holds more than this fraction of all tiles
 HOT_FRACTION = 0.02
-#: query side under this many rows (post-explode) is broadcast
-BROADCAST_ROWS = 2_000_000
-
-
-# ---------------------------------------------------------------------------
-# exact point-in-polygon refine (J4) — crossing number, Arrow-vectorized
-# ---------------------------------------------------------------------------
-
-
-@pandas_udf(BooleanType())
-def pip_refine(
-    px: pd.Series, py: pd.Series, poly_x: pd.Series, poly_y: pd.Series, qid: pd.Series
-) -> pd.Series:
-    """Crossing-number (even-odd) containment of (px, py) in the polygon.
-
-    Vertices are NOT repeated (last edge wraps to the first vertex). Within
-    an Arrow batch, rows are grouped by query_id so each polygon is tested
-    against all its candidate points in one (n_edges x n_points) numpy
-    broadcast — no per-row Python.
-
-    The edge test is the textbook ray-cast: an edge (x1,y1)->(x2,y2) crosses
-    the +x ray from (px,py) iff (y1>py) != (y2>py) and
-    px < (x2-x1)*(py-y1)/(y2-y1) + x1. The DuckDB oracle in
-    __spark_entry__.oracle_sql uses the byte-identical formula.
-    """
-    out = np.zeros(len(px), dtype=bool)
-    pxv = px.to_numpy(dtype=np.float64)
-    pyv = py.to_numpy(dtype=np.float64)
-    for _, idx in pd.Series(range(len(qid))).groupby(qid.to_numpy(), sort=False).groups.items():
-        ii = np.asarray(idx)
-        vx = np.asarray(poly_x.iloc[ii[0]], dtype=np.float64)
-        vy = np.asarray(poly_y.iloc[ii[0]], dtype=np.float64)
-        x1, y1 = vx, vy
-        x2, y2 = np.roll(vx, -1), np.roll(vy, -1)
-        X = pxv[ii]  # (n,)
-        Y = pyv[ii]
-        # (m edges, n points) broadcast
-        straddle = (y1[:, None] > Y[None, :]) != (y2[:, None] > Y[None, :])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = (x2 - x1)[:, None] * (Y[None, :] - y1[:, None]) / (y2 - y1)[:, None] + x1[
-                :, None
-            ]
-        crossings = np.sum(straddle & (X[None, :] < xint), axis=0)
-        out[ii] = (crossings % 2).astype(bool)
-    return pd.Series(out)
-
-
-@pandas_udf(BooleanType())
-def pip_refine_winding(
-    px: pd.Series, py: pd.Series, poly_x: pd.Series, poly_y: pd.Series, qid: pd.Series
-) -> pd.Series:
-    """Winding-number (nonzero rule) containment — the north-star's named
-    refine. For simple polygons (the fixture's star-shaped queries and any
-    non-self-intersecting geometry) it agrees with the crossing-number
-    refine exactly (tests assert it); they differ only on self-intersecting
-    polygons, where nonzero counts the overlap region as inside.
-
-    wn += 1 for an upward edge (y1 <= py < y2) with the point strictly left
-    of it; wn -= 1 for a downward edge (y2 <= py < y1) with the point
-    strictly right. Inside iff wn != 0. Vectorized (edges x points)."""
-    out = np.zeros(len(px), dtype=bool)
-    pxv = px.to_numpy(dtype=np.float64)
-    pyv = py.to_numpy(dtype=np.float64)
-    for _, idx in pd.Series(range(len(qid))).groupby(qid.to_numpy(), sort=False).groups.items():
-        ii = np.asarray(idx)
-        vx = np.asarray(poly_x.iloc[ii[0]], dtype=np.float64)
-        vy = np.asarray(poly_y.iloc[ii[0]], dtype=np.float64)
-        x1, y1 = vx[:, None], vy[:, None]
-        x2, y2 = np.roll(vx, -1)[:, None], np.roll(vy, -1)[:, None]
-        X, Y = pxv[ii][None, :], pyv[ii][None, :]
-        # signed area of (p1, p2, P): >0 when P is left of p1->p2
-        cross = (x2 - x1) * (Y - y1) - (X - x1) * (y2 - y1)
-        up = (y1 <= Y) & (y2 > Y) & (cross > 0)
-        dn = (y2 <= Y) & (y1 > Y) & (cross < 0)
-        wn = up.sum(axis=0).astype(np.int64) - dn.sum(axis=0).astype(np.int64)
-        out[ii] = wn != 0
-    return pd.Series(out)
-
-
-def pip_refine_native(px: Column, py: Column, poly_x: Column, poly_y: Column) -> Column:
-    """Crossing-number containment as a pure Catalyst expression (no Python
-    round-trip), bit-identical double math to both pip_refine (the Arrow
-    UDF) and the DuckDB oracle — tests assert all three agree.
-
-    Uses an F.aggregate fold over the vertex indices. (An unrolled
-    16-term variant was tried and is ~5x SLOWER: the giant expression tree
-    blows the JIT method-size limit and whole-stage codegen bails out.)
-    """
-    n = F.size(poly_x)
-    idx = F.sequence(F.lit(0), n - 1)
-
-    def term(acc: Column, i: Column) -> Column:
-        x1 = F.element_at(poly_x, i + 1)
-        y1 = F.element_at(poly_y, i + 1)
-        x2 = F.element_at(poly_x, (i + 1) % n + 1)
-        y2 = F.element_at(poly_y, (i + 1) % n + 1)
-        straddle = (y1 > py) != (y2 > py)
-        xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
-        return acc + F.when(straddle & (px < xint), 1).otherwise(0)
-
-    return F.aggregate(idx, F.lit(0), term) % 2 == 1
 
 
 # ---------------------------------------------------------------------------
@@ -163,7 +64,7 @@ def hot_cells(tiles: DataFrame, fraction: float = HOT_FRACTION) -> DataFrame:
 class PreparedQueries:
     """Query-side planning artifacts for pip_join, cacheable across runs:
     the exploded cell cover (qc, cached DataFrame) and the polygon table
-    (tiny DataFrame + a collected dict for the arrow_bcast refine). In a
+    (tiny DataFrame + a collected dict for the edge-matrix refine). In a
     steady-state service these change only when the query set does."""
 
     def __init__(self, qc: DataFrame, q_polys: DataFrame):
@@ -185,7 +86,8 @@ class PreparedQueries:
     def edge_matrices(self) -> tuple[dict, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
         """Padded per-query edge matrices for the fully-vectorized refine:
         (query_id -> row index, X1, Y1, X2, Y2) each of shape (Q, max_edges).
-        Padding edges have y1 == y2 == 0 so they never straddle the ray."""
+        Padding edges have y1 == y2 == 0, so they never straddle the ray
+        (even-odd) nor count as an up or down edge (nonzero)."""
         polys = self.polys_dict()
         qids = sorted(polys)
         max_e = max(len(polys[q][0]) for q in qids)
@@ -228,7 +130,7 @@ def pip_join(
     tiles: DataFrame,
     queries: DataFrame,
     salt: int = SALT,
-    broadcast_queries: bool | None = None,
+    broadcast_queries: bool = True,
     hot: DataFrame | None = None,
     refine: str = "arrow_bcast",
     prepared: PreparedQueries | None = None,
@@ -236,14 +138,24 @@ def pip_join(
     """PIP spatial join: polygons x tile-centers -> exact containment rows.
 
     Plan: queries (pip kind) -> bbox cells at Z_JOIN -> [salt explode on hot
-    cells] -> equi-join tiles on (cell_join[, salt]) -> crossing-number
-    refine -> project. Output grain matches FIXTURES.md golden_pip_rows:
+    cells] -> equi-join tiles on (cell_join[, salt]) -> edge-matrix refine
+    -> project. Output grain matches FIXTURES.md golden_pip_rows:
     (query_id, image_id, level, tile_idx, caption).
+
+    ``refine`` picks the containment rule: ``"arrow_bcast"`` (default) is
+    even-odd (crossing number), the formula the DuckDB oracle in
+    __spark_entry__.oracle_sql evaluates byte-identically; ``"winding"`` is
+    nonzero (winding number). The two agree on simple polygons and differ
+    only where a self-intersecting polygon overlaps itself, which nonzero
+    counts as inside.
     """
+    if refine not in ("arrow_bcast", "winding"):
+        raise ValueError(
+            f"unknown pip_join refine {refine!r}; expected 'arrow_bcast' or 'winding'"
+        )
     if prepared is None:
         prepared = prepare_pip_queries(queries)
     qc = prepared.qc
-    q_polys = prepared.q_polys
 
     t = tiles
     if salt and salt > 1:
@@ -272,9 +184,8 @@ def pip_join(
     else:
         join_keys = ["cell_join"]
 
-    if broadcast_queries is None:
-        broadcast_queries = True  # fixture query side is always small; at
-        # 10^12-image scale flip to range-repartition (see repartitioned path)
+    # the query cover is small and broadcast by default; at 10^12-image
+    # scale broadcast_queries=False range-repartitions both sides instead
     if broadcast_queries:
         cand = t.join(F.broadcast(qc), join_keys, "inner")
     else:
@@ -289,43 +200,39 @@ def pip_join(
         & (F.col("lat_c") >= F.col("bymin"))
         & (F.col("lat_c") <= F.col("bymax"))
     )
-    if refine == "arrow_bcast":
-        # ship only (query_id, lon, lat) through Arrow; the polygon EDGE
-        # MATRICES are captured ONCE in the UDF closure. The whole batch is
-        # refined in ONE (rows x max_edges) numpy broadcast — no per-group
-        # Python loop (a groupby-per-batch variant was 10x slower and capped
-        # core scaling).
-        qidx, X1, Y1, X2, Y2 = prepared.edge_matrices()
+    # ship only (query_id, lon, lat) through Arrow; the polygon EDGE
+    # MATRICES are captured ONCE in the UDF closure. The whole batch is
+    # refined in ONE (rows x max_edges) numpy broadcast — no per-group
+    # Python loop (a groupby-per-batch variant was 10x slower and capped
+    # core scaling).
+    qidx, X1, Y1, X2, Y2 = prepared.edge_matrices()
+    winding = refine == "winding"
 
-        @pandas_udf(BooleanType())
-        def _refine(qid: pd.Series, pxs: pd.Series, pys: pd.Series) -> pd.Series:
-            codes = qid.map(qidx).to_numpy(dtype=np.int64)
-            X = pxs.to_numpy(dtype=np.float64)[:, None]  # (B, 1)
-            Y = pys.to_numpy(dtype=np.float64)[:, None]
-            x1, y1 = X1[codes], Y1[codes]  # (B, E)
-            x2, y2 = X2[codes], Y2[codes]
+    @pandas_udf(BooleanType())
+    def _refine(qid: pd.Series, pxs: pd.Series, pys: pd.Series) -> pd.Series:
+        codes = qid.map(qidx).to_numpy(dtype=np.int64)
+        X = pxs.to_numpy(dtype=np.float64)[:, None]  # (B, 1)
+        Y = pys.to_numpy(dtype=np.float64)[:, None]
+        x1, y1 = X1[codes], Y1[codes]  # (B, E)
+        x2, y2 = X2[codes], Y2[codes]
+        if winding:
+            # +1 per upward edge (y1 <= py < y2) with the point strictly
+            # left of it, -1 per downward edge (y2 <= py < y1) with the
+            # point strictly right; inside iff the sum is nonzero
+            cross = (x2 - x1) * (Y - y1) - (X - x1) * (y2 - y1)
+            up = (y1 <= Y) & (y2 > Y) & (cross > 0)
+            dn = (y2 <= Y) & (y1 > Y) & (cross < 0)
+            inside = up.sum(axis=1) != dn.sum(axis=1)
+        else:
+            # ray cast along +x: an edge crosses iff it straddles py and
+            # its crossing lies right of px
             straddle = (y1 > Y) != (y2 > Y)
             with np.errstate(divide="ignore", invalid="ignore"):
                 xint = (x2 - x1) * (Y - y1) / (y2 - y1) + x1
             inside = (np.sum(straddle & (X < xint), axis=1) % 2).astype(bool)
-            return pd.Series(inside)
+        return pd.Series(inside)
 
-        hit = cand.filter(_refine(F.col("query_id"), F.col("lon_c"), F.col("lat_c")))
-    else:
-        cand = cand.join(F.broadcast(q_polys), "query_id")
-        if refine == "native":
-            pred = pip_refine_native(
-                F.col("lon_c"), F.col("lat_c"), F.col("poly_x"), F.col("poly_y")
-            )
-        elif refine == "winding":
-            pred = pip_refine_winding(
-                F.col("lon_c"), F.col("lat_c"), F.col("poly_x"), F.col("poly_y"), F.col("query_id")
-            )
-        else:
-            pred = pip_refine(
-                F.col("lon_c"), F.col("lat_c"), F.col("poly_x"), F.col("poly_y"), F.col("query_id")
-            )
-        hit = cand.filter(pred)
+    hit = cand.filter(_refine(F.col("query_id"), F.col("lon_c"), F.col("lat_c")))
     return hit.select("query_id", "image_id", "level", "tile_idx", "caption")
 
 

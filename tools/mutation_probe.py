@@ -84,12 +84,7 @@ def main() -> int:
         E._docs, E._emb, E._fixture_tables, E._t = orig_docs, orig_emb, orig_tables, orig_t
         E._strip_cogs = orig_strip
         E._sparse_cogs = orig_sparse
-        E._RASTER_CACHE.clear()
-        E._TILES_CACHE.clear()
-        E._TILES_RAW_CACHE.clear()
-        E._SUB_LEVELS_CACHE.clear()
-        E._SHINGLE_CACHE.clear()
-        E._EMB_CACHE.clear()
+        E._clear_session_caches()
         if kind == "doc_text":
             # full replacement, not an append: sketch operators (winnowing
             # fingerprint) are insensitive to benign suffixes BY DESIGN.
@@ -282,12 +277,7 @@ def main() -> int:
     E._docs, E._emb, E._fixture_tables, E._t = orig_docs, orig_emb, orig_tables, orig_t
     E._strip_cogs = orig_strip
     E._sparse_cogs = orig_sparse
-    E._RASTER_CACHE.clear()
-    E._TILES_CACHE.clear()
-    E._TILES_RAW_CACHE.clear()
-    E._SUB_LEVELS_CACHE.clear()
-    E._SHINGLE_CACHE.clear()
-    E._EMB_CACHE.clear()
+    E._clear_session_caches()
     for name in ["simhash", "embed_topk", "decode_check", "pricing_summary",
                  "strip_ingest", "sparse_cog", "mask_ingest"]:
         ok = compare(spark, con, E, name)

@@ -18,9 +18,11 @@ expressions are written as the byte-identical expression tree on both sides.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -224,19 +226,38 @@ def _image_subset(images: DataFrame) -> DataFrame:
     return images.filter(F.col("image_id").endswith("0"))
 
 
-#: session-scoped materialized-tile cache, keyed by (applicationId, sf_dir)
-_TILES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-#: session-scoped decoded-raster cache, keyed by (applicationId, sf_dir)
-_RASTER_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-#: session-scoped shingle cache, keyed by (applicationId, sf_dir, n)
-_SHINGLE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-#: session-scoped embeddings cache, keyed by (applicationId, sf_dir)
-_EMB_CACHE: dict[tuple[str, str], DataFrame] = {}
+#: every session cache, keyed by (builder name, applicationId,
+#: normpath(sf_dir), *args): applicationId so a fresh session never reuses
+#: a dead persisted handle, normpath so 'dir' and 'dir/' share one entry
+_SESSION_CACHE: dict[tuple, DataFrame] = {}
 
 
+def _session_cached(build: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """Memoize ``build(spark, sf_dir, *args)`` in _SESSION_CACHE, persisted
+    MEMORY_AND_DISK: at 100-TB scale the hot set spills instead of
+    evicting the executors."""
+
+    @functools.wraps(build)
+    def cached(spark: SparkSession, sf_dir: str, *args) -> DataFrame:
+        key = (build.__name__, spark.sparkContext.applicationId, os.path.normpath(sf_dir), *args)
+        df = _SESSION_CACHE.get(key)
+        if df is None:
+            df = build(spark, sf_dir, *args).persist(StorageLevel.MEMORY_AND_DISK)
+            _SESSION_CACHE[key] = df
+        return df
+
+    return cached
+
+
+def _clear_session_caches() -> None:
+    """Unpersist and forget every session cache, so the next query rebuilds
+    its inputs through the (possibly patched) module-level loaders."""
+    for df in _SESSION_CACHE.values():
+        df.unpersist()
+    _SESSION_CACHE.clear()
+
+
+@_session_cached
 def _shared_shingles(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     """shingles(_docs, n) computed ONCE per (session, sf_dir, n) and
     persisted (MEMORY_AND_DISK) — the text-dedup analog of _shared_decoded.
@@ -246,130 +267,79 @@ def _shared_shingles(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     (the dominant map-side cost of all four dedup queries). Calls _docs
     through the module global so the mutation probe's patched loader is
     honored after it clears this cache."""
-    from pyspark import StorageLevel
-
     from cloudtiff_spark.operators.dedup import shingles
 
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir), n)
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
-        # select BEFORE persist: shingles() keeps every docs column, and
-        # caching the raw text alongside its shingle array would double the
-        # cached footprint (all consumers read only doc_id + shingles)
-        df = (
-            shingles(_docs(spark, sf_dir), n=n)
-            .select("doc_id", "shingles")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        _SHINGLE_CACHE[key] = df
-    return df
+    # select BEFORE persist: shingles() keeps every docs column, and
+    # caching the raw text alongside its shingle array would double the
+    # cached footprint (all consumers read only doc_id + shingles)
+    return shingles(_docs(spark, sf_dir), n=n).select("doc_id", "shingles")
 
 
+@_session_cached
 def _shared_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embeddings table (read + repartition by vec_id) persisted once
     per session — five ANN/near-dup queries re-read it per benchmark pass
     otherwise. Same mutation-probe contract as _shared_shingles."""
-    from pyspark import StorageLevel
-
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    df = _EMB_CACHE.get(key)
-    if df is None:
-        df = _emb(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-        _EMB_CACHE[key] = df
-    return df
+    return _emb(spark, sf_dir)
 
 
+@_session_cached
 def _shared_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full images table decoded ONCE per session to raw RGB8 rasters
     and persisted (MEMORY_AND_DISK) — the decode-stage analog of
-    _shared_tiles. Five queries re-decode overlapping image subsets
-    (decode_check 100%, thumbnails / image_features / cog_roundtrip /
-    build_tiles 10%); with the cache the codec work happens exactly once
-    and consumers read pixels. `fmt` keeps naming the SOURCE format (tile
-    re-encode, compression choice, and output labels depend on it); the
-    decoded pixels ride a separate `raster` column the operators
-    short-circuit on. decode_check's phash compare over the cached raster
-    still verifies the decode end-to-end — it just verifies the cache
-    build's decode instead of a repeated one."""
-    from pyspark import StorageLevel
+    _shared_tiles. Seven consumers read overlapping image subsets
+    (decode_check 100%, quarantine 20%, thumbnails / image_features /
+    cog_roundtrip / _shared_tiles 10%, cog_blocked_sink 1%); with the
+    cache the codec work happens exactly once and consumers read pixels.
+    `fmt` keeps naming the SOURCE format (tile re-encode, compression
+    choice, and output labels depend on it); the decoded pixels ride a
+    separate `raster` column the operators short-circuit on. decode_check's
+    phash compare over the cached raster still verifies the decode
+    end-to-end — it just verifies the cache build's decode instead of a
+    repeated one."""
+    images, _, _ = _fixture_tables(spark, sf_dir)
 
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    df = _RASTER_CACHE.get(key)
-    if df is None:
-        images, _, _ = _fixture_tables(spark, sf_dir)
+    def gen(batches):
+        import pandas as pd
 
-        def gen(batches):
-            import pandas as pd
+        from cloudtiff_spark.codecs import decode_image
 
-            from cloudtiff_spark.codecs import decode_image
+        for pdf in batches:
+            rasters = []
+            for b, f, w, h in zip(pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]):
+                try:
+                    rasters.append(decode_image(b, f, int(w), int(h)).tobytes())
+                except Exception:
+                    # undecodable row -> null raster, NOT a task
+                    # failure (same contract as decode_status):
+                    # decode_check reports it phash_ok=false, pixel
+                    # consumers drop it like the reference's
+                    # filter_map (tiles.rs:33-56)
+                    rasters.append(None)
+            out = pdf.drop(columns=["bytes"]).assign(raster=rasters)
+            yield out
 
-            for pdf in batches:
-                rasters = []
-                for b, f, w, h in zip(pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]):
-                    try:
-                        rasters.append(decode_image(b, f, int(w), int(h)).tobytes())
-                    except Exception:
-                        # undecodable row -> null raster, NOT a task
-                        # failure (same contract as decode_status):
-                        # decode_check reports it phash_ok=false, pixel
-                        # consumers drop it like the reference's
-                        # filter_map (tiles.rs:33-56)
-                        rasters.append(None)
-                out = pdf.drop(columns=["bytes"]).assign(raster=rasters)
-                yield out
-
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in images.schema.fields
-            if f.name != "bytes"
-        ) + ", raster binary"
-        df = images.mapInPandas(gen, schema=out_schema).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        _RASTER_CACHE[key] = df
-    return df
+    out_schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in images.schema.fields
+        if f.name != "bytes"
+    ) + ", raster binary"
+    return images.mapInPandas(gen, schema=out_schema)
 
 
+@_session_cached
 def _shared_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """build_tiles(10% subset), persisted once per Spark session — the
-    Spark analog of the reference's TileCache (render/tiles.rs:13). Four
-    benchmark queries (tile_bytes_stats, pyramid_stats, crop_render,
-    region_render) consume the identical decode -> pyramid -> cut ->
-    re-encode output; persisting replaces four full pixel-pipeline
-    recomputes with one. MEMORY_AND_DISK: at 100-TB scale the hot tile
-    set spills instead of evicting the executors. Keyed by applicationId
-    so a fresh session never reuses a dead persisted handle."""
-    from pyspark import StorageLevel
-
+    Spark analog of the reference's TileCache (render/tiles.rs:13).
+    tile_bytes_stats, pyramid_stats and _shared_tiles_raw consume the
+    identical decode -> pyramid -> cut -> re-encode output; persisting
+    replaces their full pixel-pipeline recomputes with one."""
     from cloudtiff_spark.operators.tiling import build_tiles
 
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    df = _TILES_CACHE.get(key)
-    if df is None:
-        decoded = _shared_decoded(spark, sf_dir)
-        df = build_tiles(_image_subset(decoded)).persist(StorageLevel.MEMORY_AND_DISK)
-        _TILES_CACHE[key] = df
-    return df
+    return build_tiles(_image_subset(_shared_decoded(spark, sf_dir)))
 
 
-#: session-scoped PRE-DECODED tile cache, keyed by (applicationId, sf_dir)
-_TILES_RAW_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-#: session-scoped subset-levels cache, keyed by (applicationId, sf_dir)
-_SUB_LEVELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _clear_session_caches() -> None:
-    """Forget every session-scoped cache above, so the next query rebuilds
-    its inputs through the (possibly patched) module-level loaders. The
-    cached DataFrames are dropped, not unpersisted."""
-    for cache in (
-        _TILES_CACHE, _RASTER_CACHE, _SHINGLE_CACHE, _EMB_CACHE,
-        _TILES_RAW_CACHE, _SUB_LEVELS_CACHE,
-    ):
-        cache.clear()
-
-
+@_session_cached
 def _shared_sub_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """levels_df over the 10%-subset metadata, persisted once per session
     (r7): all four render queries build the IDENTICAL `lv` relation
@@ -378,22 +348,14 @@ def _shared_sub_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     join + levels explode per evaluation (~0.2-0.4 s warm). It is a pure
     derivation of the base tables (metadata, ~2.5k rows at sf0.1), the
     same input-materialization class as _shared_tiles."""
-    from pyspark import StorageLevel
-
     from cloudtiff_spark.operators.meta import levels_df
 
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    df = _SUB_LEVELS_CACHE.get(key)
-    if df is None:
-        images, meta, _ = _fixture_tables(spark, sf_dir)
-        sub = _image_subset(images)
-        df = levels_df(
-            meta.join(sub.select("image_id"), "image_id", "left_semi")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _SUB_LEVELS_CACHE[key] = df
-    return df
+    images, meta, _ = _fixture_tables(spark, sf_dir)
+    sub = _image_subset(images)
+    return levels_df(meta.join(sub.select("image_id"), "image_id", "left_semi"))
 
 
+@_session_cached
 def _shared_tiles_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """decode_tiles_once(_shared_tiles) persisted once per session (r7,
     guide §4.2 / §2.3): the four render consumers (crop_render,
@@ -407,18 +369,9 @@ def _shared_tiles_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     — was measured unprofitable per-query in r4 (the decode_once=False
     default rationale) but flips clearly profitable amortized across 4
     queries x 2+ bench passes sharing one session cache."""
-    from pyspark import StorageLevel
-
     from cloudtiff_spark.operators.render import decode_tiles_once
 
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    df = _TILES_RAW_CACHE.get(key)
-    if df is None:
-        df = decode_tiles_once(_shared_tiles(spark, sf_dir)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        _TILES_RAW_CACHE[key] = df
-    return df
+    return decode_tiles_once(_shared_tiles(spark, sf_dir))
 
 
 def q_tile_bytes_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,8 +23,43 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+
+def force_eval(df: DataFrame) -> int:
+    """Count rows while forcing EVERY output column to be computed —
+    a bare count() lets Catalyst prune the projected columns away."""
+    row = df.select(
+        F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64(*df.columns)).alias("h")
+    ).first()
+    return row["n"]
+
+
+def time_query(
+    fn: Callable[[SparkSession, str], DataFrame],
+    spark: SparkSession,
+    sf_dir: str,
+    qiters: int,
+    heavy_iters: int,
+) -> list[float]:
+    """Wall seconds of each pass of ``force_eval(fn(spark, sf_dir))``: the
+    first is cold, the best is the warm figure. A query whose best warm
+    pass is still > 2 s gets extra passes up to heavy_iters total."""
+    times = []
+    for _ in range(max(1, qiters)):
+        t0 = time.time()
+        force_eval(fn(spark, sf_dir))
+        times.append(round(time.time() - t0, 3))
+    while len(times) < heavy_iters and min(times[1:] or times) > 2.0:
+        t0 = time.time()
+        force_eval(fn(spark, sf_dir))
+        times.append(round(time.time() - t0, 3))
+    return times
 
 
 def main() -> None:
@@ -63,17 +98,6 @@ def main() -> None:
     queries = spark.read.parquet(os.path.join(fdir, "queries.parquet")).cache()
     meta.count()
     queries.count()
-
-    from pyspark.sql import DataFrame
-    from pyspark.sql import functions as F
-
-    def force_eval(df: DataFrame) -> int:
-        """Count rows while forcing EVERY output column to be computed —
-        a bare count() lets Catalyst prune the projected columns away."""
-        row = df.select(
-            F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64(*df.columns)).alias("h")
-        ).first()
-        return row["n"]
 
     # ---- headline: tile assignment + PIP join, steady state ----
     # the hot-cell skew list is per-snapshot state in production; computed
@@ -124,15 +148,7 @@ def main() -> None:
     names = [] if os.environ.get("BENCH_HEADLINE_ONLY") else list(E.queries())
     for name, fn in ((n, E.queries()[n]) for n in names):
         try:
-            times = []
-            for _ in range(max(1, qiters)):
-                t0 = time.time()
-                force_eval(fn(spark, sf_dir))
-                times.append(round(time.time() - t0, 3))
-            while len(times) < heavy_iters and min(times[1:] or times) > 2.0:
-                t0 = time.time()
-                force_eval(fn(spark, sf_dir))
-                times.append(round(time.time() - t0, 3))
+            times = time_query(fn, spark, sf_dir, qiters, heavy_iters)
             qcold[name] = times[0]
             qtimes[name] = min(times)
         except Exception as exc:  # pragma: no cover

@@ -14,7 +14,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -27,20 +26,12 @@ def main() -> None:
     names = [a for a in sys.argv[1:] if not a.startswith("-")]
 
     import __spark_entry__ as E
+    from bench import time_query
     from cloudtiff_spark.session import get_spark
 
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
     spark = get_spark("cloudtiff-bench-extra", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-
-    from pyspark.sql import DataFrame
-    from pyspark.sql import functions as F
-
-    def force_eval(df: DataFrame) -> int:
-        row = df.select(
-            F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64(*df.columns)).alias("h")
-        ).first()
-        return row["n"]
 
     qtimes: dict[str, float] = {}
     qcold: dict[str, float] = {}
@@ -48,15 +39,7 @@ def main() -> None:
     for name in names:
         fn = allq[name]
         spark.sparkContext.setJobDescription(f"bench_extra: {name}")
-        times = []
-        for _ in range(max(1, qiters)):
-            t0 = time.time()
-            force_eval(fn(spark, sf_dir))
-            times.append(round(time.time() - t0, 3))
-        while len(times) < heavy_iters and min(times[1:] or times) > 2.0:
-            t0 = time.time()
-            force_eval(fn(spark, sf_dir))
-            times.append(round(time.time() - t0, 3))
+        times = time_query(fn, spark, sf_dir, qiters, heavy_iters)
         qcold[name] = times[0]
         qtimes[name] = min(times)
         print(f"# {name}: passes={times}", file=sys.stderr)

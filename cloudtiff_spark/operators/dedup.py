@@ -413,6 +413,28 @@ def cosine_topk(
     )
 
 
+def _exact_cosine_rerank(cand: DataFrame, k: int) -> DataFrame:
+    """Exact float64 cosine re-rank of (query_id, id, vec, qvec) candidate
+    rows — the final stage of every approximate top-k path. Output matches
+    cosine_topk: (query_id, rank, neighbor_id), ties by neighbor id."""
+
+    @pandas_udf("double")
+    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
+        ma = np.stack(a.to_numpy()).astype(np.float64)
+        mb = np.stack(b.to_numpy()).astype(np.float64)
+        num = (ma * mb).sum(axis=1)
+        den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
+        return pd.Series(num / den)
+
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("id").asc())
+    return (
+        cand.withColumn("sim", cos(F.col("vec"), F.col("qvec")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", F.col("id").alias("neighbor_id"))
+    )
+
+
 def ivf_cosine_topk(
     emb: DataFrame,
     probe_ids: list[int],
@@ -482,22 +504,7 @@ def ivf_cosine_topk(
     )
     cand = indexed.join(F.broadcast(pl), "list_id").filter(F.col("id") != F.col("query_id"))
     cand = cand.join(F.broadcast(probes), "query_id")
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack(a.to_numpy()).astype(np.float64)
-        mb = np.stack(b.to_numpy()).astype(np.float64)
-        num = (ma * mb).sum(axis=1)
-        den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        return pd.Series(num / den)
-
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("id").asc())
-    return (
-        cand.withColumn("sim", cos(F.col("vec"), F.col("qvec")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("id").alias("neighbor_id"))
-    )
+    return _exact_cosine_rerank(cand, k)
 
 
 def auto_planes(n: int, target_bucket_rows: int = 1024) -> int:
@@ -792,22 +799,7 @@ def lsh_cosine_topk(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
     cand = cand.join(vecs, "id").join(F.broadcast(qvecs), "query_id")
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack(a.to_numpy()).astype(np.float64)
-        mb = np.stack(b.to_numpy()).astype(np.float64)
-        num = (ma * mb).sum(axis=1)
-        den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        return pd.Series(num / den)
-
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("id").asc())
-    return (
-        cand.withColumn("sim", cos(F.col("vec"), F.col("qvec")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("id").alias("neighbor_id"))
-    )
+    return _exact_cosine_rerank(cand, k)
 
 
 def quantize_embeddings(
@@ -937,22 +929,7 @@ def quantized_cosine_topk(
     keep = ranked.filter(F.col("rank") <= rerank).select("query_id", "id")
     vecs = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     qvecs = emb.filter(F.col(id_col).isin(probe_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
     joined = keep.join(vecs, "id").join(F.broadcast(qvecs), "query_id")
-
-    @pandas_udf("double")
-    def fcos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack(a.to_numpy()).astype(np.float64)
-        mb = np.stack(b.to_numpy()).astype(np.float64)
-        num = (ma * mb).sum(axis=1)
-        den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        return pd.Series(num / den)
-
-    w2 = Window.partitionBy("query_id").orderBy(F.col("fsim").desc(), F.col("id").asc())
-    return (
-        joined.withColumn("fsim", fcos(F.col("vec"), F.col("qv")))
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("id").alias("neighbor_id"))
-    )
+    return _exact_cosine_rerank(joined, k)

@@ -1412,27 +1412,36 @@ class TestSkewSalting:
 
 class TestSessionCacheIsolation:
     """The driver runs sf0.001 smoke then sf0.01 correctness in ONE
-    session; the decode/tile caches must never cross-serve between scale
+    session; the session caches must never cross-serve between scale
     dirs (verdict r4 #8 — assert the keying makes collisions impossible)."""
+
+    @staticmethod
+    def _entries(E, builder: str) -> list[tuple]:
+        return sorted(k for k in E._SESSION_CACHE if k[0] == builder)
 
     def test_caches_keyed_per_sf_dir(self, spark):
         import __spark_entry__ as E
 
-        E._RASTER_CACHE.clear()
-        E._TILES_CACHE.clear()
+        E._clear_session_caches()
         a = E._shared_decoded(spark, "/root/testdata/sf0.001")
         b = E._shared_decoded(spark, "/root/testdata/sf0.01")
         # both entries coexist under distinct keys...
-        assert len(E._RASTER_CACHE) == 2
-        keys = sorted(E._RASTER_CACHE)
-        assert keys[0][0] == keys[1][0] == spark.sparkContext.applicationId
-        assert keys[0][1] != keys[1][1]
+        keys = self._entries(E, "_shared_decoded")
+        assert len(keys) == 2
+        assert keys[0][1] == keys[1][1] == spark.sparkContext.applicationId
+        assert keys[0][2] != keys[1][2]
         # ...and repeat lookups return each dir's own cached frame
         assert E._shared_decoded(spark, "/root/testdata/sf0.001") is a
         assert E._shared_decoded(spark, "/root/testdata/sf0.01") is b
         # the frames really are different data, not one scale served twice
         na, nb = a.count(), b.count()
         assert na != nb and 0 < na < nb
+        # builders share one table: the tiles built over a dir's decoded
+        # rasters are their own entry, not a hit on the rasters' key
+        t = E._shared_tiles(spark, "/root/testdata/sf0.001")
+        assert t is not a
+        assert len(self._entries(E, "_shared_tiles")) == 1
+        assert len(self._entries(E, "_shared_decoded")) == 2
 
     def test_shingle_and_emb_caches_keyed_per_sf_dir(self, spark):
         """The r6 shingle/embedding session caches follow the same keying
@@ -1441,11 +1450,10 @@ class TestSessionCacheIsolation:
         consumer, and scale dirs never cross-serve."""
         import __spark_entry__ as E
 
-        E._SHINGLE_CACHE.clear()
-        E._EMB_CACHE.clear()
+        E._clear_session_caches()
         s2 = E._shared_shingles(spark, "/root/testdata/sf0.001", 2)
         s3 = E._shared_shingles(spark, "/root/testdata/sf0.001", 3)
-        assert s2 is not s3 and len(E._SHINGLE_CACHE) == 2
+        assert s2 is not s3 and len(self._entries(E, "_shared_shingles")) == 2
         assert E._shared_shingles(spark, "/root/testdata/sf0.001", 2) is s2
         # n really differs: a doc's 2-gram set is not its 3-gram set
         r2 = s2.orderBy("doc_id").select("shingles").first()[0]
@@ -1456,7 +1464,7 @@ class TestSessionCacheIsolation:
         # distinct per-dir entries (the fixture generator happens to emit
         # the same embedding row count at these two scales, so identity —
         # not count — is the isolation signal)
-        assert len(E._EMB_CACHE) == 2 and e1 is not e2
+        assert len(self._entries(E, "_shared_emb")) == 2 and e1 is not e2
         assert E._shared_emb(spark, "/root/testdata/sf0.001") is e1
 
     def test_trailing_slash_does_not_fork_the_cache(self, spark):
@@ -1464,8 +1472,21 @@ class TestSessionCacheIsolation:
         second entry would double the cached memory footprint."""
         import __spark_entry__ as E
 
-        E._RASTER_CACHE.clear()
-        E._TILES_CACHE.clear()
+        E._clear_session_caches()
         a = E._shared_decoded(spark, "/root/testdata/sf0.001")
         assert E._shared_decoded(spark, "/root/testdata/sf0.001/") is a
-        assert len(E._RASTER_CACHE) == 1
+        assert len(self._entries(E, "_shared_decoded")) == 1
+
+    def test_clear_unpersists(self, spark):
+        """Clearing must release the persisted partitions, not only the
+        handles: the mutation probe clears once per probe kind, and every
+        dropped-but-persisted rebuild stayed in storage for the session."""
+        import __spark_entry__ as E
+
+        E._clear_session_caches()
+        a = E._shared_decoded(spark, "/root/testdata/sf0.001")
+        a.count()
+        assert a.is_cached
+        E._clear_session_caches()
+        assert not a.is_cached
+        assert not E._SESSION_CACHE

@@ -79,12 +79,17 @@ def main() -> int:
     orig_strip = E._strip_cogs
     orig_sparse = E._sparse_cogs
 
-    def mutate(kind: str):
-        """Install a loader that perturbs exactly one row."""
+    def restore():
+        """Reinstall the unpatched loaders and drop every session cache
+        built through a patched one."""
         E._docs, E._emb, E._fixture_tables, E._t = orig_docs, orig_emb, orig_tables, orig_t
         E._strip_cogs = orig_strip
         E._sparse_cogs = orig_sparse
         E._clear_session_caches()
+
+    def mutate(kind: str):
+        """Install a loader that perturbs exactly one row."""
+        restore()
         if kind == "doc_text":
             # full replacement, not an append: sketch operators (winnowing
             # fingerprint) are insensitive to benign suffixes BY DESIGN.
@@ -274,10 +279,7 @@ def main() -> int:
             if not red:
                 failures.append((kind, name))
     # sanity: unmutated is green again
-    E._docs, E._emb, E._fixture_tables, E._t = orig_docs, orig_emb, orig_tables, orig_t
-    E._strip_cogs = orig_strip
-    E._sparse_cogs = orig_sparse
-    E._clear_session_caches()
+    restore()
     for name in ["simhash", "embed_topk", "decode_check", "pricing_summary",
                  "strip_ingest", "sparse_cog", "mask_ingest"]:
         ok = compare(spark, con, E, name)

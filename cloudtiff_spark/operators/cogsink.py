@@ -59,6 +59,7 @@ from ..tiff import (
     jpeg_tables_for,
     plan_levels,
 )
+from .render import stream_groups
 
 TILE_SCHEMA = "image_id string, level int, tile_idx long, nbytes long, data binary"
 _RAW_SCHEMA = "image_id string, row int, col int, data binary"
@@ -139,6 +140,47 @@ def _tile_array(
     t = np.zeros((tile, tile, c), dtype=dt)
     t[:vh, :vw] = arr.reshape(vh, vw, c)
     return t
+
+
+def _image_prefix(
+    levels, byte_counts, m: dict, comp: int, predictor: int, nodata, big: bool,
+    palette, quality: int,
+) -> bytes:
+    """One image's header/IFD prefix (tiff.container_prefix) from its
+    _collect_meta entry ``m``. A JPEG image (``comp`` 7) gets the shared
+    tag-347 tables rebuilt from ``quality``, the value its tiles were
+    compressed at."""
+    return container_prefix(
+        levels,
+        byte_counts,
+        m["c"],
+        m["bits"],
+        m["sample_format"],
+        m["photometric"],
+        m["epsg"],
+        m["origin_x"],
+        m["origin_y"],
+        m["scale_px"],
+        predictor=predictor,
+        nodata=nodata,
+        big=big,
+        palette=palette,
+        scale_py=m.get("scale_py"),
+        jpeg_tables=(
+            jpeg_tables_for(quality, m["c"] == 1) if comp == COMPRESSION_JPEG else None
+        ),
+    )
+
+
+def _check_payload(img: str, lv: int, ti: int, data: bytes, nb: int) -> None:
+    """Raise unless the payload is ``nb`` bytes: the prefix's offsets come
+    from the nbytes column, so a relation whose data and nbytes disagree
+    would silently shift every later offset (ADVICE r6)."""
+    if len(data) != nb:
+        raise ValueError(
+            f"{img} level {lv} tile {ti}: payload is {len(data)} "
+            f"bytes but nbytes says {nb} — offsets would corrupt"
+        )
 
 
 def blocks_from_images(images: DataFrame, tile: int = TILE) -> DataFrame:
@@ -378,12 +420,8 @@ def encode_cog_blocked(
         fed = pairs.join(cur, ["image_id", "row", "col"])
 
         def make_resample(lv: int):
-            # closure, NOT a default arg: applyInPandas dispatches on
-            # parameter COUNT (2 params = the (key, pdf) form), so a
-            # bound default would silently shift arguments
-
-            def resample_group(pdf: pd.DataFrame) -> pd.DataFrame:
-                """applyInPandas per dest tile: mosaic the shipped src
+            def resample_group(pdf: pd.DataFrame) -> dict:
+                """stream_groups per dest tile: mosaic the shipped src
                 tiles, sample with the global-index formula, emit the raw
                 padded dest tile."""
                 m = bmeta.value
@@ -435,16 +473,16 @@ def encode_cog_blocked(
                     )
                 else:
                     dst = mosaic[ys - sr0 * tile][:, xs - sc0 * tile]
-                return pd.DataFrame(
-                    [(img, rd, cd, pad_tile(dst, c, dt).tobytes())],
-                    columns=["image_id", "row", "col", "data"],
-                )
+                return {
+                    "image_id": img,
+                    "row": rd,
+                    "col": cd,
+                    "data": pad_tile(dst, c, dt).tobytes(),
+                }
 
             return resample_group
 
-        nxt = fed.groupBy("image_id", "rd", "cd").applyInPandas(
-            make_resample(lv), schema=_RAW_SCHEMA
-        )
+        nxt = stream_groups(fed, ["image_id", "rd", "cd"], make_resample(lv), _RAW_SCHEMA)
         nxt = nxt.persist()
         persisted.append(nxt)
         out = out.unionByName(nxt.mapInPandas(compress_level(lv), schema=TILE_SCHEMA))
@@ -484,10 +522,10 @@ def assemble_cogs(
     contiguous COG per image, byte-identical to encode_cog.
 
     The header/IFD prefix is built INSIDE each image's fan-in task (r7 —
-    VERDICT r6 "what's wrong" #1): the per-image applyInPandas group
+    VERDICT r6 "what's wrong" #1): the per-image stream_groups group
     already holds every tile of its image, so it derives the byte_counts,
-    validates completeness/duplicates, runs container_prefix, and emits
-    prefix + payloads in (level, tile_idx) order. The driver collects
+    validates completeness/duplicates, builds the prefix (_image_prefix),
+    and emits prefix + payloads in (level, tile_idx) order. The driver collects
     ONLY per-image aggregates (the images_meta rows it always collected,
     plus one count row per image for the missing-image check) — never the
     O(total tiles in the call) size relation the previous two-pass shape
@@ -593,45 +631,16 @@ def assemble_cogs(
             raise ValueError(
                 f"{img}: {len(pdf) - pos} tiles beyond the {len(levels)}-level plan"
             )
-        prefix = container_prefix(
-            levels,
-            byte_counts,
-            m["c"],
-            m["bits"],
-            m["sample_format"],
-            m["photometric"],
-            m["epsg"],
-            m["origin_x"],
-            m["origin_y"],
-            m["scale_px"],
-            predictor=p["predictor"],
-            nodata=p["nodata"],
-            big=p["big"],
-            palette=p["palette"],
-            scale_py=m.get("scale_py"),
-            jpeg_tables=(
-                jpeg_tables_for(p["quality"], m["c"] == 1)
-                if comp_img == COMPRESSION_JPEG
-                else None
-            ),
+        prefix = _image_prefix(
+            levels, byte_counts, m, comp_img, p["predictor"], p["nodata"],
+            p["big"], p["palette"], p["quality"],
         )
-        # the prefix's offsets come from the nbytes column; a relation
-        # whose data/nbytes disagree would shift every later offset
-        # silently (ADVICE r6) — fail loudly instead
         for lv, ti, nb, data in zip(lvs, tis, nbs, pdf["data"]):
-            if len(data) != nb:
-                raise ValueError(
-                    f"{img} level {lv} tile {ti}: payload is {len(data)} "
-                    f"bytes but nbytes says {nb} — offsets would corrupt"
-                )
+            _check_payload(img, lv, ti, data, nb)
         cog = prefix + b"".join(pdf["data"].to_numpy())
-        return pd.DataFrame(
-            [(img, cog, len(cog))], columns=["image_id", "cog", "cog_bytes"]
-        )
+        return {"image_id": img, "cog": cog, "cog_bytes": len(cog)}
 
-    return tiles.groupBy("image_id").applyInPandas(
-        concat, schema="image_id string, cog binary, cog_bytes long"
-    )
+    return stream_groups(tiles, ["image_id"], concat, "image_id string, cog binary, cog_bytes long")
 
 
 def write_cog_ranged(
@@ -669,7 +678,8 @@ def write_cog_ranged(
     tiles = tiles.filter(F.col("image_id") == img).persist()
     try:
         m = _collect_meta(images_meta, predictor, palette, compression)[img]
-        levels = plan_levels(m["w"], m["h"], tile, m.get("comp", compression))
+        comp = m.get("comp", compression)
+        levels = plan_levels(m["w"], m["h"], tile, comp)
         per: dict[int, dict[int, int]] = {}
         for r in tiles.select("level", "tile_idx", "nbytes").collect():
             d = per.setdefault(r["level"], {})
@@ -690,27 +700,8 @@ def write_cog_ranged(
                     f"level {lv}: {len(d)} tiles != {cols_g * rows_g} expected"
                 )
             byte_counts.append([d[i] for i in range(cols_g * rows_g)])
-        prefix = container_prefix(
-            levels,
-            byte_counts,
-            m["c"],
-            m["bits"],
-            m["sample_format"],
-            m["photometric"],
-            m["epsg"],
-            m["origin_x"],
-            m["origin_y"],
-            m["scale_px"],
-            predictor=predictor,
-            nodata=nodata,
-            big=big,
-            palette=palette,
-            scale_py=m.get("scale_py"),
-            jpeg_tables=(
-                jpeg_tables_for(quality, m["c"] == 1)
-                if m.get("comp", compression) == COMPRESSION_JPEG
-                else None
-            ),
+        prefix = _image_prefix(
+            levels, byte_counts, m, comp, predictor, nodata, big, palette, quality
         )
         n = 0
         with open(path, "wb") as f:
@@ -722,14 +713,7 @@ def write_cog_ranged(
                 .toLocalIterator()
             )
             for r in it:
-                if len(r["data"]) != r["nbytes"]:
-                    # prefix offsets came from the collected nbytes — a
-                    # mismatched payload would shift every later offset
-                    raise ValueError(
-                        f"{img} level {r['level']} tile {r['tile_idx']}: "
-                        f"payload is {len(r['data'])} bytes but nbytes "
-                        f"says {r['nbytes']} — offsets would corrupt"
-                    )
+                _check_payload(img, r["level"], r["tile_idx"], r["data"], r["nbytes"])
                 f.write(r["data"])
                 n += len(r["data"])
         return n

@@ -241,28 +241,15 @@ def pip_join(
 # ---------------------------------------------------------------------------
 
 
-def region_extract_picked(levels: DataFrame, queries: DataFrame) -> DataFrame:
-    """The PRE-EXPLOSION region-extract relation: one row per
-    (query, image) with the LOD-picked level, full level/render params,
-    and the covered tile-range rectangle as columns (tr0..tr1, tc0..tc1).
-    region_render_blocked consumes this directly so the spatial join runs
-    once and the pruned range travels as data instead of a re-join.
-
-    Output columns: query_id, image_id, level + level params + the query's
-    render params + tr0/tr1/tc0/tc1."""
-    q = queries.filter(F.col("kind") == "region").select(
-        "query_id", "rxmin", "rymin", "rxmax", "rymax", "mp_limit"
-    )
-    # output dims from megapixel cap + aspect (O4, util.rs:131-142)
-    rw = F.col("rxmax") - F.col("rxmin")
-    rh = F.col("rymax") - F.col("rymin")
-    out_h = F.sqrt(F.col("mp_limit") * 1e6 / (rw / rh))
-    out_w = (rw / rh) * out_h
-    q = q.withColumn("req_x", rw / out_w).withColumn("req_y", rh / out_h)
-
-    # bbox-overlap join on cell cover at Z_JOIN (same key as pip_join)
-    qc = _bbox_cells(q, F.col("rxmin"), F.col("rymin"), F.col("rxmax"), F.col("rymax"), Z_JOIN)
-    lv = levels.withColumn(
+def _overlap_join(images: DataFrame, q: DataFrame, rect: tuple[str, str, str, str]) -> DataFrame:
+    """Every (image, query) pair whose rects overlap. ``images`` carries
+    its bounds as xmin/ymin/xmax/ymax; ``rect`` names q's rect columns
+    (xmin, ymin, xmax, ymax). The equi-join key is the image-centre cell at
+    Z_JOIN against the query's broadcast Z_JOIN cover (same key as
+    pip_join), then the exact rect-overlap filter runs natively."""
+    x0, y0, x1, y1 = (F.col(c) for c in rect)
+    qc = _bbox_cells(q, x0, y0, x1, y1, Z_JOIN)
+    im = images.withColumn(
         "cell_join",
         pack_expr(
             F.lit(Z_JOIN),
@@ -284,30 +271,77 @@ def region_extract_picked(levels: DataFrame, queries: DataFrame) -> DataFrame:
         .drop("_dx", "_dy")
         .dropDuplicates(["query_id", "cell_join"])
     )
-    cand = lv.join(F.broadcast(qc), "cell_join", "inner")
-    # exact rect-overlap predicate (native)
-    cand = cand.filter(
-        (F.col("xmin") < F.col("rxmax"))
-        & (F.col("xmax") > F.col("rxmin"))
-        & (F.col("ymin") < F.col("rymax"))
-        & (F.col("ymax") > F.col("rymin"))
+    cand = im.join(F.broadcast(qc), "cell_join", "inner")
+    return cand.filter(
+        (F.col("xmin") < x1) & (F.col("xmax") > x0) & (F.col("ymin") < y1) & (F.col("ymax") > y0)
     )
+
+
+def _tile_range(u0: Column, u1: Column, v0: Column, v1: Column) -> tuple[Column, Column, Column, Column]:
+    """P6: (r0, r1, c0, c1), the tile range a normalized crop
+    [u0, u1] x [v0, v1] covers on a level row's tile grid (floor ..
+    ceil-1, clamped to the grid; level.rs:204-231)."""
+    tw, th, lw, lh = F.col("tile_w"), F.col("tile_h"), F.col("lw"), F.col("lh")
+    c0 = F.greatest(F.lit(0), F.least(F.col("cols") - 1, F.floor(u0 * lw / tw)))
+    c1 = F.greatest(F.lit(0), F.least(F.col("cols") - 1, F.ceil(u1 * lw / tw) - 1))
+    r0 = F.greatest(F.lit(0), F.least(F.col("rows") - 1, F.floor(v0 * lh / th)))
+    r1 = F.greatest(F.lit(0), F.least(F.col("rows") - 1, F.ceil(v1 * lh / th) - 1))
+    return r0, r1, c0, c1
+
+
+def _explode_tiles(df: DataFrame, r0, r1, c0, c1, outer: bool = False) -> DataFrame:
+    """One row per tile_idx of each row's tile range r0..r1 x c0..c1
+    (columns or column names) on its level grid (``cols``). ``outer``
+    keeps rows whose range is null."""
+    ex = F.explode_outer if outer else F.explode
+    return (
+        df.withColumn("_r", ex(F.sequence(r0, r1)))
+        .withColumn("_c", ex(F.sequence(c0, c1)))
+        .withColumn("tile_idx", (F.col("_r") * F.col("cols") + F.col("_c")).cast("int"))
+        .drop("_r", "_c")
+    )
+
+
+def _lod_pick(cand: DataFrame, ok: Column, by: list[str]) -> DataFrame:
+    """The LOD pick: per ``by`` group keep the greatest level where ``ok``
+    holds, else level 0."""
+    from pyspark.sql.window import Window
+
+    return (
+        cand.withColumn("_ok", F.when(ok, F.col("level")).otherwise(F.lit(0)))
+        .withColumn("_pick", F.max("_ok").over(Window.partitionBy(*by)))
+        .filter(F.col("level") == F.col("_pick"))
+        .drop("_ok", "_pick")
+    )
+
+
+def region_extract_picked(levels: DataFrame, queries: DataFrame) -> DataFrame:
+    """The PRE-EXPLOSION region-extract relation: one row per
+    (query, image) with the LOD-picked level, full level/render params,
+    and the covered tile-range rectangle as columns (tr0..tr1, tc0..tc1).
+    region_render_blocked consumes this directly so the spatial join runs
+    once and the pruned range travels as data instead of a re-join.
+
+    Output columns: query_id, image_id, level + level params + the query's
+    render params + tr0/tr1/tc0/tc1."""
+    q = queries.filter(F.col("kind") == "region").select(
+        "query_id", "rxmin", "rymin", "rxmax", "rymax", "mp_limit"
+    )
+    # output dims from megapixel cap + aspect (O4, util.rs:131-142)
+    rw = F.col("rxmax") - F.col("rxmin")
+    rh = F.col("rymax") - F.col("rymin")
+    out_h = F.sqrt(F.col("mp_limit") * 1e6 / (rw / rh))
+    out_w = (rw / rh) * out_h
+    q = q.withColumn("req_x", rw / out_w).withColumn("req_y", rh / out_h)
+
+    cand = _overlap_join(levels, q, ("rxmin", "rymin", "rxmax", "rymax"))
     # LOD: greatest level whose pixel scale beats the requirement, else 0
     ps_x = (F.col("xmax") - F.col("xmin")) / F.col("lw")
     ps_y = (F.col("ymax") - F.col("ymin")) / F.col("lh")
-    cand = cand.withColumn(
-        "_ok",
-        F.when(
-            F.greatest(ps_x, ps_y) < F.least(F.col("req_x"), F.col("req_y")), F.col("level")
-        ).otherwise(F.lit(0)),
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id", "image_id")
-    picked = (
-        cand.withColumn("_pick", F.max("_ok").over(w))
-        .filter(F.col("level") == F.col("_pick"))
-        .drop("_ok", "_pick")
+    picked = _lod_pick(
+        cand,
+        F.greatest(ps_x, ps_y) < F.least(F.col("req_x"), F.col("req_y")),
+        ["query_id", "image_id"],
     )
     # crop rect -> normalized image coords (P3 affine with the y flip),
     # clamped to [0,1] (UnitFloat, primatives.rs:48-50)
@@ -320,12 +354,7 @@ def region_extract_picked(levels: DataFrame, queries: DataFrame) -> DataFrame:
         .withColumn("cv0", clamp((F.col("ymax") - F.col("rymax")) / dy))
         .withColumn("cv1", clamp((F.col("ymax") - F.col("rymin")) / dy))
     )
-    # P6: covered tile range (floor .. ceil-1, clamped)
-    tw, th, lw, lh = F.col("tile_w"), F.col("tile_h"), F.col("lw"), F.col("lh")
-    c0 = F.greatest(F.lit(0), F.least(F.col("cols") - 1, F.floor(F.col("cu0") * lw / tw)))
-    c1 = F.greatest(F.lit(0), F.least(F.col("cols") - 1, F.ceil(F.col("cu1") * lw / tw) - 1))
-    r0 = F.greatest(F.lit(0), F.least(F.col("rows") - 1, F.floor(F.col("cv0") * lh / th)))
-    r1 = F.greatest(F.lit(0), F.least(F.col("rows") - 1, F.ceil(F.col("cv1") * lh / th) - 1))
+    r0, r1, c0, c1 = _tile_range(F.col("cu0"), F.col("cu1"), F.col("cv0"), F.col("cv1"))
     picked = (
         picked.withColumn("tr0", r0.cast("int"))
         .withColumn("tr1", r1.cast("int"))
@@ -342,12 +371,7 @@ def region_extract(levels: DataFrame, queries: DataFrame) -> DataFrame:
 
     Output: (query_id, image_id, level, tile_idx) — the exploded form of
     region_extract_picked's (tr0..tr1) x (tc0..tc1) rectangle."""
-    out = (
-        region_extract_picked(levels, queries)
-        .withColumn("_r", F.explode(F.sequence("tr0", "tr1")))
-        .withColumn("_c", F.explode(F.sequence("tc0", "tc1")))
-        .withColumn("tile_idx", (F.col("_r") * F.col("cols") + F.col("_c")).cast("int"))
-    )
+    out = _explode_tiles(region_extract_picked(levels, queries), "tr0", "tr1", "tc0", "tc1")
     return out.select("query_id", "image_id", "level", "tile_idx")
 
 
@@ -453,32 +477,5 @@ def wmts_lookup(meta: DataFrame, queries: DataFrame) -> DataFrame:
             F.degrees(F.atan(_sinh(float(np.pi) * (1.0 - 2.0 * (F.col("qy") + 1) / n)))),
         )
     )
-    # small query side -> broadcast nested-loop-free: join via Z_JOIN cells
-    qc = _bbox_cells(q, F.col("t_xmin"), F.col("t_ymin"), F.col("t_xmax"), F.col("t_ymax"), Z_JOIN)
-    m = meta.withColumn(
-        "cell_join",
-        pack_expr(
-            F.lit(Z_JOIN),
-            *cell_xy_expr(
-                (F.col("xmin") + F.col("xmax")) / 2, (F.col("ymin") + F.col("ymax")) / 2, F.lit(Z_JOIN)
-            ),
-        ),
-    )
-    qc = (
-        qc.withColumn("_dx", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-        .withColumn("_dy", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-        .withColumn(
-            "cell_join",
-            F.col("cell_join") + F.shiftleft(F.col("_dx").cast("long"), 29) + F.col("_dy"),
-        )
-        .drop("_dx", "_dy")
-        .dropDuplicates(["query_id", "cell_join"])
-    )
-    cand = m.join(F.broadcast(qc), "cell_join", "inner")
-    hit = cand.filter(
-        (F.col("xmin") < F.col("t_xmax"))
-        & (F.col("xmax") > F.col("t_xmin"))
-        & (F.col("ymin") < F.col("t_ymax"))
-        & (F.col("ymax") > F.col("t_ymin"))
-    )
+    hit = _overlap_join(meta, q, ("t_xmin", "t_ymin", "t_xmax", "t_ymax"))
     return hit.select("query_id", "image_id")

@@ -266,3 +266,90 @@ class TestProjectionProperties:
         # maps to the same point)
         x2, y2 = P.transform_coords(lon2, lat2, 4326, epsg)
         assert abs(x2[0] - x[0]) < 1e-5 and abs(y2[0] - y[0]) < 1e-5
+
+
+class TestStreamRuns:
+    """stream_groups' mapInPandas body, driven without Spark: sorted key
+    runs cut into arbitrary Arrow-batch-like frames must give one row per
+    group, in order, exactly like a pandas groupby."""
+
+    NAMES = ["k1", "k2", "n", "s", "raster"]
+
+    @staticmethod
+    def _fn(g):
+        return {
+            "k1": g["k1"].iloc[0],
+            "k2": g["k2"].iloc[0],
+            "n": len(g),
+            "s": int(g["v"].sum()),
+            "raster": bytes(g["v"].to_numpy().astype(np.uint8)),
+        }
+
+    @given(
+        runs=st.lists(
+            st.tuples(
+                st.one_of(st.none(), st.sampled_from("abcde")),
+                st.one_of(st.none(), st.integers(0, 3)),
+                st.integers(1, 6),
+            ),
+            max_size=25,
+        ),
+        cuts=st.lists(st.integers(0, 150), max_size=12),
+        empties=st.lists(st.integers(0, 13), max_size=3),
+    )
+    @settings(max_examples=200, deadline=None)
+    def test_matches_pandas_groupby(self, runs, cuts, empties):
+        import pandas as pd
+
+        from cloudtiff_spark.operators.render import stream_runs
+
+        seen, keys = set(), []
+        for k1, k2, size in runs:  # distinct keys: one contiguous run each
+            if (k1, k2) not in seen:
+                seen.add((k1, k2))
+                keys += [(k1, k2)] * size
+        df = pd.DataFrame(
+            {
+                "k1": pd.Series([k[0] for k in keys], dtype=object),
+                "k2": pd.Series([k[1] for k in keys], dtype="float64"),
+                "v": np.arange(len(keys), dtype=np.int64),
+            }
+        )
+        bounds = [0, *sorted(min(c, len(df)) for c in cuts), len(df)]
+        batches = [df.iloc[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+        for pos in empties:  # empty batches anywhere in the stream
+            batches.insert(min(pos, len(batches)), df.iloc[:0])
+        frames = list(stream_runs(iter(batches), ["k1", "k2"], self._fn, self.NAMES))
+        got = (
+            pd.concat(frames, ignore_index=True)
+            if frames
+            else pd.DataFrame(columns=self.NAMES)
+        )
+        want = pd.DataFrame(
+            [self._fn(g) for _, g in df.groupby(["k1", "k2"], dropna=False, sort=False)],
+            columns=self.NAMES,
+        )
+        assert len(got) == len(seen)
+        pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+    def test_flush_bounds_each_frame(self):
+        """Rows whose payloads pass STREAM_FLUSH_BYTES split one input
+        batch into several frames, none above the cap plus one row."""
+        import pandas as pd
+
+        from cloudtiff_spark.operators import render
+
+        cap = render.STREAM_FLUSH_BYTES
+        payload = bytes(cap // 2 + 1)  # one buffer shared by every row
+
+        def fn(g):
+            return {"k": g["k"].iloc[0], "raster": payload}
+
+        batch = pd.DataFrame({"k": ["a", "b", "c", "d"]})
+        frames = list(render.stream_runs(iter([batch]), ["k"], fn, ["k", "raster"]))
+        # a, b, c complete inside the batch; d is the carried last run
+        in_batch = frames[:-1]
+        assert len(in_batch) > 1
+        assert [list(f["k"]) for f in frames] == [["a", "b"], ["c"], ["d"]]
+        for f in frames:
+            assert sum(len(r) for r in f["raster"]) <= cap + len(payload)

@@ -1490,3 +1490,58 @@ class TestSessionCacheIsolation:
         E._clear_session_caches()
         assert not a.is_cached
         assert not E._SESSION_CACHE
+
+
+class TestStreamGroups:
+    def test_equals_apply_in_pandas(self, spark):
+        """stream_groups == groupBy().applyInPandas row for row, with
+        groups split across 3-row Arrow batches, null keys, and shuffle
+        partitions left empty (AQE coalescing off so they reach the UDF)."""
+        from cloudtiff_spark.operators.render import stream_groups
+
+        rows = [
+            (k1, k2, i)
+            for i, (k1, k2) in enumerate(
+                [("a", 1)] * 7 + [("a", None)] * 2 + [(None, 1)] * 4
+                + [("b", 2)] + [(None, None)] * 5 + [("c", 3)] * 3
+            )
+        ]
+        df = spark.createDataFrame(rows, "k1 string, k2 int, v long")
+        schema = "k1 string, k2 int, n long, s long, vs binary"
+
+        def fn(g):
+            v = g["v"].to_numpy()
+            return {
+                "k1": g["k1"].iloc[0],
+                "k2": g["k2"].iloc[0],
+                "n": len(g),
+                "s": int(v.sum()),
+                "vs": np.sort(v).astype(np.int64).tobytes(),
+            }
+
+        confs = {
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "3",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        }
+        saved = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            sizes = (
+                df.repartition("k1", "k2").sortWithinPartitions("k1", "k2")
+                .rdd.glom().map(len).collect()
+            )
+            assert 0 in sizes and max(sizes) > 3, sizes
+            got = stream_groups(df, ["k1", "k2"], fn, schema).collect()
+            want = df.groupBy("k1", "k2").applyInPandas(
+                lambda g: pd.DataFrame([fn(g)]), schema
+            ).collect()
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        key = lambda r: (r["k1"] or "", -1 if r["k2"] is None else r["k2"])  # noqa: E731
+        assert len(got) == 6
+        assert sorted(got, key=key) == sorted(want, key=key)

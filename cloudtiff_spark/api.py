@@ -54,23 +54,11 @@ class CloudTiffSpark:
     def open_s3(self, bucket: str, key: str, initial_bytes: int = 65536, **client_kw) -> dict:
         """SigV4 ranged analyze (examples/s3.rs); client_kw feeds the
         stdlib SigV4 client (endpoint, access_key, secret_key, region).
-        Grow-and-reparse on truncation like the other header-only paths
-        (io/http.rs does a fresh ranged GET per retry, same here)."""
+        The same grow-and-reparse open as the other header-only paths."""
         from .s3 import S3RangeFetcher
-        from .tiff import cog_info, is_truncation
+        from .sources import header_info_s3
 
-        client = S3RangeFetcher(bucket=bucket, **client_kw)
-        n = initial_bytes
-        while True:
-            data = client.fetch(key, 0, n)
-            try:
-                return cog_info(data)
-            except Exception as exc:
-                if not is_truncation(exc):
-                    raise  # typed semantic reject (or unrelated bug)
-                if len(data) < n:  # short body: already the whole object
-                    raise
-                n *= 2
+        return header_info_s3(S3RangeFetcher(bucket=bucket, **client_kw), key, initial_bytes)[0]
 
     def open_bytes(self, data: bytes) -> dict:
         """In-memory analyze (CloudTiff::open over a byte reader)."""

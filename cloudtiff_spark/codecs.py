@@ -17,9 +17,9 @@ fixture `images.fmt` column (FIXTURES.md T1):
   spec in cloudtiff_spark.jpeg (no image library exists in this
   container). Encoded at quality 98: round-trip PSNR ~43.7 dB on the
   noisiest fixture content, above the PSNR>=40 dB lossy gate from
-  BASELINE.json. The decoder also accepts the round-1/2 ``FJ01``
-  deterministic stand-in bytes (magic-dispatched) so pre-existing payloads
-  still decode.
+  BASELINE.json.
+
+decode_image shape-checks every format against the row's (w, h).
 
 Also: TIFF horizontal predictor (compression.rs:298-330) and PSNR.
 """
@@ -341,27 +341,6 @@ def decode_png(data: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic fake JPEG (lossy stand-in; see module docstring).
-# ---------------------------------------------------------------------------
-
-_FJ_MAGIC = b"FJ01"
-
-
-def encode_fakejpeg(arr: np.ndarray) -> bytes:
-    h, w, c = arr.shape
-    q = (arr >> 2).astype(np.uint8)  # 6-bit quantization => PSNR ~46 dB
-    return _FJ_MAGIC + struct.pack(">III", w, h, c) + zlib.compress(q.tobytes(), 6)
-
-
-def decode_fakejpeg(data: bytes) -> np.ndarray:
-    if data[:4] != _FJ_MAGIC:
-        raise ValueError("not a fake-jpeg")
-    w, h, c = struct.unpack_from(">III", data, 4)
-    q = np.frombuffer(zlib.decompress(data[16:]), dtype=np.uint8).reshape(h, w, c)
-    return ((q.astype(np.int16) << 2) + 2).clip(0, 255).astype(np.uint8)
-
-
-# ---------------------------------------------------------------------------
 # Unified per-fmt entry points used by the tiling/decode UDFs.
 # ---------------------------------------------------------------------------
 
@@ -394,17 +373,17 @@ def decode_image(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
     elif fmt == "lzw_raw":
         arr = np.frombuffer(lzw_decode(data), dtype=np.uint8)
     elif fmt == "png":
-        return decode_png(data)
+        arr = decode_png(data)
     elif fmt == "jpeg":
-        if data[:4] == _FJ_MAGIC:  # round-1/2 stand-in payloads
-            return decode_fakejpeg(data)
         from .jpeg import decode_jpeg
 
-        return decode_jpeg(data)
+        arr = decode_jpeg(data)
     else:
         raise ValueError(f"CompressionNotSupported: {fmt}")
-    if arr.size != w * h * 3:  # raster/mod.rs:73-86 buffer-size invariant
-        raise ValueError(f"buffer size {arr.size} != {w}x{h}x3")
+    # raster/mod.rs:73-86 buffer-size invariant; png/jpeg carry their own
+    # dims, which must be the row's too (not just the same pixel count)
+    if arr.shape not in ((w * h * 3,), (h, w, 3)):
+        raise ValueError(f"buffer size {arr.size} != {w}x{h}x3 (decoded {arr.shape})")
     return arr.reshape(h, w, 3)
 
 

@@ -39,8 +39,8 @@ FIXTURE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__fi
 #: bump when fixture BYTES change semantics (e.g. a codec swap) — stale
 #: cached fixture dirs (which persist across driver rounds) self-invalidate
 #: instead of silently serving old payloads next to new expected tables.
-#: v3: fmt='jpeg' payloads switched from the FJ01 stand-in to real baseline
-#: JFIF (cloudtiff_spark.jpeg) at quality 98.
+#: v3: fmt='jpeg' payloads switched from the round-1/2 lossy stand-in to
+#: real baseline JFIF (cloudtiff_spark.jpeg) at quality 98.
 FIXTURE_VERSION = 3
 
 #: images, queries per scale (FIXTURES.md: smoke/correctness/bench)

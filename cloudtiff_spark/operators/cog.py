@@ -66,6 +66,36 @@ _COMP_NAME = {
 }
 
 
+def level_fields(info: dict) -> list[dict]:
+    """The S2 analyze row: one dict per pyramid level of a cog_info result,
+    keyed by output column name (parse_cogs and sources._analyze each pick
+    their schema's columns)."""
+    proj = info["projection"] or {}
+    geo = {
+        "epsg": int(proj.get("epsg", 0)),
+        "origin_x": float(proj.get("origin_x", 0.0)),
+        "origin_y": float(proj.get("origin_y", 0.0)),
+        "scale_px": float(proj.get("scale_px", 0.0)),
+    }
+    return [
+        {
+            "level": lv_i,
+            "lw": lev["width"],
+            "lh": lev["height"],
+            "tile_w": lev["tile_w"],
+            "tile_h": lev["tile_h"],
+            "n_tiles": len(lev["offsets"]),
+            "compression": _COMP_NAME.get(lev["compression"], "?"),
+            "spp": int(lev.get("samples_per_pixel", 3)),
+            "bits": int(lev.get("bits_per_sample", [8])[0]),
+            "photometric": int(lev.get("photometric", 1)),
+            "sample_format": int(lev.get("sample_format", 1)),
+            **geo,
+        }
+        for lv_i, lev in enumerate(info["levels"])
+    ]
+
+
 def write_cogs(images_with_geo: DataFrame, **encode_kw) -> DataFrame:
     """images (+ epsg/origin_x/origin_y/scale_px columns) -> one COG per row.
     LZW-sourced images get LZW tiles, everything else Deflate.
@@ -103,30 +133,14 @@ def parse_cogs(cogs: DataFrame) -> DataFrame:
     """COG binary -> per-level metadata rows (S1 header/IFD walk + S2
     analyze + P1/P2 geokey->projection)."""
 
+    cols = [f.name for f in PARSED_SCHEMA.fields]
+
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for image_id, cog_bytes in zip(pdf["image_id"].to_numpy(), pdf["cog"].to_numpy()):
-                info = cog_info(cog_bytes)
-                proj = info["projection"] or {}
-                for lv_i, lev in enumerate(info["levels"]):
-                    rows.append(
-                        (
-                            image_id,
-                            lv_i,
-                            lev["width"],
-                            lev["height"],
-                            lev["tile_w"],
-                            lev["tile_h"],
-                            len(lev["offsets"]),
-                            _COMP_NAME.get(lev["compression"], "?"),
-                            int(proj.get("epsg", 0)),
-                            float(proj.get("origin_x", 0.0)),
-                            float(proj.get("origin_y", 0.0)),
-                            float(proj.get("scale_px", 0.0)),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in PARSED_SCHEMA.fields])
+                rows += [{"image_id": image_id, **lev} for lev in level_fields(cog_info(cog_bytes))]
+            yield pd.DataFrame(rows, columns=cols)
 
     return cogs.mapInPandas(gen, schema=PARSED_SCHEMA)
 
@@ -154,24 +168,15 @@ def decode_float_stats(spark, path: str, pattern: str = "*.tif"):
     Value-checked against expected_mb_stats.parquet, which is computed
     from the SOURCE arrays at generation time: equality proves the whole
     f32 chain (tag parse -> tile decode -> assemble) is lossless."""
-    from pyspark.sql import functions as F
-
+    from ..sources import read_cog_directory
     from ..tiff import decode_tile
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"([^/]+)\.[^./]+$", 1).alias("image_id"),
-            "content",
-        )
-    )
+    files = read_cog_directory(spark, path, pattern).select("image_id", "cog")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for image_id, data in zip(pdf["image_id"], pdf["content"]):
+            for image_id, data in zip(pdf["image_id"], pdf["cog"]):
                 data = bytes(data)
                 info = cog_info(data)
                 lev = info["levels"][0]

@@ -26,15 +26,19 @@ from pyspark.sql.types import (
 from ..codecs import decode_image
 
 
+def _phash(pixels) -> np.int64:
+    """FIXTURES.md T1: int64 of the low 8 bytes of sha256(pixels)."""
+    digest = hashlib.sha256(pixels).digest()
+    return np.int64(np.uint64(int.from_bytes(digest[-8:], "big")))
+
+
 @pandas_udf(LongType())
 def phash_udf(data: pd.Series, fmt: pd.Series, w: pd.Series, h: pd.Series) -> pd.Series:
     out = np.zeros(len(data), dtype=np.int64)
     dv, fv = data.to_numpy(), fmt.to_numpy()
     wv, hv = w.to_numpy(), h.to_numpy()
     for i in range(len(out)):
-        arr = decode_image(dv[i], fv[i], int(wv[i]), int(hv[i]))
-        digest = hashlib.sha256(arr.tobytes()).digest()
-        out[i] = np.int64(np.uint64(int.from_bytes(digest[-8:], "big")))
+        out[i] = _phash(decode_image(dv[i], fv[i], int(wv[i]), int(hv[i])).tobytes())
     return pd.Series(out)
 
 
@@ -48,8 +52,7 @@ def raster_phash_udf(raster: pd.Series) -> pd.Series:
     for i in range(len(out)):
         if rv[i] is None:  # cache-build decode failure: no pixels to hash
             continue
-        digest = hashlib.sha256(rv[i]).digest()
-        out[i] = np.int64(np.uint64(int.from_bytes(digest[-8:], "big")))
+        out[i] = _phash(rv[i])
     return pd.Series(out)
 
 
@@ -123,7 +126,7 @@ def decode_status(images: DataFrame) -> DataFrame:
             cols = (pdf[c].to_numpy() for c in ("image_id", "fmt", "w", "h", "phash"))
             for i, (image_id, fmt, w, h, ph) in enumerate(zip(*cols)):
                 if rasters is not None and rasters[i] is not None:
-                    digest = hashlib.sha256(rasters[i]).digest()
+                    got = _phash(rasters[i])
                 elif data_c is not None:
                     try:
                         arr = decode_image(data_c[i], fmt, int(w), int(h))
@@ -132,13 +135,12 @@ def decode_status(images: DataFrame) -> DataFrame:
                         oks.append(False)
                         kinds.append("decode_error")
                         continue
-                    digest = hashlib.sha256(arr.tobytes()).digest()
+                    got = _phash(arr.tobytes())
                 else:  # cache-recorded decode failure, no bytes to retry
                     ids.append(image_id)
                     oks.append(False)
                     kinds.append("decode_error")
                     continue
-                got = np.int64(np.uint64(int.from_bytes(digest[-8:], "big")))
                 ok = bool(got == np.int64(ph))
                 ids.append(image_id)
                 oks.append(ok)

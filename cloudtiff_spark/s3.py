@@ -5,8 +5,9 @@ GetObject with a Range header per read. This module provides the same
 capability without an SDK (none exists in this container): a minimal
 Signature-Version-4 signer (public spec:
 https://docs.aws.amazon.com/IAM/latest/UserGuide/create-signed-request.html)
-plus a ranged GET, injectable into the header-analyze path
-(sources.header_info_s3 / analyze_cog_s3).
+plus ranged_get, the one Range GET that both this client and the HTTP
+header-analyze path (sources.header_info_http) issue; the client is
+injectable into sources.header_info_s3 / analyze_cog_s3.
 
 The signer is pinned against the AWS-documented SigV4 test vector in
 tests/test_sources.py, and the ranged fetch is exercised end-to-end against
@@ -56,6 +57,17 @@ def timed_read(resp, url: str) -> bytes:
         return resp.read()
     except TimeoutError as exc:
         raise RangeFetchTimeout(url, FETCH_TIMEOUT_S) from exc
+
+
+def ranged_get(url: str, headers: dict[str, str], name: str) -> bytes:
+    """One Range GET under the module deadline. A full-body 200 means the
+    server ignored Range; at COG scale that silently downloads everything,
+    so fail loudly instead."""
+    req = urllib.request.Request(url, headers=headers)
+    with timed_urlopen(req, url) as resp:
+        if resp.status == 200:
+            raise OSError(f"server ignored Range for {name} (status 200)")
+        return timed_read(resp, url)
 
 
 def _hmac(key: bytes, msg: str) -> bytes:
@@ -160,11 +172,4 @@ class S3RangeFetcher:
             self.secret_key,
             self.region,
         )
-        req = urllib.request.Request(self.endpoint + path, headers=headers)
-        with timed_urlopen(req, self.endpoint + path) as resp:
-            if resp.status == 200:
-                # full-body 200 = server ignored Range; at COG scale that
-                # silently downloads everything — fail loudly (same contract
-                # as header_info_http)
-                raise OSError(f"server ignored Range for s3://{self.bucket}/{key}")
-            return timed_read(resp, self.endpoint + path)
+        return ranged_get(self.endpoint + path, headers, f"s3://{self.bucket}/{key}")

@@ -3,23 +3,22 @@ Hadoop-compatible FS — file://, s3a://, ...) with Spark's binaryFile source
 and run the same S1/S2 analyze stage as the inline-bytes path.
 
 This is the Spark analog of the reference's file/HTTP/S3 readers
-(src/io/mod.rs, io/http.rs, io/s3.rs): the ranged-read machinery lives in
-the data source (S3A already does ranged reads and footer-first fetches);
-the engine only sees a binary column.
+(src/io/mod.rs, io/http.rs, io/s3.rs): open_ranged is the one incremental
+header-only open over a ``fetch(start, length)`` reader, each transport
+supplies only its fetch, and _analyze is the one per-level analyze stage.
 """
 
 from __future__ import annotations
-
-import os
-import struct
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
 def read_cog_directory(spark: SparkSession, path: str, pattern: str = "*.tif") -> DataFrame:
-    """-> (image_id = file stem, cog = raw bytes, cog_bytes, mod_time)."""
-    df = (
+    """-> (image_id = file stem, cog = raw bytes, cog_bytes, mod_time, path).
+    Spark prunes the scan to the projected columns: without ``cog`` the
+    files are never opened."""
+    return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", pattern)
         .load(path)
@@ -28,9 +27,9 @@ def read_cog_directory(spark: SparkSession, path: str, pattern: str = "*.tif") -
             F.col("content").alias("cog"),
             F.col("length").alias("cog_bytes"),
             F.col("modificationTime").alias("mod_time"),
+            "path",
         )
     )
-    return df
 
 
 def analyze_cog_directory(spark: SparkSession, path: str, pattern: str = "*.tif") -> DataFrame:
@@ -58,27 +57,21 @@ def _local_path(spark_path: str) -> str:
     )
 
 
-def header_info_http(url: str, initial_bytes: int = 4096) -> tuple[dict, int]:
-    """Header-only COG analyze over HTTP using Range requests — the S6
-    analog of the reference's reqwest range reader (io/http.rs:100-140):
-    GET bytes=0..n, parse, and on truncation double the range and re-fetch
-    (each retry re-reads the prefix; io/http.rs does the same fresh ranged
-    GET per request). Raises if the server ignores Range (a full-body 200
-    would silently download everything — fail loudly instead)."""
-    import urllib.request
+def open_ranged(fetch, initial_bytes: int = 4096) -> tuple[dict, int]:
+    """The one header-only COG open — the reference's incremental async open
+    (cog/mod.rs:272-320) over its positional ReadRange trait (io/mod.rs:
+    28-74). ``fetch(start, length) -> bytes`` is the transport; a past-EOF
+    end comes back short, as file reads and S3/HTTP Range GETs do.
+
+    Fetch bytes [0, n), run the full parse, and on truncation double n and
+    re-fetch (each retry re-reads the prefix, as io/http.rs issues a fresh
+    ranged GET per request). Returns (cog_info dict, bytes_read). Never
+    reads tile data unless the IFD chain actually extends that far."""
+    from .tiff import cog_info, is_truncation
 
     n = initial_bytes
-    data = b""
     while True:
-        from .s3 import timed_read, timed_urlopen
-
-        req = urllib.request.Request(url, headers={"Range": f"bytes=0-{n - 1}"})
-        with timed_urlopen(req, url) as resp:
-            if resp.status == 200:
-                raise OSError(f"server ignored Range for {url!r} (status 200)")
-            data = timed_read(resp, url)
-        from .tiff import cog_info, is_truncation
-
+        data = fetch(0, n)
         try:
             return cog_info(data), len(data)
         except Exception as exc:
@@ -86,39 +79,78 @@ def header_info_http(url: str, initial_bytes: int = 4096) -> tuple[dict, int]:
             # (CloudTiffError), so definitive errors can't be retried
             if not is_truncation(exc):
                 raise
-            if len(data) < n:  # short body: we already have the whole file
+            if len(data) < n:  # short read: we already have the whole file
                 raise
             n *= 2
 
 
 def header_info(path: str, initial_bytes: int = 4096) -> tuple[dict, int]:
-    """Header-only COG analyze of a local file: read the first
-    ``initial_bytes``, run the full parse, and on truncation grow the prefix
-    geometrically and retry — the reference's incremental async open
-    (cog/mod.rs:272-320: parse from the first fetch, re-fetch on EOF).
-    Returns (cog_info dict, bytes_read). Never reads tile data unless the
-    IFD chain actually extends that far."""
-    from .tiff import cog_info, is_truncation
-
-    size = os.path.getsize(path)
-    n = min(initial_bytes, size)
+    """Header-only COG analyze of a local file (open_ranged over seek+read)."""
     with open(path, "rb") as f:
-        data = f.read(n)
-        while True:
-            try:
-                return cog_info(data), len(data)
-            except Exception as exc:
-                if not is_truncation(exc):
-                    raise  # typed semantic reject (or unrelated bug)
-                # truncated: an IFD entry / external value / next-IFD offset
-                # fell beyond the prefix -> grow and re-parse
-                if len(data) >= size:
-                    raise
-                grow = min(size - len(data), len(data))  # double, clamped
-                data += f.read(grow)
+
+        def fetch(start: int, length: int) -> bytes:
+            f.seek(start)
+            return f.read(length)
+
+        return open_ranged(fetch, initial_bytes)
+
+
+def header_info_http(url: str, initial_bytes: int = 4096) -> tuple[dict, int]:
+    """Header-only COG analyze over HTTP Range requests — the S6 analog of
+    the reference's reqwest range reader (io/http.rs:100-140). Raises if
+    the server ignores Range (s3.ranged_get)."""
+    from .s3 import ranged_get
+
+    def fetch(start: int, length: int) -> bytes:
+        return ranged_get(url, {"Range": f"bytes={start}-{start + length - 1}"}, repr(url))
+
+    return open_ranged(fetch, initial_bytes)
+
+
+def header_info_s3(fetcher, key: str, initial_bytes: int = 4096) -> tuple[dict, int]:
+    """Header-only COG analyze through a ranged S3 GetObject client (S7,
+    io/s3.rs:29-92 parity). ``fetcher`` is any object with
+    ``fetch(key, start, length) -> bytes`` (cloudtiff_spark.s3.
+    S3RangeFetcher for real/compatible S3; tests inject one pointed at a
+    local SigV4-checking 206 server)."""
+    return open_ranged(lambda start, length: fetcher.fetch(key, start, length), initial_bytes)
 
 
 HEADER_SCHEMA = "image_id string, level int, lw int, lh int, tile_w int, tile_h int, n_tiles int, compression string, spp int, bits int, photometric int, sample_format int, epsg int, origin_x double, origin_y double, scale_px double, bytes_read long, file_bytes long"
+_HEADER_COLS = [c.split()[0] for c in HEADER_SCHEMA.split(", ")]
+
+
+def _analyze(srcs: DataFrame, opener) -> DataFrame:
+    """The one S2 analyze stage over (image_id, src, file_bytes) rows:
+    ``opener()`` runs once per task and returns ``open_one(src) ->
+    (info, bytes_read)``; every level becomes one HEADER_SCHEMA row."""
+    import pandas as pd
+
+    from .operators.cog import level_fields
+
+    def gen(batches):
+        open_one = opener()
+        for pdf in batches:
+            rows = []
+            cols = (pdf[c].to_numpy() for c in ("image_id", "src", "file_bytes"))
+            for image_id, src, file_bytes in zip(*cols):
+                info, nread = open_one(src)
+                rows += [
+                    {"image_id": image_id, **lev, "bytes_read": nread, "file_bytes": file_bytes}
+                    for lev in level_fields(info)
+                ]
+            yield pd.DataFrame(rows, columns=_HEADER_COLS)
+
+    return srcs.mapInPandas(gen, schema=HEADER_SCHEMA)
+
+
+def _remote_srcs(spark: SparkSession, srcs: list[str]) -> DataFrame:
+    """(image_id = object stem, src, file_bytes = -1: size unknown without
+    a HEAD request), spread over the cluster."""
+    return spark.createDataFrame(
+        [(s.rsplit("/", 1)[-1].rsplit(".", 1)[0], s, -1) for s in srcs],
+        "image_id string, src string, file_bytes long",
+    ).repartition(min(len(srcs), spark.sparkContext.defaultParallelism))
 
 
 def analyze_cog_headers(
@@ -131,85 +163,13 @@ def analyze_cog_headers(
     parse runs in a mapInPandas stage over the path list, so a directory of
     N-gigabyte COGs costs megabytes of IO (vs read_cog_directory, which
     ships every byte). bytes_read/file_bytes columns report the ratio."""
-    import pandas as pd
-
-    from .operators.cog import _COMP_NAME
-
-    paths = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"([^/]+)\.[^./]+$", 1).alias("image_id"),
-            "path",
-            F.col("length").alias("file_bytes"),
-        )
+    srcs = read_cog_directory(spark, path, pattern).select(
+        "image_id", F.col("path").alias("src"), F.col("cog_bytes").alias("file_bytes")
     )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                info, nread = header_info(_local_path(r["path"]), initial_bytes)
-                proj = info["projection"] or {}
-                for lv_i, lev in enumerate(info["levels"]):
-                    rows.append(
-                        (
-                            r["image_id"],
-                            lv_i,
-                            lev["width"],
-                            lev["height"],
-                            lev["tile_w"],
-                            lev["tile_h"],
-                            len(lev["offsets"]),
-                            _COMP_NAME.get(lev["compression"], "?"),
-                            int(lev.get("samples_per_pixel", 3)),
-                            int(lev.get("bits_per_sample", [8])[0]),
-                            int(lev.get("photometric", 1)),
-                            int(lev.get("sample_format", 1)),
-                            int(proj.get("epsg", 0)),
-                            float(proj.get("origin_x", 0.0)),
-                            float(proj.get("origin_y", 0.0)),
-                            float(proj.get("scale_px", 0.0)),
-                            nread,
-                            r["file_bytes"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "level", "lw", "lh", "tile_w", "tile_h", "n_tiles",
-                    "compression", "spp", "bits", "photometric", "sample_format",
-                    "epsg", "origin_x", "origin_y", "scale_px", "bytes_read", "file_bytes",
-                ],
-            )
-
-    return paths.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, schema=HEADER_SCHEMA
+    return _analyze(
+        srcs.repartition(spark.sparkContext.defaultParallelism),
+        lambda: lambda p: header_info(_local_path(p), initial_bytes),
     )
-
-
-def header_info_s3(fetcher, key: str, initial_bytes: int = 4096) -> tuple[dict, int]:
-    """Header-only COG analyze through a ranged S3 GetObject client (S7,
-    io/s3.rs:29-92 parity): fetch bytes [0, n), parse, and on truncation
-    double the range and re-fetch — identical grow-retry contract to
-    header_info_http. ``fetcher`` is any object with
-    ``fetch(key, start, length) -> bytes`` (cloudtiff_spark.s3.
-    S3RangeFetcher for real/compatible S3; tests inject one pointed at a
-    local SigV4-checking 206 server)."""
-    from .tiff import cog_info, is_truncation
-
-    n = initial_bytes
-    while True:
-        data = fetcher.fetch(key, 0, n)
-        try:
-            return cog_info(data), len(data)
-        except Exception as exc:
-            if not is_truncation(exc):
-                raise  # typed semantic reject (or unrelated bug) — definitive
-            if len(data) < n:  # short body: whole object already fetched
-                raise
-            n *= 2
 
 
 def analyze_cog_s3(
@@ -226,57 +186,14 @@ def analyze_cog_s3(
     list is parallelized; every task builds its own S3RangeFetcher from the
     (serialized) credentials and issues only ranged GetObject calls —
     same output schema as analyze_cog_headers."""
-    import pandas as pd
 
-    from .operators.cog import _COMP_NAME
-
-    paths = spark.createDataFrame(
-        [(k.rsplit("/", 1)[-1].rsplit(".", 1)[0], k) for k in keys],
-        "image_id string, key string",
-    ).repartition(min(len(keys), spark.sparkContext.defaultParallelism))
-
-    def gen(batches):
+    def opener():
         from .s3 import S3RangeFetcher
 
         fetcher = S3RangeFetcher(endpoint, bucket, access_key, secret_key, region)
-        for pdf in batches:
-            rows = []
-            for image_id, key in zip(pdf["image_id"].to_numpy(), pdf["key"].to_numpy()):
-                info, nread = header_info_s3(fetcher, key, initial_bytes)
-                proj = info["projection"] or {}
-                for lv_i, lev in enumerate(info["levels"]):
-                    rows.append(
-                        (
-                            image_id,
-                            lv_i,
-                            lev["width"],
-                            lev["height"],
-                            lev["tile_w"],
-                            lev["tile_h"],
-                            len(lev["offsets"]),
-                            _COMP_NAME.get(lev["compression"], "?"),
-                            int(lev.get("samples_per_pixel", 3)),
-                            int(lev.get("bits_per_sample", [8])[0]),
-                            int(lev.get("photometric", 1)),
-                            int(lev.get("sample_format", 1)),
-                            int(proj.get("epsg", 0)),
-                            float(proj.get("origin_x", 0.0)),
-                            float(proj.get("origin_y", 0.0)),
-                            float(proj.get("scale_px", 0.0)),
-                            nread,
-                            -1,  # object size unknown without HeadObject
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "level", "lw", "lh", "tile_w", "tile_h", "n_tiles",
-                    "compression", "spp", "bits", "photometric", "sample_format",
-                    "epsg", "origin_x", "origin_y", "scale_px", "bytes_read", "file_bytes",
-                ],
-            )
+        return lambda key: header_info_s3(fetcher, key, initial_bytes)
 
-    return paths.mapInPandas(gen, schema=HEADER_SCHEMA)
+    return _analyze(_remote_srcs(spark, keys), opener)
 
 
 def analyze_cog_urls(
@@ -285,56 +202,10 @@ def analyze_cog_urls(
     """Header-only analyze over a list of HTTP(S) COG URLs: the URL list is
     parallelized across the cluster and every task issues only ranged GETs
     (header_info_http). The S6/S7 shape — for S3, point this at presigned
-    URLs or swap the fetcher for a ranged GetObject; the engine-side plan
-    is identical."""
-    import pandas as pd
-
-    from .operators.cog import _COMP_NAME
-
-    paths = spark.createDataFrame(
-        [(u.rsplit("/", 1)[-1].rsplit(".", 1)[0], u) for u in urls],
-        "image_id string, url string",
-    ).repartition(min(len(urls), spark.sparkContext.defaultParallelism))
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, url in zip(pdf["image_id"].to_numpy(), pdf["url"].to_numpy()):
-                info, nread = header_info_http(url, initial_bytes)
-                proj = info["projection"] or {}
-                for lv_i, lev in enumerate(info["levels"]):
-                    rows.append(
-                        (
-                            image_id,
-                            lv_i,
-                            lev["width"],
-                            lev["height"],
-                            lev["tile_w"],
-                            lev["tile_h"],
-                            len(lev["offsets"]),
-                            _COMP_NAME.get(lev["compression"], "?"),
-                            int(lev.get("samples_per_pixel", 3)),
-                            int(lev.get("bits_per_sample", [8])[0]),
-                            int(lev.get("photometric", 1)),
-                            int(lev.get("sample_format", 1)),
-                            int(proj.get("epsg", 0)),
-                            float(proj.get("origin_x", 0.0)),
-                            float(proj.get("origin_y", 0.0)),
-                            float(proj.get("scale_px", 0.0)),
-                            nread,
-                            -1,  # file size unknown without a HEAD request
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "level", "lw", "lh", "tile_w", "tile_h", "n_tiles",
-                    "compression", "spp", "bits", "photometric", "sample_format",
-                    "epsg", "origin_x", "origin_y", "scale_px", "bytes_read", "file_bytes",
-                ],
-            )
-
-    return paths.mapInPandas(gen, schema=HEADER_SCHEMA)
+    URLs or use analyze_cog_s3; the engine-side plan is identical."""
+    return _analyze(
+        _remote_srcs(spark, urls), lambda: lambda u: header_info_http(u, initial_bytes)
+    )
 
 
 def disect(data: bytes, tags: bool = False) -> str:

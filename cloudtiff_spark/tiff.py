@@ -900,10 +900,10 @@ def _parse_geokeys(tags: dict) -> dict[int, int | float | str]:
 #: Errors cog_info can raise when a byte PREFIX ends mid-structure (an IFD
 #: entry, external value array, or next-IFD offset beyond the prefix):
 #: struct.error from short unpacks, IndexError/ValueError from slicing or
-#: reshaping cut arrays. Grow-and-reparse loops (sources.header_info /
-#: header_info_http / header_info_s3, api.open_s3) retry on these; a
-#: genuinely corrupt file still raises once the whole object is in hand
-#: (the loops stop growing at the object size / short body).
+#: reshaping cut arrays. The grow-and-reparse open (sources.open_ranged,
+#: behind every header-only path) retries on these; a genuinely corrupt
+#: file still raises once the whole object is in hand (the loop stops
+#: growing at a short read).
 #:
 #: ORDERING INVARIANT: every typed CloudTiffError also subclasses
 #: ValueError, so an ``except TRUNCATION_ERRORS`` clause MUST be preceded

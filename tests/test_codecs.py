@@ -83,23 +83,6 @@ class TestPNG:
         assert np.array_equal(codecs.decode_png(png), img)
 
 
-class TestFakeJpeg:
-    def test_psnr_gate(self):
-        img = _img(RNG, 128, 96)
-        out = codecs.decode_fakejpeg(codecs.encode_fakejpeg(img))
-        assert codecs.psnr(img, out) >= 40.0  # BASELINE.json lossy gate
-
-    def test_deterministic(self):
-        img = _img(RNG, 16, 16)
-        assert codecs.encode_fakejpeg(img) == codecs.encode_fakejpeg(img)
-
-    def test_fj01_fallback_through_decode_image(self):
-        # round-1/2 payloads (FJ01 magic) must still decode via fmt='jpeg'
-        img = _img(RNG, 32, 24)
-        out = codecs.decode_image(codecs.encode_fakejpeg(img), "jpeg", 24, 32)
-        assert codecs.psnr(img, out) >= 40.0
-
-
 class TestRealJpeg:
     """Baseline JFIF codec (cloudtiff_spark.jpeg) — from the public ITU-T
     T.81 spec; the reference delegates real formats to the image crate
@@ -555,6 +538,19 @@ class TestUnified:
         img = _img(RNG, 96, 64)
         data = codecs.encode_image(img, fmt)
         assert np.array_equal(codecs.decode_image(data, fmt, 64, 96), img)
+
+    @pytest.mark.parametrize("fmt", ["png", "jpeg"])
+    def test_self_describing_formats_shape_checked(self, fmt):
+        """png/jpeg carry their own dims; a payload that does not match the
+        row's (w, h) must raise like deflate/lzw do, not come back at its
+        own size (or, at an equal pixel count, silently reshaped)."""
+        small = codecs.encode_image(_img(RNG, 32, 32), fmt)
+        with pytest.raises(ValueError, match="buffer size"):
+            codecs.decode_image(small, fmt, 64, 64)
+        tall = codecs.encode_image(_img(RNG, 64, 32), fmt)
+        with pytest.raises(ValueError, match="buffer size"):
+            codecs.decode_image(tall, fmt, 64, 32)
+        assert codecs.decode_image(tall, fmt, 32, 64).shape == (64, 32, 3)
 
     def test_unsupported_fmt_raises(self):
         with pytest.raises(ValueError, match="CompressionNotSupported"):

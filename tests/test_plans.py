@@ -183,3 +183,27 @@ class TestBlockedRenderPlanShape:
 
     def test_existence_gate_is_semi_join(self, blocked_plan):
         assert "LeftSemi" in blocked_plan
+
+
+class TestHeaderScanShape:
+    def test_header_scan_reads_only_path_and_length(self, spark, tmp_path):
+        """analyze_cog_headers lists files through read_cog_directory; the
+        binaryFile scan must still be pruned to (path, length) so the files'
+        content is never read — the header-only contract."""
+        import re
+
+        import numpy as np
+
+        from cloudtiff_spark import tiff
+        from cloudtiff_spark.sources import analyze_cog_headers
+
+        img = np.zeros((64, 64, 3), dtype=np.uint8)
+        (tmp_path / "a.tif").write_bytes(tiff.encode_cog(img, 4326, 0.0, 50.0, 1e-4))
+        plan = analyze_cog_headers(spark, str(tmp_path))._jdf.queryExecution().executedPlan()
+        scans = re.findall(r"FileScan binaryFile \[([^\]]*)\]", plan.toString())
+        assert scans
+        for cols in scans:
+            assert sorted(re.sub(r"#\d+L?$", "", c) for c in cols.split(",")) == [
+                "length",
+                "path",
+            ]

@@ -602,3 +602,29 @@ class TestDefinitiveRejectsDontRefetch:
         with _pytest.raises(NoLevels):
             header_info_s3(f, "k", initial_bytes=4096)
         assert f.calls == 1
+
+
+class TestTransportParity:
+    class MemoryFetcher:
+        def __init__(self, body: bytes):
+            self.body = body
+
+        def fetch(self, key, start, length):
+            return self.body[start : start + length]
+
+    @pytest.mark.parametrize("initial_bytes", [64, 4096])
+    def test_file_and_s3_open_agree(self, tmp_path, initial_bytes):
+        """One ranged open behind every transport: a local file and an
+        in-memory S3 fetcher over the same bytes return the same info and
+        the same bytes_read."""
+        from cloudtiff_spark.sources import header_info, header_info_s3
+
+        img = RNG.integers(0, 256, (300, 512, 3), dtype=np.uint8)
+        data = tiff.encode_cog(img, 32609, 500000.0, 5400000.0, 2.0)
+        p = tmp_path / "x.tif"
+        p.write_bytes(data)
+        file_info, file_read = header_info(str(p), initial_bytes)
+        s3_info, s3_read = header_info_s3(self.MemoryFetcher(data), "x.tif", initial_bytes)
+        assert file_info == s3_info
+        assert file_read == s3_read
+        assert file_info == tiff.cog_info(data)

@@ -756,6 +756,23 @@ def q_prog_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _fixture_cogs(spark: SparkSession, which: str) -> DataFrame:
+    """(image_id, cog) rows of the sf0.01 "jpeg" | "strip" | "sparse"
+    container fixture (patchable seam — tools/mutation_probe.py stomps
+    tile payload bytes through it)."""
+    from cloudtiff_spark import fixtures
+
+    ensure = {
+        "jpeg": fixtures.ensure_jpeg_cog_dir,
+        "strip": fixtures.ensure_strip_tiff_dir,
+        "sparse": fixtures.ensure_sparse_cog_dir,
+    }[which]
+    df = spark.read.parquet(os.path.join(ensure("sf0.01"), "cogs.parquet"))
+    if which == "strip":
+        df = df.withColumnRenamed("tif", "cog")
+    return df.select("image_id", "cog")
+
+
 def q_cog_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JPEG-in-TIFF container correctness (TIFF TechNote 2, compression 7
     — beyond the reference's Deflate/LZW, cog/compression.rs): decode
@@ -766,44 +783,18 @@ def q_cog_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (expected_jpeg.parquet) holds the hash of the CODEC-ONLY path
     (decode_jpeg(encode_jpeg(tile)) over an independently rebuilt pyramid
     tile) — any container-layer bug (tile offsets, table split/merge,
-    photometric wiring, gray sample reduction) misses the hash."""
-    from cloudtiff_spark.fixtures import ensure_jpeg_cog_dir
+    photometric wiring, gray sample reduction) misses the hash. A tile
+    that fails to decode emits a typed sentinel row instead of failing
+    the task (row-grain quarantine contract)."""
+    from cloudtiff_spark.operators.cog import cog_tiles
 
-    jdir = ensure_jpeg_cog_dir("sf0.01")
-    cogs = spark.read.parquet(os.path.join(jdir, "cogs.parquet"))
-
-    def gen(batches):
-        import pandas as pd
-
-        from cloudtiff_spark import tiff
-
-        for pdf in batches:
-            rows = []
-            for iid, blob in zip(pdf["image_id"], pdf["cog"]):
-                data = bytes(blob)
-                info = tiff.cog_info(data)
-                for lv, lev in enumerate(info["levels"]):
-                    for ti in range(len(lev["offsets"])):
-                        rows.append(
-                            (iid, lv, ti, tiff.decode_tile(data, info, lv, ti).tobytes())
-                        )
-            yield pd.DataFrame(rows, columns=["image_id", "level", "tile_idx", "pix"])
-
-    out = cogs.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        gen, schema="image_id string, level long, tile_idx long, pix binary"
-    )
+    out = cog_tiles(_fixture_cogs(spark, "jpeg")).filter(~F.col("mask"))
     return out.select(
-        "image_id", "level", "tile_idx", F.xxhash64("pix").alias("pix_hash")
+        "image_id",
+        F.col("level").cast("long").alias("level"),
+        F.col("tile_idx").cast("long").alias("tile_idx"),
+        F.xxhash64("pix").alias("pix_hash"),
     )
-
-
-def _strip_cogs(spark: SparkSession) -> DataFrame:
-    """Loader for the stripped-GeoTIFF ingest fixture (patchable seam —
-    tools/mutation_probe.py stomps payload bytes through it)."""
-    from cloudtiff_spark.fixtures import ensure_strip_tiff_dir
-
-    sdir = ensure_strip_tiff_dir("sf0.01")
-    return spark.read.parquet(os.path.join(sdir, "cogs.parquet"))
 
 
 def q_strip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,47 +809,16 @@ def q_strip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     predictor, or padding bug in the strip path diverges. A strip that
     fails to decode emits a typed sentinel row instead of failing the
     task (row-grain quarantine contract)."""
+    from cloudtiff_spark.operators.cog import cog_tiles
 
-    def gen(batches):
-        import pandas as pd
-
-        from cloudtiff_spark import tiff
-        from cloudtiff_spark.operators.cog import _COMP_NAME
-
-        for pdf in batches:
-            rows = []
-            for iid, blob in zip(pdf["image_id"], pdf["tif"]):
-                data = bytes(blob)
-                info = tiff.cog_info(data)
-                lev = info["levels"][0]
-                comp = _COMP_NAME.get(lev["compression"], "?")
-                for ti in range(len(lev["offsets"])):
-                    try:
-                        pix = tiff.decode_tile(data, info, 0, ti).tobytes()
-                    except Exception as exc:
-                        pix = f"decode-failed:{type(exc).__name__}".encode()
-                    rows.append((iid, ti, comp, pix))
-            yield pd.DataFrame(
-                rows, columns=["image_id", "strip_idx", "comp", "pix"]
-            )
-
-    out = _strip_cogs(spark).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(
-        gen, schema="image_id string, strip_idx long, comp string, pix binary"
-    )
+    out = cog_tiles(_fixture_cogs(spark, "strip"))
+    out = out.filter(~F.col("mask") & (F.col("level") == 0))
     return out.select(
-        "image_id", "strip_idx", "comp", F.xxhash64("pix").alias("pix_hash")
+        "image_id",
+        F.col("tile_idx").cast("long").alias("strip_idx"),
+        F.col("compression").alias("comp"),
+        F.xxhash64("pix").alias("pix_hash"),
     )
-
-
-def _sparse_cogs(spark: SparkSession) -> DataFrame:
-    """Loader for the sparse-COG ingest fixture (patchable seam —
-    tools/mutation_probe.py stomps payload bytes through it)."""
-    from cloudtiff_spark.fixtures import ensure_sparse_cog_dir
-
-    sdir = ensure_sparse_cog_dir("sf0.01")
-    return spark.read.parquet(os.path.join(sdir, "cogs.parquet"))
 
 
 def q_sparse_cog(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -879,43 +839,14 @@ def q_sparse_cog(spark: SparkSession, sf_dir: str) -> DataFrame:
     dtype is wrong (or whose stored-tile path broke) diverges on
     pix_hash. Failed decodes emit a typed sentinel row (row-grain
     quarantine contract)."""
+    from cloudtiff_spark.operators.cog import cog_tiles
 
-    def gen(batches):
-        import pandas as pd
-
-        from cloudtiff_spark import tiff
-
-        for pdf in batches:
-            rows = []
-            for iid, blob in zip(pdf["image_id"], pdf["cog"]):
-                data = bytes(blob)
-                info = tiff.cog_info(data)
-                for lv in range(len(info["levels"])):
-                    lev = info["levels"][lv]
-                    # min() bound: a foreign mismatched-array IFD must
-                    # quarantine at row grain, not kill the task
-                    n = min(len(lev["offsets"]), len(lev["byte_counts"]))
-                    for ti in range(n):
-                        hole = lev["byte_counts"][ti] == 0
-                        try:
-                            pix = tiff.decode_tile(data, info, lv, ti).tobytes()
-                        except Exception as exc:
-                            pix = f"decode-failed:{type(exc).__name__}".encode()
-                        rows.append((iid, lv, ti, hole, pix))
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "level", "tile_idx", "is_hole", "pix"],
-            )
-
-    out = _sparse_cogs(spark).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(
-        gen,
-        schema="image_id string, level long, tile_idx long, "
-        "is_hole boolean, pix binary",
-    )
+    out = cog_tiles(_fixture_cogs(spark, "sparse")).filter(~F.col("mask"))
     return out.select(
-        "image_id", "level", "tile_idx", "is_hole",
+        "image_id",
+        F.col("level").cast("long").alias("level"),
+        F.col("tile_idx").cast("long").alias("tile_idx"),
+        "is_hole",
         F.xxhash64("pix").alias("pix_hash"),
     )
 
@@ -931,42 +862,14 @@ def q_mask_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITHOUT the reader — any admission, routing, bit-unpack, or
     photometric-scaling bug diverges; all-invalid tiles must be holes
     (sparse=True). Failed decodes emit a typed sentinel row."""
+    from cloudtiff_spark.operators.cog import cog_tiles
 
-    def gen(batches):
-        import pandas as pd
-
-        from cloudtiff_spark import tiff
-
-        for pdf in batches:
-            rows = []
-            for iid, blob in zip(pdf["image_id"], pdf["cog"]):
-                data = bytes(blob)
-                info = tiff.cog_info(data)
-                for mi, ml in enumerate(info["mask_levels"]):
-                    n = min(len(ml["offsets"]), len(ml["byte_counts"]))
-                    for ti in range(n):
-                        hole = ml["byte_counts"][ti] == 0
-                        try:
-                            pix = tiff.decode_mask_tile(
-                                data, info, mi, ti
-                            ).tobytes()
-                        except Exception as exc:
-                            pix = f"decode-failed:{type(exc).__name__}".encode()
-                        rows.append((iid, mi, ti, hole, pix))
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "mask_idx", "tile_idx", "is_hole", "pix"],
-            )
-
-    out = _sparse_cogs(spark).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(
-        gen,
-        schema="image_id string, mask_idx long, tile_idx long, "
-        "is_hole boolean, pix binary",
-    )
+    out = cog_tiles(_fixture_cogs(spark, "sparse")).filter(F.col("mask"))
     return out.select(
-        "image_id", "mask_idx", "tile_idx", "is_hole",
+        "image_id",
+        F.col("level").cast("long").alias("mask_idx"),
+        F.col("tile_idx").cast("long").alias("tile_idx"),
+        "is_hole",
         F.xxhash64("pix").alias("pix_hash"),
     )
 

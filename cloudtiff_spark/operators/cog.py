@@ -7,6 +7,8 @@ Spark stages over the images table.
 - parse_cogs: the schema-on-read stage — extract per-level grid + projection
   columns from raw COG bytes (the Spark shape of CloudTiff::open,
   SURVEY.md §3 E1).
+- cog_tiles: the container ingest stage — decode every stored tile of
+  every image and mask IFD chain (S4 ranged read + S8 tile fetch).
 """
 
 from __future__ import annotations
@@ -27,7 +29,14 @@ from pyspark.sql.types import (
 )
 
 from ..codecs import decode_image
-from ..tiff import COMPRESSION_DEFLATE, COMPRESSION_LZW, cog_info, encode_cog
+from ..tiff import (
+    COMPRESSION_DEFLATE,
+    COMPRESSION_LZW,
+    cog_info,
+    decode_mask_tile,
+    decode_tile,
+    encode_cog,
+)
 
 COG_SCHEMA = StructType(
     [
@@ -145,6 +154,49 @@ def parse_cogs(cogs: DataFrame) -> DataFrame:
     return cogs.mapInPandas(gen, schema=PARSED_SCHEMA)
 
 
+TILES_SCHEMA = (
+    "image_id string, mask boolean, level int, tile_idx int, "
+    "compression string, is_hole boolean, pix binary"
+)
+
+
+def cog_tiles(cogs: DataFrame) -> DataFrame:
+    """(image_id, cog) rows -> one row per stored tile of every IFD chain:
+    the image pyramid (mask=False) and the internal transparency masks
+    (mask=True), each tile sliced by its offsets[i]..+byte_counts[i] and
+    run through the decode chain (level.rs:301-373). is_hole marks a
+    SPARSE_OK hole (byte count 0; decode zero/nodata-fills it). A chain
+    is bounded by min(len(offsets), len(byte_counts)) and a tile that
+    fails to decode carries a typed ``decode-failed:<Type>`` sentinel in
+    pix, so a malformed container quarantines at row grain instead of
+    failing the task."""
+    cols = [c.split()[0] for c in TILES_SCHEMA.split(", ")]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for image_id, blob in zip(pdf["image_id"], pdf["cog"]):
+                data = bytes(blob)
+                info = cog_info(data)
+                for mask, chain, decode in (
+                    (False, info["levels"], decode_tile),
+                    (True, info["mask_levels"], decode_mask_tile),
+                ):
+                    for lv, lev in enumerate(chain):
+                        comp = _COMP_NAME.get(lev["compression"], "?")
+                        counts = lev["byte_counts"]
+                        for ti in range(min(len(lev["offsets"]), len(counts))):
+                            try:
+                                pix = decode(data, info, lv, ti).tobytes()
+                            except Exception as exc:
+                                pix = f"decode-failed:{type(exc).__name__}".encode()
+                            rows.append((image_id, mask, lv, ti, comp, counts[ti] == 0, pix))
+            yield pd.DataFrame(rows, columns=cols)
+
+    n = cogs.sparkSession.sparkContext.defaultParallelism
+    return cogs.repartition(n).mapInPandas(gen, schema=TILES_SCHEMA)
+
+
 FLOAT_STATS_SCHEMA = StructType(
     [
         StructField("image_id", StringType()),
@@ -169,7 +221,6 @@ def decode_float_stats(spark, path: str, pattern: str = "*.tif"):
     from the SOURCE arrays at generation time: equality proves the whole
     f32 chain (tag parse -> tile decode -> assemble) is lossless."""
     from ..sources import read_cog_directory
-    from ..tiff import decode_tile
 
     files = read_cog_directory(spark, path, pattern).select("image_id", "cog")
 

@@ -42,9 +42,10 @@ def analyze_cog_directory(spark: SparkSession, path: str, pattern: str = "*.tif"
 
 def _local_path(spark_path: str) -> str:
     """binaryFile reports 'file:/abs/path'; strip the scheme for local IO.
-    Non-file schemes need a ranged-GET client (HTTP Range / S3 GetObject
-    with Range — io/http.rs:100-140, io/s3.rs:54-92); none is available in
-    this sandbox, so they fail loudly instead of silently reading 100%."""
+    The directory scan (analyze_cog_headers) opens files only; remote
+    objects go through analyze_cog_urls (HTTP Range) or analyze_cog_s3
+    (ranged GetObject), so other schemes fail loudly here instead of
+    silently reading 100%."""
     if spark_path.startswith("file:"):
         p = spark_path[5:]
         while p.startswith("//"):
@@ -53,7 +54,8 @@ def _local_path(spark_path: str) -> str:
     if "://" not in spark_path and ":" not in spark_path.split("/", 1)[0]:
         return spark_path
     raise NotImplementedError(
-        f"ranged reads for scheme of {spark_path!r} need an HTTP/S3 range client"
+        f"the header-only directory scan reads local files only, not {spark_path!r}; "
+        "analyze remote objects with analyze_cog_urls or analyze_cog_s3"
     )
 
 
@@ -146,11 +148,11 @@ def _analyze(srcs: DataFrame, opener) -> DataFrame:
 
 def _remote_srcs(spark: SparkSession, srcs: list[str]) -> DataFrame:
     """(image_id = object stem, src, file_bytes = -1: size unknown without
-    a HEAD request), spread over the cluster."""
+    a HEAD request), spread over the cluster (one partition when empty)."""
     return spark.createDataFrame(
         [(s.rsplit("/", 1)[-1].rsplit(".", 1)[0], s, -1) for s in srcs],
         "image_id string, src string, file_bytes long",
-    ).repartition(min(len(srcs), spark.sparkContext.defaultParallelism))
+    ).repartition(max(1, min(len(srcs), spark.sparkContext.defaultParallelism)))
 
 
 def analyze_cog_headers(

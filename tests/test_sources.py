@@ -628,3 +628,18 @@ class TestTransportParity:
         assert file_info == s3_info
         assert file_read == s3_read
         assert file_info == tiff.cog_info(data)
+
+
+class TestEmptySourceList:
+    def test_empty_remote_lists_give_empty_relation(self, spark):
+        """An empty URL or key list is an empty HEADER_SCHEMA relation, not
+        a zero-partition repartition error."""
+        from cloudtiff_spark.sources import HEADER_SCHEMA, analyze_cog_s3, analyze_cog_urls
+
+        want = spark.createDataFrame([], HEADER_SCHEMA).schema
+        for df in (
+            analyze_cog_urls(spark, []),
+            analyze_cog_s3(spark, [], "http://localhost:9", "bucket", "key", "secret"),
+        ):
+            assert df.schema == want
+            assert df.count() == 0

@@ -1545,3 +1545,116 @@ class TestStreamGroups:
         key = lambda r: (r["k1"] or "", -1 if r["k2"] is None else r["k2"])  # noqa: E731
         assert len(got) == 6
         assert sorted(got, key=key) == sorted(want, key=key)
+
+
+class TestCogTiles:
+    """operators/cog.cog_tiles: the one container tile-decode relation
+    behind the cog_jpeg, strip_ingest, sparse_cog and mask_ingest queries,
+    over in-memory encode_cog containers."""
+
+    @staticmethod
+    def _containers() -> dict[str, bytes]:
+        from cloudtiff_spark import tiff
+
+        rng = np.random.default_rng(7)
+        img = rng.integers(0, 256, size=(300, 260, 3), dtype=np.uint8)
+        sparse_img = img.copy()
+        sparse_img[:, 130:] = 0  # all-zero tiles on the right become holes
+        mask = np.zeros((300, 260), dtype=bool)
+        mask[40:280, 40:200] = True
+        return {
+            "deflate": tiff.encode_cog(
+                sparse_img, 4326, 10.0, 50.0, 1e-4, sparse=True, mask=mask
+            ),
+            "jpeg": tiff.encode_cog(
+                img, 4326, 10.0, 50.0, 1e-4, compression=tiff.COMPRESSION_JPEG
+            ),
+        }
+
+    @staticmethod
+    def _tiles(spark, cogs: dict[str, bytes]) -> dict:
+        from cloudtiff_spark.operators.cog import cog_tiles
+
+        df = spark.createDataFrame(list(cogs.items()), "image_id string, cog binary")
+        return {
+            (r.image_id, r.mask, r.level, r.tile_idx): r for r in cog_tiles(df).collect()
+        }
+
+    @staticmethod
+    def _decoded(data: bytes) -> dict:
+        """(mask, level, tile_idx) -> (is_hole, pix) straight from the
+        tile decoders."""
+        from cloudtiff_spark import tiff
+
+        info = tiff.cog_info(data)
+        out = {}
+        for mask, chain, decode in (
+            (False, info["levels"], tiff.decode_tile),
+            (True, info["mask_levels"], tiff.decode_mask_tile),
+        ):
+            for lv, lev in enumerate(chain):
+                for ti, cnt in enumerate(lev["byte_counts"]):
+                    out[(mask, lv, ti)] = (cnt == 0, decode(data, info, lv, ti).tobytes())
+        return out
+
+    def test_every_tile_matches_the_decoders(self, spark):
+        cogs = self._containers()
+        got = self._tiles(spark, cogs)
+        want = {
+            (iid, *k): v for iid, data in cogs.items() for k, v in self._decoded(data).items()
+        }
+        assert got.keys() == want.keys()
+        for key, (hole, pix) in want.items():
+            assert got[key].is_hole == hole, key
+            assert bytes(got[key].pix) == pix, key
+        # both chains and both hole states are exercised
+        assert {k[1] for k in got if k[0] == "deflate"} == {False, True}
+        assert not any(r.mask for k, r in got.items() if k[0] == "jpeg")
+        holes = {(k[0], k[1]) for k, r in got.items() if r.is_hole}
+        assert holes == {("deflate", False), ("deflate", True)}
+        assert {r.compression for k, r in got.items() if k[0] == "jpeg"} == {"jpeg"}
+        assert {r.compression for k, r in got.items() if k[0] == "deflate"} == {"deflate"}
+
+    def test_corrupt_jpeg_tile_quarantines_one_row(self, spark):
+        """4 stomped bytes inside one JPEG tile payload: that row carries
+        the typed sentinel, every other row is unchanged, and the task
+        does not fail."""
+        from cloudtiff_spark import tiff
+
+        cogs = self._containers()
+        data = cogs["jpeg"]
+        lev = tiff.cog_info(data)["levels"][0]
+        pos = lev["offsets"][0] + lev["byte_counts"][0] // 2
+        bad = data[:pos] + b"\x00\xff\x00\xff" + data[pos + 4 :]
+        clean = self._tiles(spark, cogs)
+        got = self._tiles(spark, {**cogs, "jpeg": bad})
+        assert got.keys() == clean.keys()
+        changed = {k for k in got if bytes(got[k].pix) != bytes(clean[k].pix)}
+        assert changed == {("jpeg", False, 0, 0)}
+        assert bytes(got[("jpeg", False, 0, 0)].pix).startswith(b"decode-failed:")
+
+
+class TestContainerIngestOracle:
+    @pytest.mark.parametrize(
+        "name", ["cog_jpeg", "strip_ingest", "sparse_cog", "mask_ingest"]
+    )
+    def test_query_matches_oracle(self, spark, name):
+        """Each container-ingest query equals its oracle_sql() table under
+        tools/check_correctness.py's compare (row count, column names,
+        order-insensitive typed value hash)."""
+        import sys
+
+        import duckdb
+
+        import __spark_entry__ as E
+
+        tools = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+        if tools not in sys.path:
+            sys.path.insert(0, tools)
+        from check_correctness import SF_DIR, arrow_rows, value_hash
+
+        srows, scols = arrow_rows(E.queries()[name](spark, SF_DIR).toArrow())
+        orows, ocols = arrow_rows(duckdb.connect().execute(E.oracle_sql()[name]).arrow())
+        assert len(srows) == len(orows) > 0
+        assert sorted(scols) == sorted(ocols)
+        assert value_hash(srows, scols) == value_hash(orows, ocols)

@@ -4,9 +4,9 @@ compare goes RED for every query that claims to depend on that input.
 A green CORRECTNESS row only means engine == oracle; if both sides were
 accidentally constant (or the compare vacuous), corruption would sail
 through. This probe mutates one document / one embedding / one image
-payload via a monkeypatched loader and re-runs the exact value-hash
-compare: queries listed under the mutation MUST mismatch, and MUST match
-again unmutated. Exit 0 = every probe behaved.
+payload / one container tile via a monkeypatched loader and re-runs the
+exact value-hash compare: queries listed under the mutation MUST
+mismatch, and MUST match again unmutated. Exit 0 = every probe behaved.
 
 Usage: python tools/mutation_probe.py   [env: SF_DIR]
 """
@@ -44,6 +44,18 @@ PROBES = {
     "strip_payload": ["strip_ingest"],
     "sparse_payload": ["sparse_cog"],
     "mask_payload": ["mask_ingest"],
+    "jpeg_payload": ["cog_jpeg"],
+}
+
+#: tile-payload mutation -> (container fixture, image_id, mask chain?).
+#: strip_000 is UNCOMPRESSED (i%3==0), so its stomp changes decoded pixels
+#: in place; the mask stomp hits payloads disjoint from the image tiles, so
+#: it reaches mask_ingest alone
+TILE_STOMPS = {
+    "strip_payload": ("strip", "strip_000", False),
+    "sparse_payload": ("sparse", "sparse_000", False),
+    "mask_payload": ("sparse", "sparse_000", True),
+    "jpeg_payload": ("jpeg", "jpegcog_000", False),
 }
 
 
@@ -76,16 +88,46 @@ def main() -> int:
 
     orig_docs, orig_emb = E._docs, E._emb
     orig_tables, orig_t = E._fixture_tables, E._t
-    orig_strip = E._strip_cogs
-    orig_sparse = E._sparse_cogs
+    orig_cogs = E._fixture_cogs
 
     def restore():
         """Reinstall the unpatched loaders and drop every session cache
         built through a patched one."""
         E._docs, E._emb, E._fixture_tables, E._t = orig_docs, orig_emb, orig_tables, orig_t
-        E._strip_cogs = orig_strip
-        E._sparse_cogs = orig_sparse
+        E._fixture_cogs = orig_cogs
         E._clear_session_caches()
+
+    def stomp_tile(which: str, image_id: str, mask: bool):
+        """Install a container loader that overwrites 4 bytes in the middle
+        of the first stored tile payload (> 8 bytes) of one container's
+        image or mask IFD chain. The position comes from cog_info, not a
+        fraction of the blob, so the stomp always lands inside a payload:
+        either the codec stream breaks (typed sentinel row) or the decoded
+        pixels change; the hash moves both ways."""
+        from cloudtiff_spark.tiff import cog_info
+
+        blob = orig_cogs(spark, which).filter(F.col("image_id") == image_id).first()["cog"]
+        info = cog_info(bytes(blob))
+        off, cnt = next(
+            (off, cnt)
+            for lev in info["mask_levels" if mask else "levels"]
+            for off, cnt in zip(lev["offsets"], lev["byte_counts"])
+            if cnt > 8
+        )
+        pos = off + cnt // 2  # substring() is 1-based: keep bytes [1, pos]
+        stomped = F.expr(
+            f"concat(substring(cog, 1, {pos}), X'00FF00FF', substring(cog, {pos} + 5))"
+        )
+
+        def cogs(s, w):
+            df = orig_cogs(s, w)
+            if w != which:
+                return df
+            return df.withColumn(
+                "cog", F.when(F.col("image_id") == image_id, stomped).otherwise(F.col("cog"))
+            )
+
+        E._fixture_cogs = cogs
 
     def mutate(kind: str):
         """Install a loader that perturbs exactly one row."""
@@ -152,98 +194,8 @@ def main() -> int:
                 return images, meta, queries
 
             E._fixture_tables = tables
-        elif kind == "strip_payload":
-            # stomp 4 bytes at 3/4 of one stripped file's blob — past the
-            # header/IFD/geo tags, inside strip data. strip_000 is
-            # UNCOMPRESSED (i%3==0), so the stomp changes decoded pixels
-            # in place (hash moves) rather than breaking a codec stream
-            def strip_src(s):
-                return orig_strip(s).withColumn(
-                    "tif",
-                    F.when(
-                        F.col("image_id") == "strip_000",
-                        F.expr(
-                            "concat(substring(tif, 1, cast(length(tif)*3/4 as int)), "
-                            "X'00FF00FF', "
-                            "substring(tif, cast(length(tif)*3/4 as int) + 5))"
-                        ),
-                    ).otherwise(F.col("tif")),
-                )
-
-            E._strip_cogs = strip_src
-        elif kind == "sparse_payload":
-            # stomp 4 bytes in the MIDDLE of a known stored tile payload of
-            # sparse_000 — position computed from the container itself (not
-            # a fraction of the blob, which could drift into the IFD if the
-            # fixture's hole ratio changes). Either the deflate stream
-            # breaks (typed sentinel row) or decoded pixels change; the
-            # hash moves both ways
-            import pyarrow.parquet as _pq
-
-            from cloudtiff_spark import tiff as _tiff
-            from cloudtiff_spark.fixtures import ensure_sparse_cog_dir
-
-            _sdir = ensure_sparse_cog_dir("sf0.01")
-            _blob = next(
-                r["cog"]
-                for r in _pq.read_table(_sdir + "/cogs.parquet").to_pylist()
-                if r["image_id"] == "sparse_000"
-            )
-            _lev = _tiff.cog_info(_blob)["levels"][0]
-            _ti = next(
-                i for i, n in enumerate(_lev["byte_counts"]) if n > 8
-            )
-            # substring() is 1-based: keep bytes [1, pos], stomp 4
-            _pos = _lev["offsets"][_ti] + _lev["byte_counts"][_ti] // 2
-
-            def sparse_src(s):
-                return orig_sparse(s).withColumn(
-                    "cog",
-                    F.when(
-                        F.col("image_id") == "sparse_000",
-                        F.expr(
-                            f"concat(substring(cog, 1, {_pos}), "
-                            "X'00FF00FF', "
-                            f"substring(cog, {_pos} + 5))"
-                        ),
-                    ).otherwise(F.col("cog")),
-                )
-
-            E._sparse_cogs = sparse_src
-        elif kind == "mask_payload":
-            # stomp 4 bytes in the middle of a known stored MASK tile
-            # payload of sparse_000 (position computed from the
-            # container's mask_levels — disjoint from image payloads, so
-            # sparse_cog stays green while mask_ingest must go red)
-            import pyarrow.parquet as _pq
-
-            from cloudtiff_spark import tiff as _tiff
-            from cloudtiff_spark.fixtures import ensure_sparse_cog_dir
-
-            _sdir = ensure_sparse_cog_dir("sf0.01")
-            _blob = next(
-                r["cog"]
-                for r in _pq.read_table(_sdir + "/cogs.parquet").to_pylist()
-                if r["image_id"] == "sparse_000"
-            )
-            _ml = _tiff.cog_info(_blob)["mask_levels"][0]
-            _ti = next(i for i, n in enumerate(_ml["byte_counts"]) if n > 8)
-            _pos = _ml["offsets"][_ti] + _ml["byte_counts"][_ti] // 2
-
-            def mask_src(s):
-                return orig_sparse(s).withColumn(
-                    "cog",
-                    F.when(
-                        F.col("image_id") == "sparse_000",
-                        F.expr(
-                            f"concat(substring(cog, 1, {_pos}), "
-                            "X'00FF00FF', "
-                            f"substring(cog, {_pos} + 5))"
-                        ),
-                    ).otherwise(F.col("cog")),
-                )
-
-            E._sparse_cogs = mask_src
+        elif kind in TILE_STOMPS:
+            stomp_tile(*TILE_STOMPS[kind])
         elif kind == "lineitem_price":
 
             # top_orders is a top-10: only a mutation INSIDE the current
@@ -281,7 +233,7 @@ def main() -> int:
     # sanity: unmutated is green again
     restore()
     for name in ["simhash", "embed_topk", "decode_check", "pricing_summary",
-                 "strip_ingest", "sparse_cog", "mask_ingest"]:
+                 "strip_ingest", "sparse_cog", "mask_ingest", "cog_jpeg"]:
         ok = compare(spark, con, E, name)
         print(f"{'ok  ' if ok else 'FAIL'} unmutated -> {name}: {'green' if ok else 'RED'}")
         if not ok:

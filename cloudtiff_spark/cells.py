@@ -3,8 +3,7 @@
 No h3/s2 library exists in this container, so the cell index is a
 from-scratch hierarchical lon/lat grid (quadtree, like the slippy-map /
 Bing-quadkey convention but in plate-carree so that every step is exact
-closed-form column math — fully expressible both as Catalyst expressions
-and ANSI SQL for the DuckDB oracle):
+closed-form column math):
 
     at resolution z (0..MAX_RES): 2^z * 2^z cells over lon[-180,180] x lat[-90,90]
     cx = clamp(floor((lon+180)/360 * 2^z), 0, 2^z-1)
@@ -18,6 +17,13 @@ Properties used by the engine:
   so "resolution matched to the COG tile footprint" picks the coarsest z
   whose lon-span is <= the tile's ground width (BASELINE.json north_star).
 
+Two implementations: the python reference functions below (oracles and
+fixture generators) and the engine path, SQL fragment builders that each
+operator splices into one ``selectExpr`` per stage (built as text, a stage
+costs a few py4j round trips to plan instead of one per operator).
+``__spark_entry__.oracle_sql`` writes the same formulas again in DuckDB SQL
+on purpose: it is an independent recompute and shares no text with these.
+
 Reference analog: the COG tile grid itself + WMTS tile tree
 (/root/reference/src/render/wmts.rs:124-179); this index generalizes those
 to a global join key the way H3/S2 would on a real deployment.
@@ -26,9 +32,6 @@ to a global join key the way H3/S2 would on a real deployment.
 from __future__ import annotations
 
 import math
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 MAX_RES = 20
 #: fixed resolution for the PIP equi-join key (see spatial.py). Measured on
@@ -82,31 +85,31 @@ def cover_bbox(xmin: float, ymin: float, xmax: float, ymax: float, z: int) -> li
 
 
 # ---------------------------------------------------------------------------
-# Spark native-column builders (no UDF anywhere)
+# Spark SQL fragments (the engine path: no UDF anywhere)
 # ---------------------------------------------------------------------------
+# Each builder takes SQL text for its operands (column names, literals or
+# whole expressions) and returns SQL text, so a stage is one selectExpr.
+# Double literals carry the D suffix: a bare ``2.0`` parses as DECIMAL.
 
 
-def cell_xy_expr(lon: Column, lat: Column, z: Column) -> tuple[Column, Column]:
-    # 2^z as a column (shiftleft needs a literal count); exact for z <= 28
-    n = F.pow(F.lit(2.0), z).cast("long")
-    cx = F.least(n - 1, F.greatest(F.lit(0).cast("long"), F.floor((lon + 180.0) / 360.0 * n)))
-    cy = F.least(n - 1, F.greatest(F.lit(0).cast("long"), F.floor((90.0 - lat) / 180.0 * n)))
+def cell_xy_expr(lon: str, lat: str, z) -> tuple[str, str]:
+    # 2^z as a bigint, exact for z <= 28
+    n = f"CAST(POWER(2.0D, {z}) AS BIGINT)"
+    cx = f"LEAST({n} - 1, GREATEST(CAST(0 AS BIGINT), FLOOR((({lon}) + 180.0D) / 360.0D * {n})))"
+    cy = f"LEAST({n} - 1, GREATEST(CAST(0 AS BIGINT), FLOOR((90.0D - ({lat})) / 180.0D * {n})))"
     return cx, cy
 
 
-def pack_expr(z: Column, cx: Column, cy: Column) -> Column:
+def pack_expr(z, cx: str, cy: str) -> str:
     return (
-        F.shiftleft(z.cast("long"), _ZSHIFT)
-        + F.shiftleft(cx.cast("long"), _XSHIFT)
-        + cy.cast("long")
-    ).cast("long")
+        f"CAST(SHIFTLEFT(CAST({z} AS BIGINT), {_ZSHIFT}) + SHIFTLEFT(CAST({cx} AS BIGINT), "
+        f"{_XSHIFT}) + CAST({cy} AS BIGINT) AS BIGINT)"
+    )
 
 
-def cell_id_expr(lon: Column, lat: Column, z: Column) -> Column:
-    cx, cy = cell_xy_expr(lon, lat, z)
-    return pack_expr(z, cx, cy)
+def cell_id_expr(lon: str, lat: str, z) -> str:
+    return pack_expr(z, *cell_xy_expr(lon, lat, z))
 
 
-def res_for_footprint_expr(width_deg: Column) -> Column:
-    z = F.floor(F.log2(360.0 / width_deg)).cast("int")
-    return F.least(F.lit(MAX_RES), F.greatest(F.lit(0), z))
+def res_for_footprint_expr(width_deg: str) -> str:
+    return f"LEAST({MAX_RES}, GREATEST(0, CAST(FLOOR(LOG2(360.0D / ({width_deg}))) AS INT)))"

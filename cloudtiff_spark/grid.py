@@ -1,10 +1,12 @@
 """Tile grid + overview pyramid math.
 
-The single source of truth for grid semantics, used three ways:
+The single source of truth for grid semantics, used two ways:
 1. numpy/python helpers (fixture generation + pytest brute-force oracles),
-2. Spark native-column expression builders (the engine hot path — pure
-   Catalyst expressions, whole-stage codegen, no Python),
-3. the equivalent ANSI SQL fragments live in __spark_entry__.oracle_sql().
+2. Spark SQL fragment builders (the engine hot path): each takes and
+   returns SQL text, so an operator plans a stage as one ``selectExpr``
+   (pure Catalyst expressions, whole-stage codegen, no Python).
+``__spark_entry__.oracle_sql()`` restates the rules in DuckDB SQL as an
+independent recompute; it shares no text with the fragments here.
 
 Semantics (reference parity):
 - Level dims: ``full // 2**level`` integer division, min 1
@@ -22,9 +24,6 @@ Semantics (reference parity):
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 MAX_LEVELS = 13  # supports images up to tile*2^12 on a side
 
@@ -83,29 +82,27 @@ def tiles_for_crop(
 
 
 # ---------------------------------------------------------------------------
-# Spark native-column builders
+# Spark SQL fragments (operands and results are SQL text)
 # ---------------------------------------------------------------------------
 
 
-def levels_expr(w: Column, h: Column, tw: Column, th: Column) -> Column:
-    """array<int> of level numbers for an image — pure Catalyst exprs.
+def levels_expr(w: str, h: str, tw: str, th: str) -> str:
+    """array<int> of level numbers for an image.
 
     level 0 always exists; level l>=1 exists iff level l-1 overflows one
     tile on either axis: floor(w/2^(l-1)) > tw or floor(h/2^(l-1)) > th.
     """
-    lvl = F.sequence(F.lit(0), F.lit(MAX_LEVELS - 1))
-    prev_w = lambda l: F.greatest(F.floor(w / F.pow(F.lit(2.0), l - 1)), F.lit(1))  # noqa: E731
-    prev_h = lambda l: F.greatest(F.floor(h / F.pow(F.lit(2.0), l - 1)), F.lit(1))  # noqa: E731
-    return F.filter(
-        lvl,
-        lambda l: (l == 0) | (prev_w(l) > tw.cast("long")) | (prev_h(l) > th.cast("long")),
+    prev = lambda full: f"GREATEST(FLOOR(({full}) / POWER(2.0D, _l - 1)), 1)"  # noqa: E731
+    return (
+        f"FILTER(SEQUENCE(0, {MAX_LEVELS - 1}), _l -> _l = 0 "
+        f"OR {prev(w)} > CAST({tw} AS BIGINT) OR {prev(h)} > CAST({th} AS BIGINT))"
     )
 
 
-def level_dim_expr(full: Column, level: Column) -> Column:
-    """max(1, full // 2**level) as a native expression (exact for int32)."""
-    return F.greatest(F.floor(full / F.pow(F.lit(2.0), level)), F.lit(1)).cast("int")
+def level_dim_expr(full: str, level: str) -> str:
+    """max(1, full // 2**level) (exact for int32)."""
+    return f"CAST(GREATEST(FLOOR(({full}) / POWER(2.0D, {level})), 1) AS INT)"
 
 
-def ceil_div_expr(a: Column, b: Column) -> Column:
-    return F.floor((a.cast("long") + b.cast("long") - 1) / b.cast("long")).cast("int")
+def ceil_div_expr(a: str, b: str) -> str:
+    return f"CAST(FLOOR((CAST({a} AS BIGINT) + CAST({b} AS BIGINT) - 1) / CAST({b} AS BIGINT)) AS INT)"

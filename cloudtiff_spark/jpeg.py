@@ -741,9 +741,10 @@ def _decode_scan(
     # window for the final EOB codes (T.81 pads with 1-bits; only the
     # consumed length matters, and nothing is consumed past the last block).
     # 16 zero bytes cover the 27-bit peek window draining past EOS while
-    # the final EOB run decodes (a valid stream needs < 6 of them; corrupt
-    # streams exhaust the padding and surface as an IndexError -> caught
-    # by the quarantine classifier)
+    # the final EOB run decodes (a valid stream needs < 6 of them). A
+    # corrupt stream exhausts the padding: the refill's data[pos] raises
+    # IndexError, which the one try around the MCU loop turns into
+    # JpegError (no per-byte bounds check in this hot loop)
     data = scan + b"\x00" * 16
     acc = 0
     nbits = 0
@@ -754,79 +755,82 @@ def _decode_scan(
     # <= 9 bits): code AND magnitude extract from ONE peek, one mask,
     # no second refill on the common path
     mcu_count = 0
-    for _mcu in range(mcux * mcuy):
-        if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-            # RST segments are byte-aligned: drop ONLY the pad bits of the
-            # partial byte. Zeroing acc/nbits would throw away whole bytes
-            # of the NEXT segment already prefetched by the 27-bit window.
-            drop = nbits % 8
-            nbits -= drop
-            acc &= (1 << nbits) - 1
-            preds = [0] * len(scomp)
-        for si, nb in blocks_per_mcu:
-            dlut, alut = luts[si]
-            pred = preds[si]
-            for _b in range(nb):
-                blk = [0] * 64
-                while nbits < 27:
-                    acc = (acc << 8) | data[pos]
-                    pos += 1
-                    nbits += 8
-                e = dlut[(acc >> (nbits - 16)) & 0xFFFF]
-                ln = e & 31
-                if ln == 0:
-                    raise JpegError("bad DC Huffman code")
-                s = e >> 5
-                if s > 11:
-                    # T.81 F.1.2.1.1: DC magnitude category SSSS <= 11 for
-                    # 8-bit precision; a third-party table encoding more
-                    # would also overrun the 27-bit (16+11) peek window
-                    raise JpegError(f"bad DC magnitude category {s}")
-                if s:
-                    v = (acc >> (nbits - ln - s)) & ((1 << s) - 1)
-                    ln += s
-                    pred += v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-                nbits -= ln
+    try:
+        for _mcu in range(mcux * mcuy):
+            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
+                # RST segments are byte-aligned: drop ONLY the pad bits of the
+                # partial byte. Zeroing acc/nbits would throw away whole bytes
+                # of the NEXT segment already prefetched by the 27-bit window.
+                drop = nbits % 8
+                nbits -= drop
                 acc &= (1 << nbits) - 1
-                blk[0] = pred
-                k = 1
-                while k < 64:
+                preds = [0] * len(scomp)
+            for si, nb in blocks_per_mcu:
+                dlut, alut = luts[si]
+                pred = preds[si]
+                for _b in range(nb):
+                    blk = [0] * 64
                     while nbits < 27:
                         acc = (acc << 8) | data[pos]
                         pos += 1
                         nbits += 8
-                    e = alut[(acc >> (nbits - 16)) & 0xFFFF]
+                    e = dlut[(acc >> (nbits - 16)) & 0xFFFF]
                     ln = e & 31
                     if ln == 0:
-                        raise JpegError("bad AC Huffman code")
-                    rs = e >> 5
-                    size = rs & 0xF
-                    if size == 0:
-                        nbits -= ln
-                        acc &= (1 << nbits) - 1
-                        if rs == 0:  # EOB
-                            break
-                        if rs != 0xF0:
-                            raise JpegError(f"bad AC symbol {rs:#x}")
-                        k += 16  # ZRL
-                        continue
-                    if size > 10:
-                        # T.81 F.1.2.2.1: AC SSSS <= 10 for 8-bit
-                        # precision; 11-15 from a third-party table would
-                        # push ln+size past the 27-bit peek window and
-                        # make the magnitude shift below go negative
-                        raise JpegError(f"bad AC magnitude category {size}")
-                    k += rs >> 4
-                    if k > 63:
-                        raise JpegError("AC run past block end")
-                    v = (acc >> (nbits - ln - size)) & ((1 << size) - 1)
-                    nbits -= ln + size
+                        raise JpegError("bad DC Huffman code")
+                    s = e >> 5
+                    if s > 11:
+                        # T.81 F.1.2.1.1: DC magnitude category SSSS <= 11 for
+                        # 8-bit precision; a third-party table encoding more
+                        # would also overrun the 27-bit (16+11) peek window
+                        raise JpegError(f"bad DC magnitude category {s}")
+                    if s:
+                        v = (acc >> (nbits - ln - s)) & ((1 << s) - 1)
+                        ln += s
+                        pred += v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+                    nbits -= ln
                     acc &= (1 << nbits) - 1
-                    blk[k] = v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-                    k += 1
-                coefs[si].append(blk)
-            preds[si] = pred
-        mcu_count += 1
+                    blk[0] = pred
+                    k = 1
+                    while k < 64:
+                        while nbits < 27:
+                            acc = (acc << 8) | data[pos]
+                            pos += 1
+                            nbits += 8
+                        e = alut[(acc >> (nbits - 16)) & 0xFFFF]
+                        ln = e & 31
+                        if ln == 0:
+                            raise JpegError("bad AC Huffman code")
+                        rs = e >> 5
+                        size = rs & 0xF
+                        if size == 0:
+                            nbits -= ln
+                            acc &= (1 << nbits) - 1
+                            if rs == 0:  # EOB
+                                break
+                            if rs != 0xF0:
+                                raise JpegError(f"bad AC symbol {rs:#x}")
+                            k += 16  # ZRL
+                            continue
+                        if size > 10:
+                            # T.81 F.1.2.2.1: AC SSSS <= 10 for 8-bit
+                            # precision; 11-15 from a third-party table would
+                            # push ln+size past the 27-bit peek window and
+                            # make the magnitude shift below go negative
+                            raise JpegError(f"bad AC magnitude category {size}")
+                        k += rs >> 4
+                        if k > 63:
+                            raise JpegError("AC run past block end")
+                        v = (acc >> (nbits - ln - size)) & ((1 << size) - 1)
+                        nbits -= ln + size
+                        acc &= (1 << nbits) - 1
+                        blk[k] = v if v >= (1 << (size - 1)) else v - (1 << size) + 1
+                        k += 1
+                    coefs[si].append(blk)
+                preds[si] = pred
+            mcu_count += 1
+    except IndexError:
+        raise JpegError('entropy-coded segment ends before the last MCU') from None
 
     # batched numeric path: dequant (zigzag order) -> de-zigzag -> IDCT
     planes = []
@@ -970,115 +974,75 @@ def _prog_scan(
     p1, m1 = 1 << al, -1 << al
     # group units per restart interval (interleaved: h*v units per MCU)
     ri_units = restart_interval * units_per_ri if restart_interval else 0
-    for ui, (ci, blk) in enumerate(units):
-        if ri_units and ui and ui % ri_units == 0:
-            drop = nbits % 8
-            nbits -= drop
-            acc &= (1 << nbits) - 1
-            preds = {k: 0 for k in preds}
-            eobrun = 0
-        row = coefs[ci][blk]
-        if ss == 0:
-            # ---- DC pass ----
-            if ah == 0:
-                while nbits < 27:
-                    acc = (acc << 8) | data[pos]
-                    pos += 1
-                    nbits += 8
-                dlut = luts[ci][0]
-                e = dlut[(acc >> (nbits - 16)) & 0xFFFF]
-                ln = e & 31
-                if ln == 0:
-                    raise JpegError("bad DC Huffman code")
-                s = e >> 5
-                if s > 11:
-                    raise JpegError(f"bad DC magnitude category {s}")
-                diff = 0
-                if s:
-                    v = (acc >> (nbits - ln - s)) & ((1 << s) - 1)
-                    ln += s
-                    diff = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-                nbits -= ln
+    try:
+        for ui, (ci, blk) in enumerate(units):
+            if ri_units and ui and ui % ri_units == 0:
+                drop = nbits % 8
+                nbits -= drop
                 acc &= (1 << nbits) - 1
-                preds[ci] += diff
-                row[0] = preds[ci] << al
-            else:
-                if nbits < 1:
-                    acc = (acc << 8) | data[pos]
-                    pos += 1
-                    nbits += 8
-                bit = (acc >> (nbits - 1)) & 1
-                nbits -= 1
-                acc &= (1 << nbits) - 1
-                if bit:
-                    row[0] = int(row[0]) | p1
-            continue
-        # ---- AC pass ----
-        if ah == 0:
-            if eobrun > 0:
-                eobrun -= 1
-                continue
-            k = ss
-            while k <= se:
-                while nbits < 27:
-                    acc = (acc << 8) | data[pos]
-                    pos += 1
-                    nbits += 8
-                alut = luts[ci][1]
-                e = alut[(acc >> (nbits - 16)) & 0xFFFF]
-                ln = e & 31
-                if ln == 0:
-                    raise JpegError("bad AC Huffman code")
-                rs = e >> 5
-                r, s = rs >> 4, rs & 0xF
-                if s == 0:
+                preds = {k: 0 for k in preds}
+                eobrun = 0
+            row = coefs[ci][blk]
+            if ss == 0:
+                # ---- DC pass ----
+                if ah == 0:
+                    while nbits < 27:
+                        acc = (acc << 8) | data[pos]
+                        pos += 1
+                        nbits += 8
+                    dlut = luts[ci][0]
+                    e = dlut[(acc >> (nbits - 16)) & 0xFFFF]
+                    ln = e & 31
+                    if ln == 0:
+                        raise JpegError("bad DC Huffman code")
+                    s = e >> 5
+                    if s > 11:
+                        raise JpegError(f"bad DC magnitude category {s}")
+                    diff = 0
+                    if s:
+                        v = (acc >> (nbits - ln - s)) & ((1 << s) - 1)
+                        ln += s
+                        diff = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
                     nbits -= ln
                     acc &= (1 << nbits) - 1
-                    if r == 15:
-                        k += 16  # ZRL
-                        continue
-                    eobrun = (1 << r) - 1
-                    if r:
-                        while nbits < r:
-                            acc = (acc << 8) | data[pos]
-                            pos += 1
-                            nbits += 8
-                        eobrun += (acc >> (nbits - r)) & ((1 << r) - 1)
-                        nbits -= r
+                    preds[ci] += diff
+                    row[0] = preds[ci] << al
+                else:
+                    if nbits < 1:
+                        acc = (acc << 8) | data[pos]
+                        pos += 1
+                        nbits += 8
+                    bit = (acc >> (nbits - 1)) & 1
+                    nbits -= 1
+                    acc &= (1 << nbits) - 1
+                    if bit:
+                        row[0] = int(row[0]) | p1
+                continue
+            # ---- AC pass ----
+            if ah == 0:
+                if eobrun > 0:
+                    eobrun -= 1
+                    continue
+                k = ss
+                while k <= se:
+                    while nbits < 27:
+                        acc = (acc << 8) | data[pos]
+                        pos += 1
+                        nbits += 8
+                    alut = luts[ci][1]
+                    e = alut[(acc >> (nbits - 16)) & 0xFFFF]
+                    ln = e & 31
+                    if ln == 0:
+                        raise JpegError("bad AC Huffman code")
+                    rs = e >> 5
+                    r, s = rs >> 4, rs & 0xF
+                    if s == 0:
+                        nbits -= ln
                         acc &= (1 << nbits) - 1
-                    break
-                if s > 10:
-                    raise JpegError(f"bad AC magnitude category {s}")
-                k += r
-                if k > se:
-                    raise JpegError("AC run past band end")
-                v = (acc >> (nbits - ln - s)) & ((1 << s) - 1)
-                nbits -= ln + s
-                acc &= (1 << nbits) - 1
-                val = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-                row[k] = val << al
-                k += 1
-            continue
-        # ---- AC refinement (T.81 G.1.2.3) ----
-        k = ss
-        if eobrun == 0:
-            while k <= se:
-                while nbits < 27:
-                    acc = (acc << 8) | data[pos]
-                    pos += 1
-                    nbits += 8
-                alut = luts[ci][1]
-                e = alut[(acc >> (nbits - 16)) & 0xFFFF]
-                ln = e & 31
-                if ln == 0:
-                    raise JpegError("bad AC Huffman code")
-                rs = e >> 5
-                r, s = rs >> 4, rs & 0xF
-                nbits -= ln
-                acc &= (1 << nbits) - 1
-                if s == 0:
-                    if r != 15:
-                        eobrun = 1 << r
+                        if r == 15:
+                            k += 16  # ZRL
+                            continue
+                        eobrun = (1 << r) - 1
                         if r:
                             while nbits < r:
                                 acc = (acc << 8) | data[pos]
@@ -1088,20 +1052,81 @@ def _prog_scan(
                             nbits -= r
                             acc &= (1 << nbits) - 1
                         break
-                    val = 0  # ZRL: skip 16 zero-history coefficients
-                else:
-                    if s != 1:
-                        raise JpegError(f"bad refinement magnitude {s}")
-                    if nbits < 1:
+                    if s > 10:
+                        raise JpegError(f"bad AC magnitude category {s}")
+                    k += r
+                    if k > se:
+                        raise JpegError("AC run past band end")
+                    v = (acc >> (nbits - ln - s)) & ((1 << s) - 1)
+                    nbits -= ln + s
+                    acc &= (1 << nbits) - 1
+                    val = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+                    row[k] = val << al
+                    k += 1
+                continue
+            # ---- AC refinement (T.81 G.1.2.3) ----
+            k = ss
+            if eobrun == 0:
+                while k <= se:
+                    while nbits < 27:
                         acc = (acc << 8) | data[pos]
                         pos += 1
                         nbits += 8
-                    sign = (acc >> (nbits - 1)) & 1
-                    nbits -= 1
+                    alut = luts[ci][1]
+                    e = alut[(acc >> (nbits - 16)) & 0xFFFF]
+                    ln = e & 31
+                    if ln == 0:
+                        raise JpegError("bad AC Huffman code")
+                    rs = e >> 5
+                    r, s = rs >> 4, rs & 0xF
+                    nbits -= ln
                     acc &= (1 << nbits) - 1
-                    val = p1 if sign else m1
-                # advance r zero-history positions, appending correction
-                # bits for every nonzero-history coefficient crossed
+                    if s == 0:
+                        if r != 15:
+                            eobrun = 1 << r
+                            if r:
+                                while nbits < r:
+                                    acc = (acc << 8) | data[pos]
+                                    pos += 1
+                                    nbits += 8
+                                eobrun += (acc >> (nbits - r)) & ((1 << r) - 1)
+                                nbits -= r
+                                acc &= (1 << nbits) - 1
+                            break
+                        val = 0  # ZRL: skip 16 zero-history coefficients
+                    else:
+                        if s != 1:
+                            raise JpegError(f"bad refinement magnitude {s}")
+                        if nbits < 1:
+                            acc = (acc << 8) | data[pos]
+                            pos += 1
+                            nbits += 8
+                        sign = (acc >> (nbits - 1)) & 1
+                        nbits -= 1
+                        acc &= (1 << nbits) - 1
+                        val = p1 if sign else m1
+                    # advance r zero-history positions, appending correction
+                    # bits for every nonzero-history coefficient crossed
+                    while k <= se:
+                        if row[k] != 0:
+                            if nbits < 1:
+                                acc = (acc << 8) | data[pos]
+                                pos += 1
+                                nbits += 8
+                            bit = (acc >> (nbits - 1)) & 1
+                            nbits -= 1
+                            acc &= (1 << nbits) - 1
+                            if bit and (int(row[k]) & p1) == 0:
+                                row[k] = int(row[k]) + (p1 if row[k] > 0 else m1)
+                        else:
+                            if r == 0:
+                                if val:
+                                    row[k] = val
+                                k += 1
+                                break
+                            r -= 1
+                        k += 1
+            if eobrun > 0:
                 while k <= se:
                     if row[k] != 0:
                         if nbits < 1:
@@ -1113,28 +1138,10 @@ def _prog_scan(
                         acc &= (1 << nbits) - 1
                         if bit and (int(row[k]) & p1) == 0:
                             row[k] = int(row[k]) + (p1 if row[k] > 0 else m1)
-                    else:
-                        if r == 0:
-                            if val:
-                                row[k] = val
-                            k += 1
-                            break
-                        r -= 1
                     k += 1
-        if eobrun > 0:
-            while k <= se:
-                if row[k] != 0:
-                    if nbits < 1:
-                        acc = (acc << 8) | data[pos]
-                        pos += 1
-                        nbits += 8
-                    bit = (acc >> (nbits - 1)) & 1
-                    nbits -= 1
-                    acc &= (1 << nbits) - 1
-                    if bit and (int(row[k]) & p1) == 0:
-                        row[k] = int(row[k]) + (p1 if row[k] > 0 else m1)
-                k += 1
-            eobrun -= 1
+                eobrun -= 1
+    except IndexError:
+        raise JpegError('entropy-coded segment ends before the last data unit') from None
 
 
 def _prog_reconstruct(

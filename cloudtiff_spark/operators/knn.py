@@ -22,19 +22,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..cells import cell_xy_expr, pack_expr
+from ..cells import cell_xy_expr
 
 Z_KNN = 4  # 16x16 world grid: hot fixtures resolve in 1-2 rounds
+#: a candidate's rank within its query: distance, then image_id, ascending
+_RANK = "row_number() OVER (PARTITION BY query_id ORDER BY dist_sq ASC, image_id ASC)"
 
 
 def _image_points(meta: DataFrame) -> DataFrame:
-    lon = (F.col("xmin") + F.col("xmax")) / 2
-    lat = (F.col("ymin") + F.col("ymax")) / 2
-    cx, cy = cell_xy_expr(lon, lat, F.lit(Z_KNN))
-    return meta.select(
-        "image_id", lon.alias("ilon"), lat.alias("ilat"), cx.alias("icx"), cy.alias("icy")
+    lon, lat = "(xmin + xmax) / 2", "(ymin + ymax) / 2"
+    cx, cy = cell_xy_expr(lon, lat, Z_KNN)
+    return meta.selectExpr(
+        "image_id", f"{lon} AS ilon", f"{lat} AS ilat", f"{cx} AS icx", f"{cy} AS icy"
     )
 
 
@@ -55,11 +55,9 @@ def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8
     lat_span = 180.0 / n  # min cell span in degrees
 
     pts = _image_points(meta).cache()
-    q = (
-        queries.filter(F.col("kind") == "knn")
-        .select("query_id", "px", "py", "k")
-        .withColumn("qcx", cell_xy_expr(F.col("px"), F.col("py"), F.lit(z))[0])
-        .withColumn("qcy", cell_xy_expr(F.col("px"), F.col("py"), F.lit(z))[1])
+    qcx, qcy = cell_xy_expr("px", "py", z)
+    q = queries.filter("kind = 'knn'").selectExpr(
+        "query_id", "px", "py", "k", f"{qcx} AS qcx", f"{qcy} AS qcy"
     )
 
     # density-sized first radius: expect >= ~4*k candidates in the first
@@ -71,7 +69,7 @@ def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8
         # nothing — return the empty result without looping (and without
         # leaking the just-materialized cache)
         pts.unpersist()
-        return q.select("query_id", F.lit(1).cast("int").alias("rank"), F.lit("").alias("image_id")).limit(0)
+        return q.selectExpr("query_id", "CAST(1 AS INT) AS rank", "'' AS image_id").limit(0)
     density = n_pts / float(n * n)
     k_hint = 16.0  # fixture k's are single-digit; 4*k headroom
     r0 = 0
@@ -93,31 +91,21 @@ def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8
         # queries should swap this for a left_anti join against a
         # done-ids relation to keep the per-round plan size bounded
         active = q if active_ids is None else q.filter(F.col("query_id").isin(list(active_ids)))
-        dx_full = F.sequence(F.lit(-r_hi), F.lit(r_hi))
-        dx_sides = F.concat(
-            F.sequence(F.lit(-r_hi), F.lit(-r_lo)), F.sequence(F.lit(r_lo), F.lit(r_hi))
+        # one (icx, icy) struct per ring cell, rows (_dy) outer
+        dx = (
+            f"CASE WHEN abs(_dy) >= {r_lo} THEN sequence({-r_hi}, {r_hi}) "
+            f"ELSE concat(sequence({-r_hi}, {-r_lo}), sequence({r_lo}, {r_hi})) END"
         )
-        ring = (
-            active.withColumn("_dy", F.explode(F.sequence(F.lit(-r_hi), F.lit(r_hi))))
-            .withColumn(
-                "_dx",
-                F.explode(F.when(F.abs(F.col("_dy")) >= F.lit(r_lo), dx_full).otherwise(dx_sides)),
-            )
-            .withColumn("icx", F.col("qcx") + F.col("_dx"))
-            .withColumn("icy", F.col("qcy") + F.col("_dy"))
-            .filter(
-                (F.col("icx") >= 0) & (F.col("icx") < n) & (F.col("icy") >= 0) & (F.col("icy") < n)
-            )
-            .drop("_dx", "_dy")
-        )
-        found = ring.join(pts, ["icx", "icy"], "inner").select(
+        ring = active.selectExpr(
+            "*",
+            f"inline(flatten(transform(sequence({-r_hi}, {r_hi}), _dy -> transform({dx}, "
+            "_dx -> named_struct('icx', qcx + _dx, 'icy', qcy + _dy)))))",
+        ).filter(f"icx >= 0 AND icx < {n} AND icy >= 0 AND icy < {n}")
+        found = ring.join(pts, ["icx", "icy"], "inner").selectExpr(
             "query_id",
             "k",
             "image_id",
-            (
-                (F.col("ilon") - F.col("px")) * (F.col("ilon") - F.col("px"))
-                + (F.col("ilat") - F.col("py")) * (F.col("ilat") - F.col("py"))
-            ).alias("dist_sq"),
+            "(ilon - px) * (ilon - px) + (ilat - py) * (ilat - py) AS dist_sq",
         )
         acc = found if acc is None else acc.unionByName(found)
         acc = acc.localCheckpoint(eager=False)
@@ -128,12 +116,10 @@ def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8
         # driver-side; the collect is also the action that materializes
         # this round's checkpoint.
         guard = (r_hi * lat_span) ** 2
-        w = Window.partitionBy("query_id").orderBy(F.col("dist_sq").asc(), F.col("image_id").asc())
-        ranked = acc.withColumn("rank", F.row_number().over(w))
         kth = {
             r["query_id"]: r["dist_sq"]
-            for r in ranked.filter(F.col("rank") == F.col("k"))
-            .select("query_id", "dist_sq")
+            for r in acc.selectExpr("query_id", "k", "dist_sq", f"{_RANK} AS rank")
+            .filter("rank = k")
             .collect()
         }
         if active_ids is None:
@@ -153,10 +139,9 @@ def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8
         raise RuntimeError("kNN ring expansion did not converge")
 
     pts.unpersist()  # acc rows are checkpoint-materialized; pts is done
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_sq").asc(), F.col("image_id").asc())
     return (
         acc.dropDuplicates(["query_id", "image_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "image_id")
+        .selectExpr("query_id", "k", "image_id", f"{_RANK} AS rank")
+        .filter("rank <= k")
+        .selectExpr("query_id", "rank", "image_id")
     )

@@ -13,7 +13,6 @@ TIFF/GeoKey parse UDF, see operators/decode.py).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..cells import Z_JOIN, cell_id_expr, res_for_footprint_expr
 from ..grid import ceil_div_expr, level_dim_expr, levels_expr
@@ -23,17 +22,18 @@ def levels_df(meta: DataFrame) -> DataFrame:
     """Explode each image into its pyramid levels (cog/mod.rs:115-126 +
     encode/mod.rs:398-408 level-count rule). Output grain: (image_id, level).
     """
-    df = meta.withColumn(
-        "level", F.explode(levels_expr(F.col("w"), F.col("h"), F.col("tile_w"), F.col("tile_h")))
+    lw, lh = level_dim_expr("w", "level"), level_dim_expr("h", "level")
+    cols, rows = ceil_div_expr(lw, "tile_w"), ceil_div_expr(lh, "tile_h")
+    return meta.selectExpr(
+        "*", f"explode({levels_expr('w', 'h', 'tile_w', 'tile_h')}) AS level"
+    ).selectExpr(
+        "*",
+        f"{lw} AS lw",
+        f"{lh} AS lh",
+        f"{cols} AS cols",
+        f"{rows} AS rows",
+        f"CAST({cols} * {rows} AS INT) AS n_tiles",
     )
-    df = (
-        df.withColumn("lw", level_dim_expr(F.col("w"), F.col("level")))
-        .withColumn("lh", level_dim_expr(F.col("h"), F.col("level")))
-        .withColumn("cols", ceil_div_expr(F.col("lw"), F.col("tile_w")))
-        .withColumn("rows", ceil_div_expr(F.col("lh"), F.col("tile_h")))
-        .withColumn("n_tiles", (F.col("cols") * F.col("rows")).cast("int"))
-    )
-    return df
 
 
 def tiles_df(levels: DataFrame) -> DataFrame:
@@ -49,38 +49,35 @@ def tiles_df(levels: DataFrame) -> DataFrame:
     matched to the tile's ground footprint (north_star); ``cell_join``: the
     fixed-resolution ancestor used as the equi-join key (spatial.py).
     """
-    tw, th = F.col("tile_w"), F.col("tile_h")
-    df = (
-        levels.withColumn("tile_row", F.explode(F.sequence(F.lit(0), F.col("rows") - 1)))
-        .withColumn("tile_col", F.explode(F.sequence(F.lit(0), F.col("cols") - 1)))
-        .withColumn("tile_idx", (F.col("tile_row") * F.col("cols") + F.col("tile_col")).cast("int"))
-    )
-    lw, lh = F.col("lw"), F.col("lh")
-    u0 = F.col("tile_col") * tw / lw
-    u1 = F.least(F.lit(1.0), (F.col("tile_col") + 1) * tw / lw)
-    v0 = F.col("tile_row") * th / lh
-    v1 = F.least(F.lit(1.0), (F.col("tile_row") + 1) * th / lh)
-    dx = F.col("xmax") - F.col("xmin")
-    dy = F.col("ymax") - F.col("ymin")
-    df = (
-        df.withColumn("u0", u0)
-        .withColumn("v0", v0)
-        .withColumn("u1", u1)
-        .withColumn("v1", v1)
-        .withColumn("lon_c", F.col("xmin") + (F.col("u0") + F.col("u1")) / 2 * dx)
-        .withColumn("lat_c", F.col("ymax") - (F.col("v0") + F.col("v1")) / 2 * dy)
-        .withColumn("cell_res", res_for_footprint_expr(dx * tw / lw))
-        .withColumn("cell", cell_id_expr(F.col("lon_c"), F.col("lat_c"), F.col("cell_res")))
-        .withColumn(
-            "cell_join", cell_id_expr(F.col("lon_c"), F.col("lat_c"), F.lit(Z_JOIN))
+    u0 = "tile_col * tile_w / lw"
+    u1 = "LEAST(1.0D, (tile_col + 1) * tile_w / lw)"
+    v0 = "tile_row * tile_h / lh"
+    v1 = "LEAST(1.0D, (tile_row + 1) * tile_h / lh)"
+    lon_c = f"xmin + (({u0}) + ({u1})) / 2 * (xmax - xmin)"
+    lat_c = f"ymax - (({v0}) + ({v1})) / 2 * (ymax - ymin)"
+    cell_res = res_for_footprint_expr("(xmax - xmin) * tile_w / lw")
+    return (
+        levels.selectExpr("*", "explode(sequence(0, rows - 1)) AS tile_row")
+        .selectExpr("*", "explode(sequence(0, cols - 1)) AS tile_col")
+        .selectExpr(
+            "*",
+            "CAST(tile_row * cols + tile_col AS INT) AS tile_idx",
+            f"{u0} AS u0",
+            f"{v0} AS v0",
+            f"{u1} AS u1",
+            f"{v1} AS v1",
+            f"{lon_c} AS lon_c",
+            f"{lat_c} AS lat_c",
+            f"{cell_res} AS cell_res",
+            f"{cell_id_expr(lon_c, lat_c, cell_res)} AS cell",
+            f"{cell_id_expr(lon_c, lat_c, Z_JOIN)} AS cell_join",
         )
     )
-    return df
 
 
 def tile_assignments(meta: DataFrame) -> DataFrame:
     """The north-star stage-1 output: one row per (image, level, tile)."""
-    return tiles_df(levels_df(meta)).select(
+    return tiles_df(levels_df(meta)).selectExpr(
         "image_id",
         "level",
         "tile_idx",

@@ -122,7 +122,7 @@ def _tile_side(tiles: DataFrame) -> DataFrame:
     its payload: pre-decoded ``raw`` when the relation carries it (the
     session's raw-tile cache), else ``fmt`` + compressed ``tile_bytes``."""
     pay = ("raw",) if "raw" in tiles.columns else ("fmt", "tile_bytes")
-    return tiles.select("image_id", "level", "tile_idx", *pay)
+    return tiles.selectExpr("image_id", "level", "tile_idx", *pay)
 
 
 def _out_dims(rw: float, rh: float, mp_limit: float) -> tuple[int, int]:
@@ -336,10 +336,10 @@ def region_render(
             f"queries carry {res_cols[0]} without its partner; fixed "
             "output resolution needs BOTH res_w and res_h columns"
         )
-    q = queries.filter(F.col("kind") == "region").select(
+    q = queries.filter("kind = 'region'").selectExpr(
         "query_id", "rxmin", "rymin", "rxmax", "rymax", "mp_limit", *res_cols
     )
-    lv = levels.select(
+    lv = levels.selectExpr(
         "image_id", "level", "lw", "lh", "tile_w", "tile_h", "cols", "rows",
         "xmin", "ymin", "xmax", "ymax", "epsg", "origin_x", "origin_y", "scale_px",
         "w", "h",
@@ -351,7 +351,7 @@ def region_render(
         # price of NOT caching inside an operator (a .cache() here would
         # leak persisted partitions for the session lifetime — callers who
         # loop should persist/unpersist `wanted`-shaped inputs themselves)
-        needed = wanted.select(*keys).distinct()
+        needed = wanted.selectExpr(*keys).distinct()
         tile_side = decode_tiles_once(tiles.join(needed, keys, "left_semi"))
     else:
         tile_side = _tile_side(tiles)
@@ -391,7 +391,7 @@ def wmts_render(
 
     Output schema matches region_render (query_id, image_id, level,
     out_w, out_h, raster)."""
-    q = queries.filter(F.col("kind") == "wmts").select("query_id", "qz", "qx", "qy")
+    q = queries.filter("kind = 'wmts'").selectExpr("query_id", "qz", "qx", "qy")
     mp = tile_px * tile_px / 1e6
 
     def bounds(batches):
@@ -506,7 +506,7 @@ def region_render_blocked(
     # against region_extract (an earlier shape evaluated the join three
     # times — review r5 follow-up); only the metadata existence gate below
     # evaluates it a second time
-    pe = region_extract_picked(levels, queries).select(
+    pe = region_extract_picked(levels, queries).selectExpr(
         "query_id", "image_id", "tr0", "tr1", "tc0", "tc1", *_BLK_PARAMS
     )
     keys = ["image_id", "level", "tile_idx"]
@@ -522,9 +522,9 @@ def region_render_blocked(
     # bottleneck this operator exists to remove.
     present = (
         _explode_tiles(pe, "tr0", "tr1", "tc0", "tc1")
-        .select("query_id", *keys)
-        .join(tiles.select(*keys), keys, "left_semi")
-        .select("query_id", "image_id")
+        .selectExpr("query_id", *keys)
+        .join(tiles.selectExpr(*keys), keys, "left_semi")
+        .selectExpr("query_id", "image_id")
         .distinct()
     )
     base = pe.join(F.broadcast(present), ["query_id", "image_id"], "left_semi")
@@ -715,15 +715,16 @@ def crop_render(
     """
     u0, v0, u1, v1 = crop
     du, dv = u1 - u0, v1 - v0
-    out_h_f = F.sqrt(F.lit(mp_limit) * 1e6 / F.lit(du / dv))
-    out_w_f = F.lit(du / dv) * out_h_f
+    dbl = lambda x: f"{float(x)!r}D"  # noqa: E731  (a bare 0.5 parses as DECIMAL)
+    out_h_f = f"SQRT({dbl(mp_limit)} * 1000000.0D / {dbl(du / dv)})"
+    out_w_f = f"{dbl(du / dv)} * {out_h_f}"
     picked = _lod_pick(
-        levels, (F.col("lw") * du >= out_w_f) & (F.col("lh") * dv >= out_h_f), ["image_id"]
+        levels, f"lw * {dbl(du)} >= {out_w_f} AND lh * {dbl(dv)} >= {out_h_f}", ["image_id"]
     )
     # P6 pruning: covered tile range at the picked level
     wanted = _explode_tiles(
-        picked, *_tile_range(F.lit(u0), F.lit(u1), F.lit(v0), F.lit(v1))
-    ).select("image_id", "level", "tile_idx", "lw", "lh", "tile_w", "tile_h", "cols", "rows")
+        picked, *_tile_range(dbl(u0), dbl(u1), dbl(v0), dbl(v1))
+    ).selectExpr("image_id", "level", "tile_idx", "lw", "lh", "tile_w", "tile_h", "cols", "rows")
     joined = wanted.join(_tile_side(tiles), ["image_id", "level", "tile_idx"], "inner")
 
     def assemble(pdf: pd.DataFrame) -> dict:

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
-from ..cells import Z_JOIN, cell_xy_expr, pack_expr
+from ..cells import Z_JOIN, cell_id_expr, cell_xy_expr, pack_expr
 
 #: default salting factor for hot cells; queries explode x SALT on hot cells
 SALT = 8
@@ -37,20 +37,21 @@ HOT_FRACTION = 0.02
 # ---------------------------------------------------------------------------
 
 
-def _bbox_cells(df: DataFrame, xmin: Column, ymin: Column, xmax: Column, ymax: Column, z: int) -> DataFrame:
-    """Explode a lon/lat rect into its covering cells at resolution z.
-    Mirrors cover_bbox (cells.py) / the reference's crop->tile-range
-    enumeration (level.rs:204-231) — F.sequence + explode, fully native."""
-    zc = F.lit(z)
-    x0, y0 = cell_xy_expr(xmin, ymax, zc)  # top-left
-    x1, y1 = cell_xy_expr(xmax, ymin, zc)
-    df = (
-        df.withColumn("_cx", F.explode(F.sequence(x0, x1)))
-        .withColumn("_cy", F.explode(F.sequence(y0, y1)))
-        .withColumn("cell_join", pack_expr(zc, F.col("_cx"), F.col("_cy")))
-        .drop("_cx", "_cy")
+def _bbox_cells(df: DataFrame, rect: tuple[str, str, str, str], z: int, pad: int = 0) -> DataFrame:
+    """Explode a lon/lat rect (SQL for xmin, ymin, xmax, ymax) into its
+    covering cells at resolution z, as column ``cell_join``; ``pad`` widens
+    the cell range by that many cells on every side (packed without a
+    clamp, so a pad cell past the grid edge matches no tile). Mirrors
+    cover_bbox (cells.py) / the reference's crop->tile-range enumeration
+    (level.rs:204-231) — one sequence-product explode, fully native."""
+    xmin, ymin, xmax, ymax = rect
+    x0, y0 = cell_xy_expr(xmin, ymax, z)  # top-left
+    x1, y1 = cell_xy_expr(xmax, ymin, z)
+    cells = (
+        f"flatten(transform(sequence({x0} - {pad}, {x1} + {pad}), _cx -> "
+        f"transform(sequence({y0} - {pad}, {y1} + {pad}), _cy -> {pack_expr(z, '_cx', '_cy')})))"
     )
-    return df
+    return df.selectExpr("*", f"explode({cells}) AS cell_join")
 
 
 def hot_cells(tiles: DataFrame, fraction: float = HOT_FRACTION) -> DataFrame:
@@ -110,20 +111,19 @@ def prepare_pip_queries(queries: DataFrame) -> PreparedQueries:
     cell, bbox); polygon arrays never ride the exploded side. The explode is
     repartitioned first (query tables usually arrive as one file split, and
     a single-task explode would serialize every broadcast build)."""
-    q = queries.filter(F.col("kind") == "pip").select(
-        "query_id",
-        "poly_x",
-        "poly_y",
-        F.array_min("poly_x").alias("bxmin"),
-        F.array_min("poly_y").alias("bymin"),
-        F.array_max("poly_x").alias("bxmax"),
-        F.array_max("poly_y").alias("bymax"),
-    )
+    q = queries.filter("kind = 'pip'")
     qc = _bbox_cells(
-        q.drop("poly_x", "poly_y").repartition(F.col("query_id")),
-        F.col("bxmin"), F.col("bymin"), F.col("bxmax"), F.col("bymax"), Z_JOIN,
+        q.selectExpr(
+            "query_id",
+            "array_min(poly_x) AS bxmin",
+            "array_min(poly_y) AS bymin",
+            "array_max(poly_x) AS bxmax",
+            "array_max(poly_y) AS bymax",
+        ).repartition("query_id"),
+        ("bxmin", "bymin", "bxmax", "bymax"),
+        Z_JOIN,
     )
-    return PreparedQueries(qc, q.select("query_id", "poly_x", "poly_y"))
+    return PreparedQueries(qc, q.selectExpr("query_id", "poly_x", "poly_y"))
 
 
 def pip_join(
@@ -164,22 +164,23 @@ def pip_join(
         # passing a cached `hot`
         if hot is None:
             hot = hot_cells(tiles)
-        t = t.join(F.broadcast(hot.withColumn("_hot", F.lit(True))), "cell_join", "left")
-        t = t.withColumn(
-            "_salt",
-            F.when(F.col("_hot").isNotNull(), F.pmod(F.col("phash"), F.lit(salt))).otherwise(
-                F.lit(0)
-            ),
-        ).drop("_hot")
-        qc = qc.join(F.broadcast(hot.withColumn("_hot", F.lit(True))), "cell_join", "left")
-        qc = qc.withColumn(
-            "_salt",
-            F.explode(
-                F.when(
-                    F.col("_hot").isNotNull(), F.sequence(F.lit(0), F.lit(salt - 1))
-                ).otherwise(F.array(F.lit(0)))
-            ),
-        ).drop("_hot")
+        flag = F.broadcast(hot.selectExpr("*", "true AS _hot"))
+        t = (
+            t.join(flag, "cell_join", "left")
+            .selectExpr(
+                "*", f"CASE WHEN _hot IS NOT NULL THEN pmod(phash, {salt}) ELSE 0 END AS _salt"
+            )
+            .drop("_hot")
+        )
+        qc = (
+            qc.join(flag, "cell_join", "left")
+            .selectExpr(
+                "*",
+                f"explode(CASE WHEN _hot IS NOT NULL THEN sequence(0, {salt - 1}) "
+                "ELSE array(0) END) AS _salt",
+            )
+            .drop("_hot")
+        )
         join_keys = ["cell_join", "_salt"]
     else:
         join_keys = ["cell_join"]
@@ -189,17 +190,12 @@ def pip_join(
     if broadcast_queries:
         cand = t.join(F.broadcast(qc), join_keys, "inner")
     else:
-        qc = qc.repartitionByRange(F.col("cell_join"))
-        t = t.repartitionByRange(F.col("cell_join"))
+        qc = qc.repartitionByRange("cell_join")
+        t = t.repartitionByRange("cell_join")
         cand = t.join(qc, join_keys, "inner")
 
     # cheap native bbox prune before the refine
-    cand = cand.filter(
-        (F.col("lon_c") >= F.col("bxmin"))
-        & (F.col("lon_c") <= F.col("bxmax"))
-        & (F.col("lat_c") >= F.col("bymin"))
-        & (F.col("lat_c") <= F.col("bymax"))
-    )
+    cand = cand.filter("lon_c >= bxmin AND lon_c <= bxmax AND lat_c >= bymin AND lat_c <= bymax")
     # ship only (query_id, lon, lat) through Arrow; the polygon EDGE
     # MATRICES are captured ONCE in the UDF closure. The whole batch is
     # refined in ONE (rows x max_edges) numpy broadcast — no per-group
@@ -232,8 +228,8 @@ def pip_join(
             inside = (np.sum(straddle & (X < xint), axis=1) % 2).astype(bool)
         return pd.Series(inside)
 
-    hit = cand.filter(_refine(F.col("query_id"), F.col("lon_c"), F.col("lat_c")))
-    return hit.select("query_id", "image_id", "level", "tile_idx", "caption")
+    hit = cand.filter(_refine("query_id", "lon_c", "lat_c"))
+    return hit.selectExpr("query_id", "image_id", "level", "tile_idx", "caption")
 
 
 # ---------------------------------------------------------------------------
@@ -247,70 +243,51 @@ def _overlap_join(images: DataFrame, q: DataFrame, rect: tuple[str, str, str, st
     (xmin, ymin, xmax, ymax). The equi-join key is the image-centre cell at
     Z_JOIN against the query's broadcast Z_JOIN cover (same key as
     pip_join), then the exact rect-overlap filter runs natively."""
-    x0, y0, x1, y1 = (F.col(c) for c in rect)
-    qc = _bbox_cells(q, x0, y0, x1, y1, Z_JOIN)
-    im = images.withColumn(
-        "cell_join",
-        pack_expr(
-            F.lit(Z_JOIN),
-            *cell_xy_expr(
-                (F.col("xmin") + F.col("xmax")) / 2, (F.col("ymin") + F.col("ymax")) / 2, F.lit(Z_JOIN)
-            ),
-        ),
+    # image footprints are tiny (<= ~0.5 deg) vs Z_JOIN cells; keying the
+    # image by its centre cell and padding the query cover by one cell ring
+    # keeps the equi-join lossless for overlap tests
+    qc = _bbox_cells(q, rect, Z_JOIN, pad=1).dropDuplicates(["query_id", "cell_join"])
+    im = images.selectExpr(
+        "*", f"{cell_id_expr('(xmin + xmax) / 2', '(ymin + ymax) / 2', Z_JOIN)} AS cell_join"
     )
-    # NOTE: image footprints are tiny (<= ~0.5 deg) vs Z_JOIN cells (5.6
-    # deg); keying the image by its center cell and expanding the query bbox
-    # by one cell ring keeps the equi-join lossless for overlap tests.
-    qc = (
-        qc.withColumn("_dx", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-        .withColumn("_dy", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-        .withColumn(
-            "cell_join",
-            F.col("cell_join") + F.shiftleft(F.col("_dx").cast("long"), 29) + F.col("_dy"),
-        )
-        .drop("_dx", "_dy")
-        .dropDuplicates(["query_id", "cell_join"])
-    )
+    x0, y0, x1, y1 = rect
     cand = im.join(F.broadcast(qc), "cell_join", "inner")
-    return cand.filter(
-        (F.col("xmin") < x1) & (F.col("xmax") > x0) & (F.col("ymin") < y1) & (F.col("ymax") > y0)
+    return cand.filter(f"xmin < {x1} AND xmax > {x0} AND ymin < {y1} AND ymax > {y0}")
+
+
+def _tile_range(u0: str, u1: str, v0: str, v1: str) -> tuple[str, str, str, str]:
+    """P6: SQL for (r0, r1, c0, c1), the tile range a normalized crop
+    [u0, u1] x [v0, v1] (SQL operands) covers on a level row's tile grid
+    (floor .. ceil-1, clamped to the grid; level.rs:204-231)."""
+
+    def span(a: str, b: str, dim: str, tile: str, n: str) -> tuple[str, str]:
+        clamp = lambda e: f"GREATEST(0, LEAST({n} - 1, {e}))"  # noqa: E731
+        return clamp(f"FLOOR(({a}) * {dim} / {tile})"), clamp(f"CEIL(({b}) * {dim} / {tile}) - 1")
+
+    return (*span(v0, v1, "lh", "tile_h", "rows"), *span(u0, u1, "lw", "tile_w", "cols"))
+
+
+def _explode_tiles(
+    df: DataFrame, r0: str, r1: str, c0: str, c1: str, outer: bool = False
+) -> DataFrame:
+    """One row per tile_idx of each row's tile range r0..r1 x c0..c1 (SQL
+    operands) on its level grid (``cols``), rows outer. ``outer`` keeps a
+    row whose range is null, with a null tile_idx."""
+    ex = "explode_outer" if outer else "explode"
+    idx = (
+        f"flatten(transform(sequence({r0}, {r1}), _r -> "
+        f"transform(sequence({c0}, {c1}), _c -> CAST(_r * cols + _c AS INT))))"
     )
+    return df.selectExpr("*", f"{ex}({idx}) AS tile_idx")
 
 
-def _tile_range(u0: Column, u1: Column, v0: Column, v1: Column) -> tuple[Column, Column, Column, Column]:
-    """P6: (r0, r1, c0, c1), the tile range a normalized crop
-    [u0, u1] x [v0, v1] covers on a level row's tile grid (floor ..
-    ceil-1, clamped to the grid; level.rs:204-231)."""
-    tw, th, lw, lh = F.col("tile_w"), F.col("tile_h"), F.col("lw"), F.col("lh")
-    c0 = F.greatest(F.lit(0), F.least(F.col("cols") - 1, F.floor(u0 * lw / tw)))
-    c1 = F.greatest(F.lit(0), F.least(F.col("cols") - 1, F.ceil(u1 * lw / tw) - 1))
-    r0 = F.greatest(F.lit(0), F.least(F.col("rows") - 1, F.floor(v0 * lh / th)))
-    r1 = F.greatest(F.lit(0), F.least(F.col("rows") - 1, F.ceil(v1 * lh / th) - 1))
-    return r0, r1, c0, c1
-
-
-def _explode_tiles(df: DataFrame, r0, r1, c0, c1, outer: bool = False) -> DataFrame:
-    """One row per tile_idx of each row's tile range r0..r1 x c0..c1
-    (columns or column names) on its level grid (``cols``). ``outer``
-    keeps rows whose range is null."""
-    ex = F.explode_outer if outer else F.explode
-    return (
-        df.withColumn("_r", ex(F.sequence(r0, r1)))
-        .withColumn("_c", ex(F.sequence(c0, c1)))
-        .withColumn("tile_idx", (F.col("_r") * F.col("cols") + F.col("_c")).cast("int"))
-        .drop("_r", "_c")
-    )
-
-
-def _lod_pick(cand: DataFrame, ok: Column, by: list[str]) -> DataFrame:
+def _lod_pick(cand: DataFrame, ok: str, by: list[str]) -> DataFrame:
     """The LOD pick: per ``by`` group keep the greatest level where ``ok``
-    holds, else level 0."""
-    from pyspark.sql.window import Window
-
+    (SQL) holds, else level 0."""
     return (
-        cand.withColumn("_ok", F.when(ok, F.col("level")).otherwise(F.lit(0)))
-        .withColumn("_pick", F.max("_ok").over(Window.partitionBy(*by)))
-        .filter(F.col("level") == F.col("_pick"))
+        cand.selectExpr("*", f"CASE WHEN {ok} THEN level ELSE 0 END AS _ok")
+        .selectExpr("*", f"max(_ok) OVER (PARTITION BY {', '.join(by)}) AS _pick")
+        .filter("level = _pick")
         .drop("_ok", "_pick")
     )
 
@@ -324,44 +301,41 @@ def region_extract_picked(levels: DataFrame, queries: DataFrame) -> DataFrame:
 
     Output columns: query_id, image_id, level + level params + the query's
     render params + tr0/tr1/tc0/tc1."""
-    q = queries.filter(F.col("kind") == "region").select(
-        "query_id", "rxmin", "rymin", "rxmax", "rymax", "mp_limit"
-    )
     # output dims from megapixel cap + aspect (O4, util.rs:131-142)
-    rw = F.col("rxmax") - F.col("rxmin")
-    rh = F.col("rymax") - F.col("rymin")
-    out_h = F.sqrt(F.col("mp_limit") * 1e6 / (rw / rh))
-    out_w = (rw / rh) * out_h
-    q = q.withColumn("req_x", rw / out_w).withColumn("req_y", rh / out_h)
+    aspect = "((rxmax - rxmin) / (rymax - rymin))"
+    out_h = f"SQRT(mp_limit * 1000000.0D / {aspect})"
+    out_w = f"({aspect} * {out_h})"
+    q = queries.filter("kind = 'region'").selectExpr(
+        "query_id", "rxmin", "rymin", "rxmax", "rymax", "mp_limit",
+        f"(rxmax - rxmin) / {out_w} AS req_x",
+        f"(rymax - rymin) / {out_h} AS req_y",
+    )
 
     cand = _overlap_join(levels, q, ("rxmin", "rymin", "rxmax", "rymax"))
     # LOD: greatest level whose pixel scale beats the requirement, else 0
-    ps_x = (F.col("xmax") - F.col("xmin")) / F.col("lw")
-    ps_y = (F.col("ymax") - F.col("ymin")) / F.col("lh")
     picked = _lod_pick(
         cand,
-        F.greatest(ps_x, ps_y) < F.least(F.col("req_x"), F.col("req_y")),
+        "GREATEST((xmax - xmin) / lw, (ymax - ymin) / lh) < LEAST(req_x, req_y)",
         ["query_id", "image_id"],
     )
     # crop rect -> normalized image coords (P3 affine with the y flip),
     # clamped to [0,1] (UnitFloat, primatives.rs:48-50)
-    dx = F.col("xmax") - F.col("xmin")
-    dy = F.col("ymax") - F.col("ymin")
-    clamp = lambda c: F.greatest(F.lit(0.0), F.least(F.lit(1.0), c))  # noqa: E731
-    picked = (
-        picked.withColumn("cu0", clamp((F.col("rxmin") - F.col("xmin")) / dx))
-        .withColumn("cu1", clamp((F.col("rxmax") - F.col("xmin")) / dx))
-        .withColumn("cv0", clamp((F.col("ymax") - F.col("rymax")) / dy))
-        .withColumn("cv1", clamp((F.col("ymax") - F.col("rymin")) / dy))
+    clamp = lambda c: f"GREATEST(0.0D, LEAST(1.0D, {c}))"  # noqa: E731
+    picked = picked.selectExpr(
+        "*",
+        f"{clamp('(rxmin - xmin) / (xmax - xmin)')} AS cu0",
+        f"{clamp('(rxmax - xmin) / (xmax - xmin)')} AS cu1",
+        f"{clamp('(ymax - rymax) / (ymax - ymin)')} AS cv0",
+        f"{clamp('(ymax - rymin) / (ymax - ymin)')} AS cv1",
     )
-    r0, r1, c0, c1 = _tile_range(F.col("cu0"), F.col("cu1"), F.col("cv0"), F.col("cv1"))
-    picked = (
-        picked.withColumn("tr0", r0.cast("int"))
-        .withColumn("tr1", r1.cast("int"))
-        .withColumn("tc0", c0.cast("int"))
-        .withColumn("tc1", c1.cast("int"))
+    r0, r1, c0, c1 = _tile_range("cu0", "cu1", "cv0", "cv1")
+    return picked.selectExpr(
+        "*",
+        f"CAST({r0} AS INT) AS tr0",
+        f"CAST({r1} AS INT) AS tr1",
+        f"CAST({c0} AS INT) AS tc0",
+        f"CAST({c1} AS INT) AS tc1",
     )
-    return picked
 
 
 def region_extract(levels: DataFrame, queries: DataFrame) -> DataFrame:
@@ -372,7 +346,7 @@ def region_extract(levels: DataFrame, queries: DataFrame) -> DataFrame:
     Output: (query_id, image_id, level, tile_idx) — the exploded form of
     region_extract_picked's (tr0..tr1) x (tc0..tc1) rectangle."""
     out = _explode_tiles(region_extract_picked(levels, queries), "tr0", "tr1", "tc0", "tc1")
-    return out.select("query_id", "image_id", "level", "tile_idx")
+    return out.selectExpr("query_id", "image_id", "level", "tile_idx")
 
 
 # ---------------------------------------------------------------------------

@@ -2,6 +2,9 @@
 
 Arrow is mandatory (every heavy op is a vectorized pandas UDF), AQE is on
 (skew-join backstop; explicit salting remains the first line of defense).
+PySpark's call-site capture (``spark.python.sql.dataFrameDebugging``) is
+off: it adds about five py4j round trips to every Column/functions call
+while a plan is built, and the operators plan on the driver between jobs.
 """
 
 from __future__ import annotations
@@ -9,6 +12,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """Heap for the local-mode driver, which is also the executor: a
+    quarter of the host's RAM (/proc/meminfo MemTotal), at least 1 GB and
+    at most 4 GB. The Python workers and the OS page cache need the rest."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{max(1, min(4, int(kb / 1024 / 1024 / 4)))}g"
 
 
 def get_spark(
@@ -30,7 +42,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
+        )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )

@@ -677,6 +677,45 @@ class TestCatmullRom:
             assert out.shape == ((11, 17) if len(shape) == 2 else (11, 17, shape[2]))
 
 
+class TestCorruptEntropySegment:
+    """A scan that ends early (corrupt or cut entropy-coded segment) is a
+    typed JpegError, not the IndexError of the refill reading past the
+    zero padding."""
+
+    def test_stomped_tile_payload_raises_jpeg_error(self):
+        """4 bytes 00FF00FF in the middle of each level-0 tile payload of a
+        JPEG COG (the stomp of tools/mutation_probe.stomp_tile): the FF00
+        destuffs and the next FF ends the scan early."""
+        from cloudtiff_spark import tiff
+        from cloudtiff_spark.jpeg import JpegError
+
+        img = np.random.default_rng(7).integers(0, 256, size=(300, 260, 3), dtype=np.uint8)
+        data = tiff.encode_cog(img, 4326, 10.0, 50.0, 1e-4, compression=tiff.COMPRESSION_JPEG)
+        info = tiff.cog_info(data)
+        lev = info["levels"][0]
+        assert len(lev["offsets"]) > 1
+        for ti, (off, cnt) in enumerate(zip(lev["offsets"], lev["byte_counts"])):
+            stomped = bytearray(data)
+            pos = off + cnt // 2
+            stomped[pos : pos + 4] = b"\x00\xff\x00\xff"
+            with pytest.raises(JpegError):
+                tiff.decode_tile(bytes(stomped), info, 0, ti)
+
+    @pytest.mark.parametrize("progressive", [False, True])
+    def test_cut_scan_raises_jpeg_error(self, progressive):
+        from cloudtiff_spark.jpeg import (
+            JpegError,
+            decode_jpeg,
+            encode_jpeg,
+            encode_jpeg_progressive,
+        )
+
+        img = np.random.default_rng(7).integers(0, 256, size=(64, 64, 3), dtype=np.uint8)
+        full = (encode_jpeg_progressive if progressive else encode_jpeg)(img)
+        with pytest.raises(JpegError, match="entropy-coded segment ends"):
+            decode_jpeg(full[: int(len(full) * 0.3)] + b"\xff\xd9")
+
+
 class TestReviewHardening:
     """Round-4 self-review fixes: untyped-exception paths and edge modes."""
 

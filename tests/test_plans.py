@@ -71,6 +71,64 @@ class TestPlanShape:
         assert "PushedFilters: [IsNotNull(epsg), EqualTo(epsg,4326)]" in plan
 
 
+class TestPlanBuildRoundTrips:
+    """Building the benchmarked plans must stay a few hundred py4j round
+    trips: each stage is one selectExpr of SQL text, and get_spark turns
+    off PySpark's per-call call-site capture. A projection written as
+    chained Column calls costs round trips per operator and breaks these
+    budgets by thousands."""
+
+    #: py4j commands per build, with headroom over the measured 170 / 280 / 130
+    BUDGET = {"pip": 400, "region": 500, "crop": 250}
+
+    @staticmethod
+    def _commands(spark, build) -> int:
+        """py4j commands this thread sends while ``build()`` runs; garbage
+        collection notices (sent by py4j's finalizer thread) do not count."""
+        import threading
+
+        client = spark.sparkContext._gateway._gateway_client
+        send = client.send_command
+        me = threading.get_ident()
+        n = 0
+
+        def counting(command, *args, **kwargs):
+            nonlocal n
+            if threading.get_ident() == me and not command.startswith("m\n"):
+                n += 1
+            return send(command, *args, **kwargs)
+
+        client.send_command = counting
+        try:
+            build()
+        finally:
+            del client.send_command  # the class method again
+        return n
+
+    def test_build_budgets(self, spark, sf_small):
+        from cloudtiff_spark.operators.meta import levels_df, tile_assignments
+        from cloudtiff_spark.operators.render import crop_render, region_render
+        from cloudtiff_spark.operators.spatial import hot_cells, pip_join, prepare_pip_queries
+        from cloudtiff_spark.operators.tiling import build_tiles
+
+        meta = spark.read.parquet(os.path.join(sf_small, "images_meta.parquet"))
+        queries = spark.read.parquet(os.path.join(sf_small, "queries.parquet"))
+        images = spark.read.parquet(os.path.join(sf_small, "images.parquet"))
+        hot = hot_cells(tile_assignments(meta))
+        prepared = prepare_pip_queries(queries)
+        prepared.polys_dict()  # the one collect pip_join would run
+        levels, tiles = levels_df(meta), build_tiles(images)
+        builds = {
+            "pip": lambda: pip_join(tile_assignments(meta), queries, hot=hot, prepared=prepared),
+            "region": lambda: region_render(levels, tiles, queries),
+            "crop": lambda: crop_render(levels, tiles, (0.1, 0.2, 0.9, 0.8), mp_limit=0.01),
+        }
+        for name, build in builds.items():
+            build()  # first-use lookups are not per-build cost
+            n = self._commands(spark, build)
+            assert n <= self.BUDGET[name], (name, n)
+
+
 class TestLshPayloadShape:
     """The LSH fan-outs must stay payload-free: the band/bucket (minhash)
     and table/bucket (cosine) explodes may carry only ids + keys. Shingle

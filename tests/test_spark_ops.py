@@ -31,13 +31,18 @@ def meta_pd(tables):
 
 class TestTileAssignments:
     def test_matches_bruteforce(self, tables, meta_pd):
+        """Every computed column against the grid / cells python references,
+        doubles compared exactly: the SQL fragments must keep the literal
+        types (a bare 2.0 is DECIMAL in Spark SQL) and the operation order
+        of the references."""
         from cloudtiff_spark.operators.meta import tile_assignments
 
+        cols_out = ("tile_col", "tile_row", "cell", "cell_res", "cell_join", "lon_c", "lat_c")
         got = {
-            (r.image_id, r.level, r.tile_idx, r.cell)
+            (r.image_id, r.level, r.tile_idx): tuple(r[c] for c in cols_out)
             for r in tile_assignments(tables[1]).collect()
         }
-        want = set()
+        want = {}
         for m in meta_pd.itertuples():
             n_lv = grid.num_levels(m.w, m.h, TILE, TILE)
             for lv in range(n_lv):
@@ -49,8 +54,18 @@ class TestTileAssignments:
                         lon = m.xmin + (u0 + u1) / 2 * (m.xmax - m.xmin)
                         lat = m.ymax - (v0 + v1) / 2 * (m.ymax - m.ymin)
                         z = cells.res_for_footprint((m.xmax - m.xmin) * TILE / lw)
-                        want.add((m.image_id, lv, r * cols + c, cells.cell_id(lon, lat, z)))
-        assert got == want
+                        want[(m.image_id, lv, r * cols + c)] = (
+                            c,
+                            r,
+                            cells.cell_id(lon, lat, z),
+                            z,
+                            cells.cell_id(lon, lat, cells.Z_JOIN),
+                            lon,
+                            lat,
+                        )
+        assert got.keys() == want.keys()
+        for key, row in want.items():
+            assert got[key] == row, key
 
 
 def _brute_pip(meta_pd, queries_pd):
@@ -136,7 +151,7 @@ class TestPipJoin:
             [("img", 0, 0, "c", 0.0, 0.0)],
             "image_id string, level int, tile_idx int, caption string, "
             "lon_c double, lat_c double",
-        ).withColumn("cell_join", cell_id_expr(F.col("lon_c"), F.col("lat_c"), F.lit(Z_JOIN)))
+        ).withColumn("cell_join", F.expr(cell_id_expr("lon_c", "lat_c", Z_JOIN)))
         ang = np.pi / 2 + np.arange(5) * (4 * np.pi / 5)  # skip-2 vertex order
         star = spark.createDataFrame(
             [("pip", "q", [float(v) for v in np.cos(ang)], [float(v) for v in np.sin(ang)])],

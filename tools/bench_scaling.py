@@ -25,7 +25,6 @@ def run(cpus: int, sf_dir: str) -> dict:
     env.setdefault("BENCH_ITERS", "5")
     env.setdefault("BENCH_REPL", "128")  # see bench.py — keeps the parallel
     # region dominant over fixed per-job cost at sandbox data sizes
-    env.setdefault("SPARK_DRIVER_MEMORY", "24g")
     env["BENCH_HEADLINE_ONLY"] = "1"
     cmd = [sys.executable, os.path.join(REPO, "bench.py")]
     if cpus < (os.cpu_count() or cpus):

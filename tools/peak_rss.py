@@ -3,8 +3,8 @@
 Usage: python tools/peak_rss.py <query> <sf_dir>
 
 Runs ``__spark_entry__.queries()[<query>]`` once in a fresh local session
-(``SPARK_GRAFT_CPUS`` cores; heap ``SPARK_DRIVER_MEMORY``, default a quarter
-of host RAM capped at 4g, the perfbench rule) and evaluates its digest
+(``SPARK_GRAFT_CPUS`` cores; heap ``SPARK_DRIVER_MEMORY``, else get_spark's
+default: a quarter of host RAM, 1-4 GB) and evaluates its digest
 ``(count, bit_xor(xxhash64(*cols)))`` as the single action. Prints one JSON
 line: rows, digest, wall time of building the query plus that action
 (session caches are built inside it, so the run is cold), and the peak RSS
@@ -30,9 +30,6 @@ def main() -> int:
     name, sf_dir = sys.argv[1:]
 
     from perfbench.procs import RssSampler
-    from perfbench.worker import driver_memory_gb
-
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", f"{driver_memory_gb()}g")
     from pyspark.sql import functions as F
 
     import __spark_entry__ as E
@@ -41,6 +38,7 @@ def main() -> int:
     spark = get_spark("peak_rss")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1).count()
+    heap = spark.conf.get("spark.driver.memory")
     try:
         with RssSampler() as sampler:
             sampler.arm()
@@ -58,7 +56,7 @@ def main() -> int:
             {
                 "query": name,
                 "sf_dir": sf_dir,
-                "heap": os.environ["SPARK_DRIVER_MEMORY"],
+                "heap": heap,
                 "rows": n,
                 "digest": [n, x],
                 "wall_s": round(wall, 2),

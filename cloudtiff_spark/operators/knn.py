@@ -47,10 +47,10 @@ def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8
     from the measured point density so typical queries settle immediately
     (the old fixed 0,1,2,4,... schedule needed 4-6 driver rounds, each a
     full Spark job on this fixture); termination is decided DRIVER-side
-    from the collected k-th-distance rows (one tiny action per round —
-    #knn-queries rows of 3 scalars, query metadata not payload, same
-    contract as prepare_pip_queries.polys_dict) instead of a status join
-    plus a separate isEmpty action; ring growth is x4."""
+    from the collected k-th-distance rows (the one action per round —
+    one row per knn query with its k-th distance or null, query metadata
+    not payload, same contract as prepare_pip_queries.polys_dict) instead
+    of a status join plus a separate isEmpty action; ring growth is x4."""
     n = 1 << z
     lat_span = 180.0 / n  # min cell span in degrees
 
@@ -76,7 +76,7 @@ def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8
     while (2 * r0 + 1) ** 2 * density < 4.0 * k_hint and r0 < n:
         r0 += 1
 
-    active_ids: set | None = None  # None = all; else the still-active set
+    active = q  # the still-active queries
     acc: DataFrame | None = None
     r_lo = 0  # rings [r_lo, r_hi] scanned this round
     r_hi = r0
@@ -85,12 +85,6 @@ def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8
         # [r_lo, r_hi]) — O(annulus), not O(square): rows with |dy| >= r_lo
         # span the full dx range; interior rows only the two side strips.
         # (r_lo == 0 always takes the full-range branch, so no duplicates.)
-        # isin over the active-id list is right at the query counts this
-        # operator sees (the vector side is small by design — pip_join
-        # broadcasts it whole); a service with 10^5+ concurrent knn
-        # queries should swap this for a left_anti join against a
-        # done-ids relation to keep the per-round plan size bounded
-        active = q if active_ids is None else q.filter(F.col("query_id").isin(list(active_ids)))
         # one (icx, icy) struct per ring cell, rows (_dy) outer
         dx = (
             f"CASE WHEN abs(_dy) >= {r_lo} THEN sequence({-r_hi}, {r_hi}) "
@@ -111,28 +105,40 @@ def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8
         acc = acc.localCheckpoint(eager=False)
 
         # a query is settled when its k-th candidate beats the ring bound,
-        # or the whole world has been scanned. The k-th rows are tiny
-        # (one per query that HAS k candidates) — collect them and decide
-        # driver-side; the collect is also the action that materializes
-        # this round's checkpoint.
+        # or the whole world has been scanned. One tiny collect per round
+        # decides it driver-side: per query, its k-th distance, or null
+        # while it holds fewer than k candidates — each active query adds
+        # one null-distance row, ranked after its candidates, which is the
+        # row kept when no k-th exists. Settled queries' rows come back
+        # too, but their candidates never change while the bound only
+        # grows, so they stay settled. The collect is also the action that
+        # materializes this round's checkpoint.
         guard = (r_hi * lat_span) ** 2
-        kth = {
-            r["query_id"]: r["dist_sq"]
-            for r in acc.selectExpr("query_id", "k", "dist_sq", f"{_RANK} AS rank")
-            .filter("rank = k")
-            .collect()
-        }
-        if active_ids is None:
-            active_ids = {r["query_id"] for r in q.select("query_id").collect()}
-        world_scanned = r_hi >= n
-        if world_scanned:
-            active_ids = set()
-        else:
-            active_ids = {
-                qid for qid in active_ids if not (qid in kth and kth[qid] <= guard)
-            }
-        if not active_ids:
+        kth = (
+            acc.unionByName(
+                active.selectExpr(
+                    "query_id", "k", "CAST(NULL AS STRING) AS image_id",
+                    "CAST(NULL AS DOUBLE) AS dist_sq",
+                )
+            )
+            .selectExpr(
+                "query_id", "k", "dist_sq",
+                "row_number() OVER (PARTITION BY query_id "
+                "ORDER BY dist_sq ASC NULLS LAST, image_id ASC) AS rank",
+            )
+            .filter("rank = k OR (dist_sq IS NULL AND rank < k)")
+        )
+        active_ids = [
+            r["query_id"] for r in kth.collect() if r["dist_sq"] is None or r["dist_sq"] > guard
+        ]
+        if not active_ids or r_hi >= n:
             break
+        # isin over the active-id list is right at the query counts this
+        # operator sees (the vector side is small by design — pip_join
+        # broadcasts it whole); a service with 10^5+ concurrent knn
+        # queries should swap this for a left_anti join against a
+        # done-ids relation to keep the per-round plan size bounded
+        active = q.filter(F.col("query_id").isin(active_ids))
         r_lo = r_hi + 1
         r_hi = max(1, r_hi * 4)  # geometric ring growth
     else:

@@ -2,10 +2,10 @@
 
 The benchmark stage (BASELINE.json metric): tile assignment -> cell-keyed
 equi-join against the vector (query) side -> exact refine. Join strategy is
-explicit (north_rule): pip_join broadcasts the query cover unless the caller
-passes ``broadcast_queries=False``, which range-repartitions both sides on
-the cell key instead; hot cells (the fixture plants 3 hot regions) are
-salted with ``phash % S`` before the shuffle.
+explicit (north_rule): pip_join broadcasts the query cover, which is small
+by design (one row per (query, cell)); hot cells (the fixture plants 3 hot
+regions) are salted with ``phash % S`` on the tile side and the query cover
+is exploded x S on those cells.
 
 Reference analogs: the tile-cache hash join (render/tiles.rs:26-57,
 renderer.rs:137-175) and the crop -> tile-range pruning (level.rs:204-231);
@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
@@ -130,7 +130,6 @@ def pip_join(
     tiles: DataFrame,
     queries: DataFrame,
     salt: int = SALT,
-    broadcast_queries: bool = True,
     hot: DataFrame | None = None,
     refine: str = "arrow_bcast",
     prepared: PreparedQueries | None = None,
@@ -185,14 +184,7 @@ def pip_join(
     else:
         join_keys = ["cell_join"]
 
-    # the query cover is small and broadcast by default; at 10^12-image
-    # scale broadcast_queries=False range-repartitions both sides instead
-    if broadcast_queries:
-        cand = t.join(F.broadcast(qc), join_keys, "inner")
-    else:
-        qc = qc.repartitionByRange("cell_join")
-        t = t.repartitionByRange("cell_join")
-        cand = t.join(qc, join_keys, "inner")
+    cand = t.join(F.broadcast(qc), join_keys, "inner")
 
     # cheap native bbox prune before the refine
     cand = cand.filter("lon_c >= bxmin AND lon_c <= bxmax AND lat_c >= bymin AND lat_c <= bymax")
@@ -356,24 +348,6 @@ def region_extract(levels: DataFrame, queries: DataFrame) -> DataFrame:
 _LAT_LIMIT = 85.05112878  # web-mercator clamp (wmts.rs:9-11)
 
 
-def _sinh(x: Column) -> Column:
-    # spelled out for DuckDB-oracle expression parity (no sinh in DuckDB 1.0)
-    return (F.exp(x) - F.exp(-x)) / 2.0
-
-
-def _merc_x(lon: Column, n: Column) -> Column:
-    return F.floor((lon + 180.0) / 360.0 * n)
-
-
-def _merc_y(lat: Column, n: Column) -> Column:
-    lat_c = F.greatest(F.lit(-_LAT_LIMIT), F.least(F.lit(_LAT_LIMIT), lat))
-    t = F.tan(F.radians(lat_c))
-    # asinh spelled out (ln(t+sqrt(t^2+1))) so the DuckDB oracle (which has
-    # no asinh) evaluates the byte-identical expression tree
-    asinh_t = F.log(t + F.sqrt(t * t + 1.0))
-    return F.floor((1.0 - asinh_t / float(np.pi)) / 2.0 * n)
-
-
 def wmts_enumerate(meta: DataFrame, max_z: int = 18, tile_px: int = 256) -> DataFrame:
     """Per image: all web-mercator (z, x, y) tiles covering its bounds for
     z in [min_z, max_z_img] (tile-tree enumeration, wmts.rs:22-113):
@@ -385,28 +359,34 @@ def wmts_enumerate(meta: DataFrame, max_z: int = 18, tile_px: int = 256) -> Data
 
     Output: (image_id, z, x, y). Pure native math: log2/floor/asinh/tan.
     """
-    span_x = F.col("xmax") - F.col("xmin")
-    s_x = span_x / F.col("w")  # base-level deg/px
     # cap min_z at max_z: tiny images enumerate exactly one tile at max_z.
-    # (also keeps F.sequence ascending — Spark would happily generate a
+    # (also keeps the sequence ascending — Spark would happily generate a
     # DESCENDING sequence for min_z > max_z, DuckDB an empty one)
-    min_z = F.least(F.lit(max_z), F.greatest(F.lit(0), F.floor(F.log2(360.0 / span_x)).cast("int")))
-    max_z_img = F.least(
-        F.lit(max_z),
-        F.greatest(min_z, F.ceil(F.log2(360.0 / (s_x * tile_px))).cast("int")),
+    min_z = f"least({max_z}, greatest(0, CAST(floor(log2(360.0D / (xmax - xmin))) AS INT)))"
+    # s_x = (xmax - xmin) / w: the base level's deg/px
+    max_z_img = (
+        f"least({max_z}, greatest({min_z}, "
+        f"CAST(ceil(log2(360.0D / ((xmax - xmin) / w * {tile_px}))) AS INT)))"
     )
-    df = meta.withColumn("z", F.explode(F.sequence(min_z, max_z_img)))
-    n = F.pow(F.lit(2.0), F.col("z")).cast("long")
-    clampn = lambda c: F.greatest(F.lit(0).cast("long"), F.least(n - 1, c))  # noqa: E731
-    x0 = clampn(_merc_x(F.col("xmin"), n))
-    x1 = clampn(_merc_x(F.col("xmax"), n))
-    y0 = clampn(_merc_y(F.col("ymax"), n))  # ymax (north) -> smaller y
-    y1 = clampn(_merc_y(F.col("ymin"), n))
-    df = (
-        df.withColumn("x", F.explode(F.sequence(x0, x1)))
-        .withColumn("y", F.explode(F.sequence(y0, y1)))
+    n = "CAST(power(2.0D, z) AS BIGINT)"
+
+    def clamp(c: str) -> str:
+        return f"greatest(CAST(0 AS BIGINT), least({n} - 1, {c}))"
+
+    def merc_y(lat: str) -> str:
+        t = f"tan(radians(greatest({-_LAT_LIMIT}D, least({_LAT_LIMIT}D, {lat}))))"
+        # asinh spelled out (ln(t+sqrt(t^2+1))) so the DuckDB oracle (which
+        # has no asinh) evaluates the byte-identical expression tree
+        return clamp(f"floor((1.0D - ln({t} + sqrt({t} * {t} + 1.0D)) / {np.pi}D) / 2.0D * {n})")
+
+    x0, x1 = (clamp(f"floor(({lon} + 180.0D) / 360.0D * {n})") for lon in ("xmin", "xmax"))
+    return (
+        meta.selectExpr("*", f"explode(sequence({min_z}, {max_z_img})) AS z")
+        .selectExpr("*", f"explode(sequence({x0}, {x1})) AS x")
+        # ymax (north) -> smaller y
+        .selectExpr("*", f"explode(sequence({merc_y('ymax')}, {merc_y('ymin')})) AS y")
+        .selectExpr("image_id", "z", "CAST(x AS BIGINT) AS x", "CAST(y AS BIGINT) AS y")
     )
-    return df.select("image_id", "z", F.col("x").cast("long"), F.col("y").cast("long"))
 
 
 def slippy_bounds_np(qx, qy, qz):
@@ -437,19 +417,20 @@ def wmts_lookup(meta: DataFrame, queries: DataFrame) -> DataFrame:
     via atan(sinh(...)), then a native bbox-overlap join. Output:
     (query_id, image_id).
     """
-    q = queries.filter(F.col("kind") == "wmts").select("query_id", "qx", "qy", "qz")
-    n = F.pow(F.lit(2.0), F.col("qz")).cast("long")
-    q = (
-        q.withColumn("t_xmin", F.col("qx") / n * 360.0 - 180.0)
-        .withColumn("t_xmax", (F.col("qx") + 1) / n * 360.0 - 180.0)
-        .withColumn(
-            "t_ymax",
-            F.degrees(F.atan(_sinh(float(np.pi) * (1.0 - 2.0 * F.col("qy") / n)))),
-        )
-        .withColumn(
-            "t_ymin",
-            F.degrees(F.atan(_sinh(float(np.pi) * (1.0 - 2.0 * (F.col("qy") + 1) / n)))),
-        )
+    n = "CAST(power(2.0D, qz) AS BIGINT)"
+
+    def lat(qy: str) -> str:
+        v = f"(1.0D - {qy} * 2.0D / {n}) * {np.pi}D"
+        # sinh spelled out for DuckDB-oracle expression parity (no sinh in
+        # DuckDB 1.0)
+        return f"degrees(atan((exp({v}) - exp(-({v}))) / 2.0D))"
+
+    q = queries.filter("kind = 'wmts'").selectExpr(
+        "query_id", "qx", "qy", "qz",
+        f"qx / {n} * 360.0D - 180.0D AS t_xmin",
+        f"(qx + 1) / {n} * 360.0D - 180.0D AS t_xmax",
+        f"{lat('qy')} AS t_ymax",
+        f"{lat('(qy + 1)')} AS t_ymin",
     )
     hit = _overlap_join(meta, q, ("t_xmin", "t_ymin", "t_xmax", "t_ymax"))
-    return hit.select("query_id", "image_id")
+    return hit.selectExpr("query_id", "image_id")

@@ -29,13 +29,9 @@ def _meta_df(spark, image_id, w, h, c, dtype, epsg=32633, ox=500000.0, oy=520000
     )
 
 
-def _blocked_bytes(spark, arr, image_id="img", tile=64, **kw):
-    """Run the full distributed path for one array, return the COG bytes."""
-    from cloudtiff_spark.operators.cogsink import (
-        assemble_cogs,
-        blocks_from_images,
-        encode_cog_blocked,
-    )
+def _encoded(spark, arr, image_id="img", tile=64, **kw):
+    """encode_cog_blocked over one array: (tile relation, images_meta)."""
+    from cloudtiff_spark.operators.cogsink import blocks_from_images, encode_cog_blocked
 
     if arr.ndim == 2:
         arr = arr[:, :, None]
@@ -46,8 +42,15 @@ def _blocked_bytes(spark, arr, image_id="img", tile=64, **kw):
         "image_id string, raster binary, w int, h int, c int, dtype string",
     )
     blocks = blocks_from_images(images, tile=tile)
-    tiles = encode_cog_blocked(blocks, meta, tile=tile, **kw)
-    rows = assemble_cogs(tiles, meta, tile=tile, **kw).collect()
+    return encode_cog_blocked(blocks, meta, tile=tile, **kw), meta
+
+
+def _blocked_bytes(spark, arr, image_id="img", tile=64, **kw):
+    """Run the full distributed path for one array, return the COG bytes."""
+    from cloudtiff_spark.operators.cogsink import assemble_cogs
+
+    tiles, meta = _encoded(spark, arr, image_id, tile, **kw)
+    rows = assemble_cogs(tiles, meta).collect()
     assert len(rows) == 1
     return bytes(rows[0]["cog"])
 
@@ -109,7 +112,7 @@ def test_blocked_multi_image(spark):
         "origin_x double, origin_y double, scale_px double",
     )
     tiles = encode_cog_blocked(blocks_from_images(images, tile=64), meta, tile=64)
-    for row in assemble_cogs(tiles, meta, tile=64).collect():
+    for row in assemble_cogs(tiles, meta).collect():
         assert bytes(row["cog"]) == singles[row["image_id"]], row["image_id"]
 
 
@@ -129,7 +132,7 @@ def test_ranged_writer_streams_identical_file(spark, tmp_path):
     )
     tiles = encode_cog_blocked(blocks_from_images(images, tile=64), meta, tile=64)
     p = str(tmp_path / "big.tif")
-    n = write_cog_ranged(tiles, meta, p, tile=64)
+    n = write_cog_ranged(tiles, meta, p)
     data = open(p, "rb").read()
     assert n == len(data) == len(single)
     assert data == single
@@ -177,7 +180,7 @@ def test_assemble_rejects_missing_tiles(spark):
     tiles = encode_cog_blocked(blocks_from_images(images, tile=64), meta, tile=64)
     broken = tiles.filter("NOT (level = 0 AND tile_idx = 1)")
     with pytest.raises(Exception, match="tiles"):
-        assemble_cogs(broken, meta, tile=64).collect()
+        assemble_cogs(broken, meta).collect()
 
 
 def test_assemble_rejects_duplicate_tiles(spark):
@@ -200,7 +203,7 @@ def test_assemble_rejects_duplicate_tiles(spark):
     dup = tiles.filter("level = 0 AND tile_idx = 2")
     broken = tiles.filter("NOT (level = 0 AND tile_idx = 1)").unionByName(dup)
     with pytest.raises(Exception, match="duplicate tile_idx"):
-        assemble_cogs(broken, meta, tile=64).collect()
+        assemble_cogs(broken, meta).collect()
 
 
 def test_render_blocks_to_cogs_end_to_end(spark, sf_small):
@@ -266,9 +269,9 @@ def test_jpeg_quality_rides_tile_relation(spark):
     """Review finding r6: assemble rebuilt the tag-347 tables from its own
     quality default — a mismatch with the encode-time quality pairs wrong
     DQT tables with the coefficients (decodes without error, wrong
-    pixels). The encode-time quality now rides the tile relation, so the
-    natural pipe (encode -> assemble with default quality) stays
-    byte-identical to encode_cog at the true quality."""
+    pixels). The encode-time quality now rides the tile relation and the
+    assembler takes none, so encode -> assemble stays byte-identical to
+    encode_cog at the true quality."""
     from cloudtiff_spark.operators.cogsink import (
         assemble_cogs,
         blocks_from_images,
@@ -286,8 +289,8 @@ def test_jpeg_quality_rides_tile_relation(spark):
     tiles = encode_cog_blocked(
         blocks, meta, tile=64, compression=COMPRESSION_JPEG, quality=70
     )
-    # note: NO quality passed here — it must come from the tile relation
-    rows = assemble_cogs(tiles, meta, tile=64, compression=COMPRESSION_JPEG).collect()
+    # the assembler takes no quality: it comes from the tile relation
+    rows = assemble_cogs(tiles, meta).collect()
     single = encode_cog(
         arr, 32633, 500000.0, 5200000.0, 10.0, tile=64,
         compression=COMPRESSION_JPEG, quality=70,
@@ -320,7 +323,7 @@ def test_blocked_sparse_matches_single_pass(spark):
     )
     blocks = blocks_from_images(images, tile=64)
     tiles = encode_cog_blocked(blocks, meta, tile=64, sparse=True)
-    rows = assemble_cogs(tiles, meta, tile=64).collect()
+    rows = assemble_cogs(tiles, meta).collect()
     assert bytes(rows[0]["cog"]) == single
     info = cog_info(single)
     assert any(
@@ -353,7 +356,7 @@ def test_blocked_sparse_nodata_matches_single_pass(spark):
     )
     blocks = blocks_from_images(images, tile=64)
     tiles = encode_cog_blocked(blocks, meta, tile=64, sparse=True, nodata=42)
-    rows = assemble_cogs(tiles, meta, tile=64, nodata=42).collect()
+    rows = assemble_cogs(tiles, meta).collect()
     assert bytes(rows[0]["cog"]) == single
     info = cog_info(single)
     assert info["levels"][0]["nodata"] == 42.0
@@ -400,7 +403,7 @@ def test_blocked_average_matches_single_pass(spark, seed, shape, dtype, kw):
     )
     blocks = blocks_from_images(images, tile=64)
     tiles = encode_cog_blocked(blocks, meta, tile=64, resample="average", **kw)
-    rows = assemble_cogs(tiles, meta, tile=64, **kw).collect()
+    rows = assemble_cogs(tiles, meta).collect()
     assert bytes(rows[0]["cog"]) == single
 
 
@@ -431,7 +434,7 @@ def test_blocked_average_nodata_sparse_matches_single_pass(spark):
     tiles = encode_cog_blocked(
         blocks, meta, tile=64, resample="average", nodata=200, sparse=True
     )
-    rows = assemble_cogs(tiles, meta, tile=64, nodata=200).collect()
+    rows = assemble_cogs(tiles, meta).collect()
     assert bytes(rows[0]["cog"]) == single
     info = cog_info(single)
     assert any(n == 0 for lev in info["levels"] for n in lev["byte_counts"])
@@ -441,8 +444,8 @@ def test_predictor_and_nodata_ride_tile_relation(spark):
     """ADVICE r6: tiles compressed with predictor=2 (or sparse holes cut
     against a nodata) but assembled with the assembler's DEFAULTS produce
     a container that parses cleanly yet decodes silently wrong pixels —
-    the same hazard class the quality attribute closed. Both now ride the
-    tile relation; the natural pipe (encode -> assemble with defaults)
+    the same hazard class as a mismatched JPEG quality. Both ride the
+    tile relation and the assembler takes neither, so encode -> assemble
     stays byte-identical to encode_cog at the true params."""
     from cloudtiff_spark.operators.cogsink import (
         assemble_cogs,
@@ -462,8 +465,8 @@ def test_predictor_and_nodata_ride_tile_relation(spark):
     tiles = encode_cog_blocked(
         blocks, meta, tile=64, predictor=2, sparse=True, nodata=42
     )
-    # note: NO predictor/nodata passed here — they must ride the relation
-    rows = assemble_cogs(tiles, meta, tile=64).collect()
+    # the assembler takes no predictor/nodata: they ride the relation
+    rows = assemble_cogs(tiles, meta).collect()
     single = encode_cog(
         arr, 32633, 500000.0, 5200000.0, 10.0, tile=64,
         predictor=2, sparse=True, nodata=42,
@@ -530,7 +533,7 @@ def test_assemble_never_collects_the_tile_relation(spark):
 
     CDF.collect = spy
     try:
-        rows = assemble_cogs(tiles, meta, tile=64).collect()
+        rows = assemble_cogs(tiles, meta).collect()
     finally:
         CDF.collect = orig
     assert len(rows) == 1
@@ -539,3 +542,57 @@ def test_assemble_never_collects_the_tile_relation(spark):
     # driver-side collects during assembly: per-image aggregates only
     for cols in collected_schemas[:-1]:  # the last entry is our own .collect
         assert "tile_idx" not in cols and "data" not in cols, cols
+
+
+@pytest.mark.parametrize("trip", ["filter", "parquet"])
+@pytest.mark.parametrize(
+    "seed,gray,kw",
+    [
+        (118, False, {"compression": COMPRESSION_LZW, "predictor": 2}),
+        (119, False, {"compression": COMPRESSION_JPEG, "quality": 70}),
+        (120, True, {"sparse": True, "nodata": 42}),
+    ],
+    ids=["lzw-predictor2", "jpeg-quality70", "sparse-nodata42"],
+)
+def test_settings_survive_tile_relation_round_trips(spark, tmp_path, seed, gray, kw, trip):
+    """Each tile row carries the codec settings it was compressed with,
+    so a tile relation taken through a filter or a parquet write and
+    read still assembles — in-task and ranged — to encode_cog's bytes. A
+    prefix declaring any other settings than the tiles' own parses
+    cleanly and decodes silently wrong pixels."""
+    from cloudtiff_spark.operators.cogsink import assemble_cogs, write_cog_ranged
+
+    r = _rng(seed)
+    if gray:  # nodata-uniform background: sparse holes cut against 42
+        arr = np.full((150, 220), 42, dtype=np.uint8)
+        arr[10:60, 12:70] = r.integers(0, 42, (50, 58), dtype=np.uint8)
+    else:
+        arr = r.integers(0, 256, (150, 220, 3), dtype=np.uint8)
+    single = encode_cog(arr, 32633, 500000.0, 5200000.0, 10.0, tile=64, **kw)
+    tiles, meta = _encoded(spark, arr, "rt", **kw)
+    if trip == "filter":
+        t = tiles.filter("true")
+    else:
+        tiles.write.parquet(str(tmp_path / "tiles.parquet"))
+        t = spark.read.parquet(str(tmp_path / "tiles.parquet"))
+    rows = assemble_cogs(t, meta).collect()
+    assert bytes(rows[0]["cog"]) == single
+    p = tmp_path / "rt.tif"
+    assert write_cog_ranged(t, meta, str(p)) == len(single)
+    assert p.read_bytes() == single
+
+
+def test_mixed_settings_for_one_image_raise(spark, tmp_path):
+    """One image's rows from two encodes with different predictors cannot
+    share one container prefix: both sinks raise rather than write a
+    predictor tag that is wrong for some of the tiles."""
+    from cloudtiff_spark.operators.cogsink import assemble_cogs, write_cog_ranged
+
+    arr = _rng(121).integers(0, 256, (150, 220, 3), dtype=np.uint8)
+    a, meta = _encoded(spark, arr, "mx", compression=COMPRESSION_LZW, predictor=1)
+    b, _ = _encoded(spark, arr, "mx", compression=COMPRESSION_LZW, predictor=2)
+    mixed = a.filter("level = 0").unionByName(b.filter("level > 0"))
+    with pytest.raises(ValueError, match="disagree"):
+        assemble_cogs(mixed, meta).collect()
+    with pytest.raises(ValueError, match="disagree"):
+        write_cog_ranged(mixed, meta, str(tmp_path / "mx.tif"))

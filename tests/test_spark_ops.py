@@ -115,19 +115,6 @@ class TestPipJoin:
         b = {tuple(r) for r in pip_join(ta, queries, salt=8).collect()}
         assert a == b and len(a) > 0
 
-    def test_repartitioned_path_equals_broadcast(self, tables):
-        """The 10^12-scale plan variant (range-repartition both sides on the
-        cell key instead of broadcasting the query cover) must produce the
-        identical row set."""
-        from cloudtiff_spark.operators.meta import tile_assignments
-        from cloudtiff_spark.operators.spatial import pip_join
-
-        _, meta, queries = tables
-        ta = tile_assignments(meta)
-        bc = {tuple(r) for r in pip_join(ta, queries, broadcast_queries=True).collect()}
-        rp = {tuple(r) for r in pip_join(ta, queries, broadcast_queries=False).collect()}
-        assert bc == rp and len(bc) > 0
-
     def test_refine_variants_agree(self, tables):
         from cloudtiff_spark.operators.meta import tile_assignments
         from cloudtiff_spark.operators.spatial import pip_join
@@ -173,22 +160,41 @@ class TestPipJoin:
                 pip_join(ta, queries, refine=bad)
 
 
+def _brute_knn(meta_pd, qpd) -> set:
+    want = set()
+    ilon = (meta_pd.xmin + meta_pd.xmax) / 2
+    ilat = (meta_pd.ymin + meta_pd.ymax) / 2
+    for q in qpd[qpd.kind == "knn"].itertuples():
+        d = (ilon - q.px) ** 2 + (ilat - q.py) ** 2
+        order = sorted(zip(d, meta_pd.image_id))
+        for rank, (_, iid) in enumerate(order[: int(q.k)], start=1):
+            want.add((q.query_id, rank, iid))
+    return want
+
+
 class TestKnn:
     def test_matches_bruteforce(self, tables, meta_pd):
         from cloudtiff_spark.operators.knn import knn
 
         _, meta, queries = tables
         got = {(r.query_id, r.rank, r.image_id) for r in knn(meta, queries).collect()}
-        want = set()
-        qpd = queries.toPandas()
-        ilon = (meta_pd.xmin + meta_pd.xmax) / 2
-        ilat = (meta_pd.ymin + meta_pd.ymax) / 2
-        for q in qpd[qpd.kind == "knn"].itertuples():
-            d = (ilon - q.px) ** 2 + (ilat - q.py) ** 2
-            order = sorted(zip(d, meta_pd.image_id))
-            for rank, (_, iid) in enumerate(order[: int(q.k)], start=1):
-                want.add((q.query_id, rank, iid))
-        assert got == want
+        assert got == _brute_knn(meta_pd, queries.toPandas())
+
+    def test_k_above_image_count_ranks_every_image(self, spark, tables, meta_pd):
+        """A query that can never hold k candidates stays active until the
+        whole world is scanned, then returns every image, ranked — beside
+        fixture queries that settle in the first rounds."""
+        from cloudtiff_spark.operators.knn import knn
+
+        _, meta, queries = tables
+        big = spark.createDataFrame(
+            [("q_all", "knn", 12.5, 41.0, len(meta_pd) + 5)],
+            "query_id string, kind string, px double, py double, k int",
+        )
+        qs = queries.select("query_id", "kind", "px", "py", "k").unionByName(big)
+        got = {(r.query_id, r.rank, r.image_id) for r in knn(meta, qs).collect()}
+        assert got == _brute_knn(meta_pd, qs.toPandas())
+        assert sum(1 for g in got if g[0] == "q_all") == len(meta_pd)
 
 
 class TestTiling:

@@ -13,12 +13,15 @@ same block grain it was produced:
   stage 1  level-0 tiles: each input block IS a COG tile (the blocked
            render's 256-px grain == the tile grid); compress per block
            in parallel (mapInPandas, one Arrow batch of blocks per task).
-  stage 2  overview pyramid, level by level (log2 driver loop): each
-           level-i tile gathers the <=3x3 level-(i-1) raw tiles its
-           nearest-resample footprint touches (shuffle keyed by DEST
-           tile), resamples with the exact global index formula, and
-           compresses. Work per level shrinks 4x, so the whole pyramid
-           costs ~1/3 of level 0 — same ratio as the single-pass writer.
+  stage 2  overview pyramid, level by level (log2 driver loop, the
+           encode/mod.rs:525-584 step): one narrow mapInPandas over the
+           persisted level-(i-1) raw tiles (the source-side feed) emits
+           each tile once per level-i dest tile whose footprint reads it
+           (usually one or two per axis, _readers); stream_groups keyed
+           by DEST tile mosaics them, resamples with the exact global
+           index formula (_footprint), and the level is compressed.
+           Work per level shrinks 4x, so the whole pyramid costs ~1/3
+           of level 0 — same ratio as the single-pass writer.
   stage 3  container assembly: every tile row carries the codec settings
            it was compressed with (tile, compression, predictor, quality,
            nodata), and each header/IFD prefix (tiff.py:container_prefix)
@@ -28,17 +31,20 @@ same block grain it was produced:
            (12 bytes/tile metadata), and payloads are either
            concatenated per image (assemble_cogs — one bounded fan-in
            task per image, the contiguous-file contract) or streamed to
-           a path in offset order with O(1) driver memory
-           (write_cog_ranged — the single-gigapixel-raster shape; on
-           object storage the known offsets admit parallel multipart
-           ranged writes instead).
+           a path in offset order, the driver holding one
+           (level, tile_idx, nbytes) row per tile and one partition of
+           payloads (write_cog_ranged — the single-gigapixel-raster
+           shape; on object storage the known offsets admit parallel
+           multipart ranged writes instead).
 
 Byte identity with encode_cog is exact and test-pinned
 (tests/test_cogsink.py): the per-dest-tile resample evaluates
 ``min(floor(global_dst_index * (src_dim / dst_dim)), src_dim - 1)`` —
 elementwise identical float64 ops to resample_nearest
-(operators/tiling.py, ops.rs:70-88 semantics) — so every overview pixel,
-every compressed tile payload, and every container byte matches the
+(operators/tiling.py, ops.rs:70-88 semantics) — or resample_average's
+integer boxes through its own _box_average kernel, and each tile goes
+through the same tiff.tile_payload, so every overview pixel, every
+compressed tile payload, and every container byte matches the
 single-pass writer.
 """
 
@@ -54,16 +60,16 @@ from ..tiff import (
     COMPRESSION_DEFLATE,
     COMPRESSION_JPEG,
     TILE,
-    _compress_tile,
-    _is_fill,
     _validate_nodata,
     _pixel_format_for,
     container_prefix,
     jpeg_photometric_for,
     jpeg_tables_for,
     plan_levels,
+    tile_payload,
 )
-from .render import stream_groups
+from .render import STREAM_FLUSH_BYTES, stream_groups
+from .tiling import _box_average
 
 #: compressed tile rows plus the codec settings they were compressed
 #: with (nodata null when unset) — the assemblers read the settings from
@@ -75,6 +81,9 @@ TILE_SCHEMA = (
 _TILE_COLS = [f.split()[0] for f in TILE_SCHEMA.split(", ")]
 _SETTINGS = _TILE_COLS[5:]
 _RAW_SCHEMA = "image_id string, row int, col int, data binary"
+#: a level's raw tile keyed by one dest tile of the next level that reads it
+_FEED_SCHEMA = "image_id string, rd int, cd int, row int, col int, data binary"
+_FEED_COLS = [f.split()[0] for f in _FEED_SCHEMA.split(", ")]
 
 _DTYPES = {"uint8": np.uint8, "uint16": np.uint16, "float32": np.float32}
 
@@ -234,6 +243,55 @@ def blocks_from_images(images: DataFrame, tile: int = TILE) -> DataFrame:
     return images.mapInPandas(gen, schema=_RAW_SCHEMA)
 
 
+def _footprint(j: int, s: int, d: int, tile: int, avg: bool) -> tuple[np.ndarray, int, int]:
+    """What dest tile ``j`` of a level reads along one axis of the level
+    before it (``s`` source px -> ``d`` dest px): the source indices and
+    the first and last source TILE they touch. ``avg``: the integer area
+    box boundaries x*s//d for x in [x0, x1] (resample_average's math).
+    Otherwise the nearest indices min(floor(x * (s/d)), s-1) for x in
+    [x0, x1) — resample_nearest's float64 ops, element for element. The
+    one footprint formula: the feed ships tiles by it and the resample
+    reads by it, so the two sets cannot drift."""
+    x0, x1 = j * tile, min((j + 1) * tile, d)
+    if avg:
+        idx = (np.arange(x0, x1 + 1) * s) // d
+        return idx, int(idx[0]) // tile, (int(idx[-1]) - 1) // tile
+    idx = np.minimum((np.arange(x0, x1) * (s / d)).astype(np.int64), s - 1)
+    return idx, int(idx[0]) // tile, int(idx[-1]) // tile
+
+
+def _readers(k: int, s: int, d: int, tile: int, avg: bool) -> list[int]:
+    """The dest tiles whose _footprint reads source tile ``k`` along one
+    axis — usually one, two where a dest tile edge falls inside it, none
+    where nearest skips its last pixels. Candidates are the dest pixels
+    whose exact-rational source index can fall in the tile: from the
+    average box holding its first pixel, ((p0+1)*d-1)//s, to
+    floor((p1+1)*d/s), where float rounding can pull nearest down onto
+    its last pixel; each is then checked against the footprint."""
+    p0, p1 = k * tile, min((k + 1) * tile, s) - 1
+    lo = ((p0 + 1) * d - 1) // s // tile
+    hi = min((p1 + 1) * d // s, d - 1) // tile
+    out = []
+    for j in range(lo, hi + 1):
+        _, first, last = _footprint(j, s, d, tile, avg)
+        if first <= k <= last:
+            out.append(j)
+    return out
+
+
+def _image_meta(m: dict, img: str) -> dict:
+    """The broadcast meta of a block row's image; a block of an image
+    images_meta does not list raises, in the level-0 compress and in
+    every feed."""
+    mm = m.get(img)
+    if mm is None:
+        raise ValueError(
+            f"block references image_id {img!r} absent from "
+            "images_meta — the two inputs were filtered differently"
+        )
+    return mm
+
+
 def encode_cog_blocked(
     blocks: DataFrame,
     images_meta: DataFrame,
@@ -252,23 +310,21 @@ def encode_cog_blocked(
     row-major; edge blocks short). images_meta: one row per image
     (image_id, w, h, c, dtype, epsg, origin_x, origin_y, scale_px).
     Returns TILE_SCHEMA rows (image_id, level, tile_idx, nbytes, data)
-    with data = _compress_tile payloads (or abbreviated TechNote-2 JPEG
-    streams for compression 7), each row also carrying the codec settings
-    it was compressed with: ``tile``, the image's effective
-    ``compression``, ``predictor``, ``quality`` and ``nodata`` — feed to
-    assemble_cogs / write_cog_ranged, which build each container prefix
-    (JPEG tag-347 tables included) from those columns. Format rejects
-    (dtype, predictor, JPEG photometric, nodata) raise here, before any
-    cluster work.
+    with data = tiff.tile_payload payloads, each row also carrying the
+    codec settings it was compressed with: ``tile``, the image's
+    effective ``compression``, ``predictor``, ``quality`` and ``nodata``
+    — feed to assemble_cogs / write_cog_ranged, which build each
+    container prefix (JPEG tag-347 tables included) from those columns.
+    Format rejects (dtype, predictor, JPEG photometric, nodata) raise
+    here, before any cluster work.
 
     Overviews resample 'nearest' (the reference render default,
     ops.rs:70-88) or 'average' (the GDAL COG default; integer area
-    boxes — each dest tile's source footprint is the contiguous range
-    [d0*s//d, d1*s//d), so the dest-tile-keyed shuffle ships exactly
-    the boxes it reduces, byte-identical to encode_cog's
-    resample_average — test-pinned). The catmullrom Encoder filter
-    needs cross-tile 4-tap windows with globally-derived weights and
-    stays on the single-pass writer."""
+    boxes). Each source tile is shipped to exactly the dest tiles whose
+    _footprint reads it, so the output is byte-identical to encode_cog
+    for both (test-pinned). The catmullrom Encoder filter needs
+    cross-tile 4-tap windows with globally-derived weights and stays on
+    the single-pass writer."""
     if resample not in ("nearest", "average"):
         raise ValueError(f"unknown blocked resample filter {resample!r}")
     avg = resample == "average"
@@ -280,6 +336,7 @@ def encode_cog_blocked(
         m.setdefault("comp", compression)  # the image's effective codec
         _pixel_format(m, m["comp"], predictor)
         _validate_nodata(m["dtype"], nodata)
+        m["n_levels"] = num_levels(m["w"], m["h"], tile, tile)
     nodata_col = None if nodata is None else float(nodata)
     bmeta = spark.sparkContext.broadcast(
         {
@@ -288,59 +345,26 @@ def encode_cog_blocked(
         }
     )
 
-    def pad_tile(arr: np.ndarray, c: int, dt) -> np.ndarray:
-        t = np.zeros((tile, tile, c), dtype=dt)
-        t[: arr.shape[0], : arr.shape[1]] = arr
-        return t
-
     def compress_level(lv: int):
         """mapInPandas: raw padded-or-valid tiles of level ``lv`` ->
-        compressed tile rows (the same _compress_tile call the
-        single-pass writer makes per tile)."""
+        compressed tile rows (the tile_payload call encode_cog makes per
+        tile)."""
 
         def gen(batches):
             m = bmeta.value
             for pdf in batches:
                 rows = []
-                ids = pdf["image_id"].to_numpy()
-                rws = pdf["row"].to_numpy()
-                cls = pdf["col"].to_numpy()
-                dat = pdf["data"].to_numpy()
-                for i in range(len(pdf)):
-                    mm = m.get(ids[i])
-                    if mm is None:
-                        raise ValueError(
-                            f"block references image_id {ids[i]!r} absent from "
-                            "images_meta — the two inputs were filtered differently"
-                        )
+                for img, row, col, data in zip(pdf["image_id"], pdf["row"], pdf["col"], pdf["data"]):
+                    mm = _image_meta(m, img)
                     c, dt = mm["c"], np.dtype(mm["dtype"])
                     lw, lh = level_dims(mm["w"], mm["h"], lv)
-                    arr = _tile_array(
-                        dat[i], c, dt, tile, lw, lh, int(rws[i]), int(cls[i])
-                    )
+                    arr = _tile_array(data, c, dt, tile, lw, lh, int(row), int(col))
                     comp = mm["comp"]
-                    if sparse and _is_fill(arr, nodata):
-                        # GDAL SPARSE_OK hole: no payload; container_prefix
-                        # records offset 0 / count 0 and decode_tile fills
-                        # with nodata-or-zero (same rule as encode_cog
-                        # sparse=True)
-                        payload = b""
-                    elif comp == COMPRESSION_JPEG:
-                        # abbreviated stream (tables discarded: fixed by
-                        # `quality`, rebuilt by assemble / write via
-                        # jpeg_tables_for — same bytes, test-pinned)
-                        from ..jpeg import encode_jpeg, split_jpeg_tables
-
-                        full = encode_jpeg(
-                            arr if c == 3 else arr[:, :, 0], quality
-                        )
-                        payload = split_jpeg_tables(full)[1]
-                    else:
-                        payload = _compress_tile(arr, comp, predictor)
+                    payload = tile_payload(arr, comp, predictor, quality, sparse, nodata)
                     cols_g, _ = grid_shape(lw, lh, tile, tile)
                     rows.append(
                         (
-                            ids[i], lv, int(rws[i]) * cols_g + int(cls[i]),
+                            img, lv, int(row) * cols_g + int(col),
                             len(payload), payload,
                             tile, comp, predictor, quality, nodata_col,
                         )
@@ -349,170 +373,78 @@ def encode_cog_blocked(
 
         return gen
 
-    max_lv = max(num_levels(m["w"], m["h"], tile, tile) for m in meta.values())
-    cur = blocks.select("image_id", "row", "col", "data")
+    def make_feed(lv: int):
+        def feed(batches):
+            """mapInPandas over the level-(lv-1) raw tiles: each tile once
+            for every level-``lv`` dest tile whose footprint reads it,
+            keyed (image_id, rd, cd) for the resample's group."""
+            m = bmeta.value
+            for pdf in batches:
+                rows, pending = [], 0
+                for img, row, col, data in zip(pdf["image_id"], pdf["row"], pdf["col"], pdf["data"]):
+                    mm = _image_meta(m, img)
+                    if mm["n_levels"] <= lv:
+                        continue
+                    sw, sh = level_dims(mm["w"], mm["h"], lv - 1)
+                    dw, dh = level_dims(mm["w"], mm["h"], lv)
+                    for rd in _readers(int(row), sh, dh, tile, avg):
+                        for cd in _readers(int(col), sw, dw, tile, avg):
+                            rows.append((img, rd, cd, row, col, data))
+                            pending += len(data)
+                    if pending >= STREAM_FLUSH_BYTES:
+                        yield pd.DataFrame(rows, columns=_FEED_COLS)
+                        rows, pending = [], 0
+                if rows:
+                    yield pd.DataFrame(rows, columns=_FEED_COLS)
+
+        return feed
+
+    def make_resample(lv: int):
+        def resample_group(pdf: pd.DataFrame) -> dict:
+            """stream_groups per dest tile: mosaic the shipped src tiles,
+            sample with the global-index footprint, emit the raw padded
+            dest tile."""
+            img = pdf["image_id"].iloc[0]
+            mm = bmeta.value[img]
+            c, dt = mm["c"], np.dtype(mm["dtype"])
+            sw, sh = level_dims(mm["w"], mm["h"], lv - 1)
+            dw, dh = level_dims(mm["w"], mm["h"], lv)
+            rd, cd = int(pdf["rd"].iloc[0]), int(pdf["cd"].iloc[0])
+            ys, sr0, sr1 = _footprint(rd, sh, dh, tile, avg)
+            xs, sc0, sc1 = _footprint(cd, sw, dw, tile, avg)
+            mosaic = np.zeros(((sr1 - sr0 + 1) * tile, (sc1 - sc0 + 1) * tile, c), dtype=dt)
+            for row, col, data in zip(pdf["row"], pdf["col"], pdf["data"]):
+                r, cc = int(row) - sr0, int(col) - sc0
+                arr = _tile_array(data, c, dt, tile, sw, sh, int(row), int(col))
+                mosaic[r * tile : (r + 1) * tile, cc * tile : (cc + 1) * tile] = arr
+            ys, xs = ys - sr0 * tile, xs - sc0 * tile  # mosaic-relative
+            if avg:
+                # the SAME kernel the single-pass writer uses — float64
+                # op sequences identical by construction
+                win = mosaic[ys[0] : ys[-1], xs[0] : xs[-1]]
+                dst = _box_average(win, ys - ys[0], xs - xs[0], dt, nodata)
+            else:
+                dst = mosaic[ys][:, xs]
+            out = np.zeros((tile, tile, c), dtype=dt)
+            out[: dst.shape[0], : dst.shape[1]] = dst
+            return {"image_id": img, "row": rd, "col": cd, "data": out.tobytes()}
+
+        return resample_group
+
     # each level's raw tiles feed BOTH its compress stage and the next
     # level's resample — persist so one action computes each level once;
     # handles are attached to the returned DataFrame so the consumers
     # (assemble_cogs / write_cog_ranged) can release the raw-tile caches
     # once the compressed tiles are materialized
-    cur = cur.persist()
+    cur = blocks.select("image_id", "row", "col", "data").persist()
     persisted = [cur]
     out = cur.mapInPandas(compress_level(0), schema=TILE_SCHEMA)
-
-    for lv in range(1, max_lv):
-        # images that still have a level ``lv``
-        lv_ids = [
-            k for k, m in meta.items() if num_levels(m["w"], m["h"], tile, tile) > lv
-        ]
-        # dest tile keys: ONE fan-out operator over the (tiny) image-id
-        # relation — a per-image union of spark.range plans is quadratic
-        # planning cost at hundreds of images (measured: it dominated the
-        # fixture run), while a gigapixel level still fans out its
-        # millions of 16-byte keys cheaply before the repartition spreads
-        # them (the fanout_blocks pattern, render.py)
-        ids_df = spark.createDataFrame([(i,) for i in lv_ids], "image_id string")
-
-        def make_fanout(lv: int):
-            def fanout(batches):
-                m = bmeta.value
-                for pdf in batches:
-                    rows = []
-                    for img in pdf["image_id"].to_numpy():
-                        mm = m[img]
-                        dw, dh = level_dims(mm["w"], mm["h"], lv)
-                        cols_d, rows_d = grid_shape(dw, dh, tile, tile)
-                        for k in range(rows_d * cols_d):
-                            rows.append((img, k // cols_d, k % cols_d))
-                    yield pd.DataFrame(rows, columns=["image_id", "rd", "cd"])
-
-            return fanout
-
-        dest = ids_df.repartition(min(len(lv_ids), 64)).mapInPandas(
-            make_fanout(lv), schema="image_id string, rd int, cd int"
-        )
-
-        def make_src_ranges(lv: int):
-            def src_ranges(batches):
-                """Dest tile -> the src-tile bbox its resample footprint
-                touches, via the SAME index formula the gather uses (so
-                the shipped set is exactly the set read). Only the first/
-                last indices matter (the index map is monotone), so this
-                is scalar float64 math per dest tile — identical ops to
-                the gather's arange product, element for element."""
-                m = bmeta.value
-                for pdf in batches:
-                    ids = pdf["image_id"].to_numpy()
-                    rds = pdf["rd"].to_numpy()
-                    cds = pdf["cd"].to_numpy()
-                    rows = []
-                    for i in range(len(pdf)):
-                        mm = m[ids[i]]
-                        sw, sh = level_dims(mm["w"], mm["h"], lv - 1)
-                        dw, dh = level_dims(mm["w"], mm["h"], lv)
-                        rd, cd = int(rds[i]), int(cds[i])
-                        x0, x1 = cd * tile, min((cd + 1) * tile, dw)
-                        y0, y1 = rd * tile, min((rd + 1) * tile, dh)
-                        if avg:
-                            # integer area boxes: dst range [d0, d1) reads
-                            # src rows [d0*s//d, d1*s//d) — same integer
-                            # math as resample_average's boundaries
-                            xf, xl = (x0 * sw) // dw, (x1 * sw) // dw - 1
-                            yf, yl = (y0 * sh) // dh, (y1 * sh) // dh - 1
-                        else:
-                            xf = int(np.float64(x0) * (sw / dw))
-                            xl = min(int(np.float64(x1 - 1) * (sw / dw)), sw - 1)
-                            yf = int(np.float64(y0) * (sh / dh))
-                            yl = min(int(np.float64(y1 - 1) * (sh / dh)), sh - 1)
-                        rows.append(
-                            (ids[i], rd, cd, yf // tile, yl // tile, xf // tile, xl // tile)
-                        )
-                    yield pd.DataFrame(
-                        rows,
-                        columns=["image_id", "rd", "cd", "sr0", "sr1", "sc0", "sc1"],
-                    )
-
-            return src_ranges
-
-        need = dest.mapInPandas(
-            make_src_ranges(lv),
-            schema="image_id string, rd int, cd int, sr0 int, sr1 int, sc0 int, sc1 int",
-        )
-        pairs = (
-            need.withColumn("row", F.explode(F.sequence("sr0", "sr1")))
-            .withColumn("col", F.explode(F.sequence("sc0", "sc1")))
-            .select("image_id", "rd", "cd", "row", "col")
-        )
-        fed = pairs.join(cur, ["image_id", "row", "col"])
-
-        def make_resample(lv: int):
-            def resample_group(pdf: pd.DataFrame) -> dict:
-                """stream_groups per dest tile: mosaic the shipped src
-                tiles, sample with the global-index formula, emit the raw
-                padded dest tile."""
-                m = bmeta.value
-                img = pdf["image_id"].iloc[0]
-                mm = m[img]
-                c, dt = mm["c"], np.dtype(mm["dtype"])
-                sw, sh = level_dims(mm["w"], mm["h"], lv - 1)
-                dw, dh = level_dims(mm["w"], mm["h"], lv)
-                rd, cd = int(pdf["rd"].iloc[0]), int(pdf["cd"].iloc[0])
-                x0, x1 = cd * tile, min((cd + 1) * tile, dw)
-                y0, y1 = rd * tile, min((rd + 1) * tile, dh)
-                if avg:
-                    # integer box boundaries — the same (i*s)//d math as
-                    # resample_average, so sums/divisions below are the
-                    # identical float64 ops element for element
-                    yb = (np.arange(y0, y1 + 1) * sh) // dh
-                    xb = (np.arange(x0, x1 + 1) * sw) // dw
-                    sr0, sc0 = int(yb[0]) // tile, int(xb[0]) // tile
-                    nr = (int(yb[-1]) - 1) // tile - sr0 + 1
-                    nc = (int(xb[-1]) - 1) // tile - sc0 + 1
-                else:
-                    xs = np.minimum((np.arange(x0, x1) * (sw / dw)).astype(np.int64), sw - 1)
-                    ys = np.minimum((np.arange(y0, y1) * (sh / dh)).astype(np.int64), sh - 1)
-                    sr0, sc0 = int(ys[0]) // tile, int(xs[0]) // tile
-                    nr = int(ys[-1]) // tile - sr0 + 1
-                    nc = int(xs[-1]) // tile - sc0 + 1
-                mosaic = np.zeros((nr * tile, nc * tile, c), dtype=dt)
-                srows = pdf["row"].to_numpy()
-                scols = pdf["col"].to_numpy()
-                sdata = pdf["data"].to_numpy()
-                for i in range(len(pdf)):
-                    r, cc = int(srows[i]) - sr0, int(scols[i]) - sc0
-                    arr = _tile_array(
-                        sdata[i], c, dt, tile, sw, sh, int(srows[i]), int(scols[i])
-                    )
-                    mosaic[r * tile : (r + 1) * tile, cc * tile : (cc + 1) * tile] = arr
-                if avg:
-                    from .tiling import _box_average
-
-                    offy, offx = sr0 * tile, sc0 * tile
-                    win = mosaic[
-                        int(yb[0]) - offy : int(yb[-1]) - offy,
-                        int(xb[0]) - offx : int(xb[-1]) - offx,
-                    ]
-                    # the SAME kernel the single-pass writer uses —
-                    # float64 op sequences identical by construction
-                    dst = _box_average(
-                        win, yb - yb[0], xb - xb[0], dt, nodata
-                    )
-                else:
-                    dst = mosaic[ys - sr0 * tile][:, xs - sc0 * tile]
-                return {
-                    "image_id": img,
-                    "row": rd,
-                    "col": cd,
-                    "data": pad_tile(dst, c, dt).tobytes(),
-                }
-
-            return resample_group
-
-        nxt = stream_groups(fed, ["image_id", "rd", "cd"], make_resample(lv), _RAW_SCHEMA)
-        nxt = nxt.persist()
-        persisted.append(nxt)
-        out = out.unionByName(nxt.mapInPandas(compress_level(lv), schema=TILE_SCHEMA))
-        cur = nxt
+    for lv in range(1, max(m["n_levels"] for m in meta.values())):
+        fed = cur.mapInPandas(make_feed(lv), schema=_FEED_SCHEMA)
+        cur = stream_groups(fed, ["image_id", "rd", "cd"], make_resample(lv), _RAW_SCHEMA)
+        cur = cur.persist()
+        persisted.append(cur)
+        out = out.unionByName(cur.mapInPandas(compress_level(lv), schema=TILE_SCHEMA))
     out._cogsink_persisted = persisted
     return out
 
@@ -627,27 +559,27 @@ def assemble_cogs(tiles: DataFrame, images_meta: DataFrame, big: bool = False) -
 def write_cog_ranged(
     tiles: DataFrame, images_meta: DataFrame, path: str, big: bool = False
 ) -> int:
-    """Stream ONE image's compressed tiles to ``path`` in offset order
-    with O(1) driver memory — the single-gigapixel-raster sink (no task
-    and no driver array ever holds the raster or the file).
+    """Stream ONE image's compressed tiles to ``path`` in offset order —
+    the single-gigapixel-raster sink (no task and no driver array ever
+    holds the raster or the file).
 
     The prefix is built from the image's codec settings (its TILE_SCHEMA
-    rows) and collected tile sizes (metadata), then payloads are appended
-    via toLocalIterator over the (level, tile_idx)-sorted tiles — Spark
-    computes partitions on demand, so peak driver memory is one partition
-    of compressed tiles. On object storage the
-    same collected offsets admit fully-parallel multipart ranged PUTs
-    (every tile's byte range is known before any payload moves); the
-    sandbox has a local filesystem, so the streaming form is the honest
-    measurable variant. Returns total bytes written."""
-    metas = images_meta.limit(2).collect()
-    if len(metas) != 1:
+    rows) and its tile sizes, collected as one (level, tile_idx, nbytes)
+    row per tile — metadata, but O(tiles) driver memory. Only payloads
+    stream: they are appended via toLocalIterator over the (level,
+    tile_idx)-sorted tiles, Spark computing partitions on demand, so the
+    driver holds one partition of compressed tiles at a time. On object
+    storage the same collected offsets admit fully-parallel multipart
+    ranged PUTs (every tile's byte range is known before any payload
+    moves); to a local path the streaming form is what runs. Returns
+    total bytes written."""
+    meta = _collect_meta(images_meta)
+    if len(meta) != 1:
         raise ValueError("write_cog_ranged sinks exactly one image per path")
-    img = metas[0]["image_id"]
+    ((img, m),) = meta.items()
     upstream = getattr(tiles, "_cogsink_persisted", [])
     tiles = tiles.filter(F.col("image_id") == img).persist()
     try:
-        m = _collect_meta(images_meta)[img]
         s = _tile_settings(tiles).get(img)
         if s is None:
             raise ValueError(f"{img}: 0 tiles in the tile relation")

@@ -150,6 +150,31 @@ def _compress_tile(arr: np.ndarray, compression: int, predictor: int = 1) -> byt
     raise CompressionNotSupported(compression)
 
 
+def tile_payload(
+    t: np.ndarray,
+    compression: int,
+    predictor: int,
+    quality: int,
+    sparse: bool,
+    nodata: float | None,
+) -> bytes:
+    """One padded (tile, tile, c) tile's container payload — the per-tile
+    branch of encode_cog and the distributed sink (operators/cogsink.py).
+    With ``sparse``, a tile whose samples all equal the fill value
+    (``nodata``, else 0) is a GDAL SPARSE_OK hole: no payload, so the
+    prefix records offset 0 / count 0. JPEG tiles are abbreviated
+    TechNote-2 streams (SOI+SOF+SOS): their DQT/DHT are fixed by
+    ``quality`` and written once as tag 347 (jpeg_tables_for). Anything
+    else goes through _compress_tile."""
+    if sparse and _is_fill(t, nodata):
+        return b""
+    if compression == COMPRESSION_JPEG:
+        from .jpeg import encode_jpeg, split_jpeg_tables
+
+        return split_jpeg_tables(encode_jpeg(t if t.shape[2] == 3 else t[:, :, 0], quality))[1]
+    return _compress_tile(t, compression, predictor)
+
+
 def _projected_crs_supported(epsg: int) -> bool:
     """Writable projected CRSs = everything the projection hub can
     transform (UTM-pattern zones, 3857, and the conic/polar registry)."""
@@ -219,8 +244,8 @@ def _validate_nodata(dtype: np.dtype, nodata: float | None) -> None:
 
 def _is_fill(t: np.ndarray, nodata: float | None) -> bool:
     """True when every padded sample equals the sparse fill value
-    (``nodata`` if set, else 0) — the hole test shared by encode_cog and
-    encode_cog_blocked. NaN nodata compares via isnan."""
+    (``nodata`` if set, else 0) — tile_payload's hole test. NaN nodata
+    compares via isnan."""
     if nodata is None:
         return not t.any()
     if np.issubdtype(t.dtype, np.floating) and np.isnan(nodata):
@@ -676,32 +701,19 @@ def encode_cog(
                 return resample_average(a, w, h, nodata=_nd)
         else:
             resampler = resample_catmullrom
-    jpeg_tables: bytes | None = None
-    if jpeg:
-        from .jpeg import encode_jpeg, split_jpeg_tables
-
-        jpeg_tables = jpeg_tables_for(quality, gray=c == 1)
+    jpeg_tables = jpeg_tables_for(quality, gray=c == 1) if jpeg else None
 
     cur = pixels
     for lv in range(n_lv):
         if lv > 0:
             lw, lh = level_dims(w, h, lv)
             cur = resampler(cur, lw, lh)
-        tiles = []
-        for t in _iter_padded_tiles(cur, tile):
-            if sparse and _is_fill(t, nodata):
-                tiles.append(b"")  # hole: offset 0 / count 0
-            elif jpeg:
-                # DQT/DHT are fixed by `quality` (standard Annex K
-                # Huffman tables), so every tile splits to the SAME
-                # tables stream — shared once via tag 347
-                # (jpeg_tables_for above) and the payloads stay
-                # abbreviated (SOI+SOF+SOS)
-                full = encode_jpeg(t if c == 3 else t[:, :, 0], quality)
-                tiles.append(split_jpeg_tables(full)[1])
-            else:
-                tiles.append(_compress_tile(t, compression, predictor))
-        level_tiles.append(tiles)
+        level_tiles.append(
+            [
+                tile_payload(t, compression, predictor, quality, sparse, nodata)
+                for t in _iter_padded_tiles(cur, tile)
+            ]
+        )
 
     mask_levels = None
     mask_tiles: list[list[bytes]] = []

@@ -596,3 +596,39 @@ def test_mixed_settings_for_one_image_raise(spark, tmp_path):
         assemble_cogs(mixed, meta).collect()
     with pytest.raises(ValueError, match="disagree"):
         write_cog_ranged(mixed, meta, str(tmp_path / "mx.tif"))
+
+
+def test_block_of_image_absent_from_meta_raises(spark):
+    """A blocks relation holding an image_id that images_meta does not
+    list (the two inputs filtered differently) fails the assembly with
+    the typed message; the level-0 compress and every overview feed
+    check it."""
+    from cloudtiff_spark.operators.cogsink import (
+        assemble_cogs,
+        blocks_from_images,
+        encode_cog_blocked,
+    )
+
+    arr = _rng(122).integers(0, 256, (150, 200, 3), dtype=np.uint8)
+    h, w, c = arr.shape
+    meta = _meta_df(spark, "kept", w, h, c, "uint8")
+    images = spark.createDataFrame(
+        [(i, bytearray(arr.tobytes()), w, h, c, "uint8") for i in ("kept", "stray")],
+        "image_id string, raster binary, w int, h int, c int, dtype string",
+    )
+    tiles = encode_cog_blocked(blocks_from_images(images, tile=64), meta, tile=64)
+    with pytest.raises(Exception, match="'stray' absent from images_meta"):
+        assemble_cogs(tiles, meta).collect()
+
+
+def test_ranged_writer_rejects_two_images(spark, tmp_path):
+    """write_cog_ranged writes one image per path: an images_meta of two
+    images raises from its one metadata collect, before any tile work."""
+    from cloudtiff_spark.operators.cogsink import TILE_SCHEMA, write_cog_ranged
+
+    meta = _meta_df(spark, "a", 64, 64, 3, "uint8").unionByName(
+        _meta_df(spark, "b", 64, 64, 3, "uint8")
+    )
+    tiles = spark.createDataFrame([], TILE_SCHEMA)
+    with pytest.raises(ValueError, match="exactly one image"):
+        write_cog_ranged(tiles, meta, str(tmp_path / "two.tif"))

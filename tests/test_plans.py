@@ -253,6 +253,37 @@ class TestBlockedRenderPlanShape:
         assert "LeftSemi" in blocked_plan
 
 
+class TestBlockedCogSinkPlanShape:
+    def test_overview_levels_join_nothing(self, spark):
+        """Each overview level of the blocked COG sink is one source-side
+        feed over the previous level's raw tiles, then the per-dest-tile
+        resample: no level may pair tiles through a join, which moves raw
+        payloads through an extra exchange per level."""
+        import numpy as np
+
+        from cloudtiff_spark.grid import num_levels
+        from cloudtiff_spark.operators.cogsink import blocks_from_images, encode_cog_blocked
+
+        w, h = 300, 200
+        assert num_levels(w, h, 64, 64) >= 3  # two overview levels or more
+        arr = np.zeros((h, w, 3), np.uint8)
+        images = spark.createDataFrame(
+            [("p", bytearray(arr.tobytes()), w, h, 3, "uint8")],
+            "image_id string, raster binary, w int, h int, c int, dtype string",
+        )
+        meta = spark.createDataFrame(
+            [("p", w, h, 3, "uint8", 32633, 0.0, 0.0, 1.0)],
+            "image_id string, w int, h int, c int, dtype string, epsg int, "
+            "origin_x double, origin_y double, scale_px double",
+        )
+        tiles = encode_cog_blocked(blocks_from_images(images, tile=64), meta, tile=64)
+        plan = tiles._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") >= 3, plan[:2000]  # the plan is all there
+        assert "Join" not in plan, plan[:2000]
+        for df in tiles._cogsink_persisted:
+            df.unpersist()
+
+
 class TestHeaderScanShape:
     def test_header_scan_reads_only_path_and_length(self, spark, tmp_path):
         """analyze_cog_headers lists files through read_cog_directory; the

@@ -353,3 +353,63 @@ class TestStreamRuns:
         assert [list(f["k"]) for f in frames] == [["a", "b"], ["c"], ["d"]]
         for f in frames:
             assert sum(len(r) for r in f["raster"]) <= cap + len(payload)
+
+
+class TestBlockedSinkFeed:
+    """The blocked COG sink's source-side feed ships each level-(lv-1)
+    tile to the level-lv dest tiles cogsink._readers names. That set must
+    be exactly the brute-force inversion of every dest tile's footprint,
+    computed here from the whole-axis resample_nearest / resample_average
+    index maps: a reader too few drops pixels from an overview, one too
+    many ships a tile the resample never reads."""
+
+    @staticmethod
+    def _brute(s, d, tile, avg):
+        """{source tile: [dest tiles reading it]} along one axis."""
+        if avg:  # resample_average's box of dest pixel x: [b[x], b[x+1])
+            b = (np.arange(d + 1) * s) // d
+            first, last = b[:-1], b[1:] - 1
+        else:  # resample_nearest's source index of dest pixel x
+            first = last = np.minimum((np.arange(d) * (s / d)).astype(np.int64), s - 1)
+        out = {k: [] for k in range(-(-s // tile))}
+        for j in range(-(-d // tile)):
+            x0, x1 = j * tile, min((j + 1) * tile, d)
+            for k in range(first[x0] // tile, last[x1 - 1] // tile + 1):
+                out[k].append(j)
+        return out
+
+    def _check_level(self, w, h, lv, tile, avg):
+        from cloudtiff_spark.operators.cogsink import _readers
+
+        src, dst = grid.level_dims(w, h, lv - 1), grid.level_dims(w, h, lv)
+        for s, d in zip(src, dst):
+            for k, want in self._brute(s, d, tile, avg).items():
+                assert _readers(k, s, d, tile, avg) == want, (s, d, tile, avg, k)
+
+    @given(
+        w=st.integers(1, 2000),
+        h=st.integers(1, 2000),
+        tile=st.sampled_from([16, 64, 256]),
+        avg=st.booleans(),
+    )
+    @settings(max_examples=150, deadline=None)
+    def test_readers_invert_every_footprint(self, w, h, tile, avg):
+        for lv in range(1, grid.num_levels(w, h, tile, tile)):
+            self._check_level(w, h, lv, tile, avg)
+
+    @given(
+        m=st.integers(0, 5),
+        extra=st.integers(0, 31),
+        h=st.integers(1100, 2000),
+        avg=st.booleans(),
+    )
+    @settings(max_examples=60, deadline=None)
+    def test_ratio_three_levels(self, m, extra, h, avg):
+        """w >> m == 3 makes level m+1 a 3 -> 1 step along x (sw/dw = 3,
+        the widest footprint), while the tall y axis keeps the level in
+        the pyramid at tile 16."""
+        w = (3 << m) + extra % (1 << m)
+        lv = m + 1
+        assert grid.level_dims(w, h, lv - 1)[0] == 3 and grid.level_dims(w, h, lv)[0] == 1
+        assert grid.num_levels(w, h, 16, 16) > lv
+        self._check_level(w, h, lv, 16, avg)

@@ -292,12 +292,23 @@ def stream_groups(
     per-call cost is paid once per Arrow batch, not once per group:
     measured on 60k one-row groups at ``local[4]``, applyInPandas took
     76-91 s and this path 4.3-5.7 s. Output frames are bounded by
-    STREAM_FLUSH_BYTES, not by the number of groups in a batch."""
+    STREAM_FLUSH_BYTES, not by the number of groups in a batch.
+
+    Partitions: the exchange hashes ``keys`` into exactly
+    ``defaultParallelism`` partitions (one per core), whatever their byte
+    size. Adaptive execution never coalesces a repartition with an explicit
+    count; a by-column one it reads as bytes, and a few small rows of
+    costly groups (a render's tile refs) collapsed into one or two tasks.
+    Trap: an upstream exchange on the same keys and count (a window or
+    aggregate partitioned by ``keys``, with ``spark.sql.shuffle.partitions``
+    equal to the core count) makes Spark drop this one as redundant, and
+    the upstream one may still be coalesced."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     names = schema.fieldNames()
+    n = df.sparkSession.sparkContext.defaultParallelism
     return (
-        df.repartition(*keys)
+        df.repartition(n, *keys)
         .sortWithinPartitions(*keys)
         .mapInPandas(lambda it: stream_runs(it, keys, fn, names), schema)
     )
@@ -567,8 +578,11 @@ def region_render_blocked(
     )
     blocks = base.mapInPandas(fanout_blocks, schema=blk_schema)
     # spread blocks across tasks BEFORE the per-block pixel work — the
-    # whole point is that one giant render's blocks land on many cores
-    blocks = blocks.repartition("query_id", "image_id", "by", "bx")
+    # whole point is that one giant render's blocks land on many cores.
+    # An explicit count (stream_groups' rule): AQE coalesces a by-column
+    # repartition of these few small rows into one or two tasks
+    n = blocks.sparkSession.sparkContext.defaultParallelism
+    blocks = blocks.repartition(n, "query_id", "image_id", "by", "bx")
 
     def needed_ranges(batches):
         # 1b: per block, the EXACT source-tile bbox its pixels touch
@@ -719,7 +733,7 @@ def crop_render(
     out_h_f = f"SQRT({dbl(mp_limit)} * 1000000.0D / {dbl(du / dv)})"
     out_w_f = f"{dbl(du / dv)} * {out_h_f}"
     picked = _lod_pick(
-        levels, f"lw * {dbl(du)} >= {out_w_f} AND lh * {dbl(dv)} >= {out_h_f}", ["image_id"]
+        levels, lambda lw, lh: f"{lw} * {dbl(du)} >= {out_w_f} AND {lh} * {dbl(dv)} >= {out_h_f}"
     )
     # P6 pruning: covered tile range at the picked level
     wanted = _explode_tiles(

@@ -17,6 +17,8 @@ under the even-odd (crossing number) or nonzero (winding number) rule.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -25,6 +27,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
 from ..cells import Z_JOIN, cell_id_expr, cell_xy_expr, pack_expr
+from ..grid import MAX_LEVELS, level_dim_expr
 
 #: default salting factor for hot cells; queries explode x SALT on hot cells
 SALT = 8
@@ -237,8 +240,10 @@ def _overlap_join(images: DataFrame, q: DataFrame, rect: tuple[str, str, str, st
     pip_join), then the exact rect-overlap filter runs natively."""
     # image footprints are tiny (<= ~0.5 deg) vs Z_JOIN cells; keying the
     # image by its centre cell and padding the query cover by one cell ring
-    # keeps the equi-join lossless for overlap tests
-    qc = _bbox_cells(q, rect, Z_JOIN, pad=1).dropDuplicates(["query_id", "cell_join"])
+    # keeps the equi-join lossless for overlap tests. The cover needs no
+    # dedup: pack is injective for cx, cy in [-1, 2^Z_JOIN], so each query
+    # row's padded sequence product holds every cell once
+    qc = _bbox_cells(q, rect, Z_JOIN, pad=1)
     im = images.selectExpr(
         "*", f"{cell_id_expr('(xmin + xmax) / 2', '(ymin + ymax) / 2', Z_JOIN)} AS cell_join"
     )
@@ -273,14 +278,26 @@ def _explode_tiles(
     return df.selectExpr("*", f"{ex}({idx}) AS tile_idx")
 
 
-def _lod_pick(cand: DataFrame, ok: str, by: list[str]) -> DataFrame:
-    """The LOD pick: per ``by`` group keep the greatest level where ``ok``
-    (SQL) holds, else level 0."""
-    return (
-        cand.selectExpr("*", f"CASE WHEN {ok} THEN level ELSE 0 END AS _ok")
-        .selectExpr("*", f"max(_ok) OVER (PARTITION BY {', '.join(by)}) AS _pick")
-        .filter("level = _pick")
-        .drop("_ok", "_pick")
+def _lod_pick(cand: DataFrame, ok: Callable[[str, str], str]) -> DataFrame:
+    """The LOD pick: of each image's levels keep the greatest where ``ok``
+    holds, else level 0. ``ok(lw, lh)`` returns SQL over a level's dims
+    (SQL operands); a null counts as false.
+
+    Level dims only shrink, so ``ok`` (a resolution test) holds on a
+    prefix of the levels, and the pick is row-local, like the reference's
+    level-by-level test (cog/mod.rs:218-236): a row is kept when ``ok``
+    holds there and the row is its image's last level (grid.levels_expr)
+    or ``ok`` fails at level + 1, or when it is level 0 and ``ok`` fails
+    there. One filter, no window and no exchange.
+
+    Precondition: ``cand`` holds every level of each image's pyramid (per
+    query, where there are queries), as levels_df gives and every caller
+    passes; an image whose picked level is absent gets no row."""
+    here = f"COALESCE({ok('lw', 'lh')}, false)"
+    coarser = ok(level_dim_expr("w", "level + 1"), level_dim_expr("h", "level + 1"))
+    last = f"(lw <= tile_w AND lh <= tile_h) OR level = {MAX_LEVELS - 1}"
+    return cand.filter(
+        f"({here} AND ({last} OR NOT COALESCE({coarser}, false))) OR (level = 0 AND NOT {here})"
     )
 
 
@@ -307,8 +324,9 @@ def region_extract_picked(levels: DataFrame, queries: DataFrame) -> DataFrame:
     # LOD: greatest level whose pixel scale beats the requirement, else 0
     picked = _lod_pick(
         cand,
-        "GREATEST((xmax - xmin) / lw, (ymax - ymin) / lh) < LEAST(req_x, req_y)",
-        ["query_id", "image_id"],
+        lambda lw, lh: (
+            f"GREATEST((xmax - xmin) / {lw}, (ymax - ymin) / {lh}) < LEAST(req_x, req_y)"
+        ),
     )
     # crop rect -> normalized image coords (P3 affine with the y flip),
     # clamped to [0,1] (UnitFloat, primatives.rs:48-50)

@@ -243,14 +243,65 @@ class TestBlockedRenderPlanShape:
     def test_no_per_render_window_over_blocks(self, blocked_plan):
         # a Window evaluated over BLOCK rows shuffles every block raster
         # into one partition per render — the exact shape review pass 2
-        # removed. The only windows allowed are region_extract's LOD pick
-        # (max(_ok) over metadata rows).
+        # removed. region_extract's LOD pick is a row-local filter, so no
+        # Window is allowed at all.
         for line in blocked_plan.splitlines():
-            if "Window" in line:
-                assert "max(_ok" in line, line.strip()[:200]
+            assert "Window" not in line, line.strip()[:200]
 
     def test_existence_gate_is_semi_join(self, blocked_plan):
         assert "LeftSemi" in blocked_plan
+
+
+class TestRenderAssembleParallelism:
+    """The Python assemble (decode + gather) of region_render and
+    crop_render runs one task per core. The final adaptive plan holds no
+    LOD window, whose exchange on (query_id, image_id) once replaced the
+    assemble's own, and the assemble stage reads its shuffle uncoalesced
+    (adaptive execution sizes a coalesced read by bytes and ran the whole
+    assemble of a few small tile-ref rows as one or two tasks)."""
+
+    @pytest.fixture(scope="class")
+    def final_plans(self, spark, sf_small):
+        from cloudtiff_spark.operators.meta import levels_df
+        from cloudtiff_spark.operators.render import crop_render, region_render
+        from cloudtiff_spark.operators.tiling import build_tiles
+
+        images = spark.read.parquet(os.path.join(sf_small, "images.parquet"))
+        meta = spark.read.parquet(os.path.join(sf_small, "images_meta.parquet"))
+        queries = spark.read.parquet(os.path.join(sf_small, "queries.parquet"))
+        levels, tiles = levels_df(meta), build_tiles(images)
+        out = {
+            "region": region_render(levels, tiles, queries),
+            "crop": crop_render(levels, tiles, (0.1, 0.2, 0.9, 0.8), mp_limit=0.01),
+        }
+        plans = {}
+        for name, df in out.items():
+            assert df.collect(), name  # runs this plan: count() would plan another
+            plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        return plans
+
+    @staticmethod
+    def _assemble_stage(plan: str) -> list[str]:
+        """The final plan's lines from the assemble MapInPandas (the root)
+        down to the shuffle stage it reads."""
+        final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+        lines = final.splitlines()
+        top = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+        end = next(i for i in range(top, len(lines)) if "ShuffleQueryStage" in lines[i])
+        return lines[top : end + 1]
+
+    def test_no_window(self, final_plans):
+        for name, plan in final_plans.items():
+            assert "isFinalPlan=true" in plan, name
+            assert "Window" not in plan.split("== Initial Plan ==")[0], name
+
+    def test_assemble_read_not_coalesced(self, final_plans):
+        for name, plan in final_plans.items():
+            stage = self._assemble_stage(plan)
+            assert not any("AQEShuffleRead" in line and "coalesced" in line for line in stage), (
+                name,
+                "\n".join(stage),
+            )
 
 
 class TestBlockedCogSinkPlanShape:

@@ -1567,6 +1567,138 @@ class TestStreamGroups:
         assert len(got) == 6
         assert sorted(got, key=key) == sorted(want, key=key)
 
+    def test_one_partition_per_core(self, spark):
+        """The exchange holds defaultParallelism partitions however small
+        the groups are: adaptive execution coalesces a by-column
+        repartition of 64 one-row groups into one task, never one with an
+        explicit count."""
+        from cloudtiff_spark.operators.render import stream_groups
+
+        def fn(g):
+            from pyspark import TaskContext
+
+            return {"k": int(g["k"].iloc[0]), "p": TaskContext.get().partitionId()}
+
+        df = spark.range(64).selectExpr("CAST(id AS INT) AS k")
+        got = stream_groups(df, ["k"], fn, "k int, p int").collect()
+        assert sorted(r["k"] for r in got) == list(range(64))
+        assert len({r["p"] for r in got}) == spark.sparkContext.defaultParallelism
+
+
+class TestLodPick:
+    """The row-local LOD pick equals a brute-force pick over each image's
+    pyramid (grid.level_dims over the first min(num_levels, MAX_LEVELS)
+    levels): the greatest level where the condition holds, else 0."""
+
+    @staticmethod
+    def _cases(rng):
+        """(w, h, tile_w, tile_h, span_x, span_y, req) rows: random images
+        with the requirement aimed near a random level, plus single-level
+        images, a condition false at level 0, true at every level, null,
+        and images past the MAX_LEVELS cap."""
+        rows = []
+        for _ in range(300):
+            w, h = (int(v) for v in rng.integers(1, 5000, 2))
+            tw, th = (int(v) for v in rng.choice([16, 64, 100, 256, 512], 2))
+            k = int(rng.integers(0, 8))
+            sx, sy = (float(v) for v in rng.uniform(0.01, 2.0, 2))
+            lw, lh = grid.level_dims(w, h, k)
+            jitter = float(rng.choice([0.999, 1.0, 1.001, rng.uniform(0.5, 2)]))
+            req = max(sx / lw, sy / lh) * jitter
+            rows.append((w, h, tw, th, sx, sy, req))
+        rows += [
+            (50, 40, 64, 64, 1.0, 1.0, 1.0),  # single level, ok
+            (50, 40, 64, 64, 1.0, 1.0, 1e-9),  # single level, not ok
+            (3000, 200, 64, 64, 1.0, 1.0, 1e-9),  # false at level 0
+            (3000, 200, 64, 64, 1.0, 1.0, 1e9),  # true at every level
+            (3000, 200, 64, 64, 1.0, 1.0, None),  # null: false everywhere
+            (1 << 20, 7, 16, 16, 1.0, 1.0, 1e9),  # past the cap: level 12
+            (1 << 20, 1 << 19, 16, 16, 1.0, 1.0, 1.0 / (1 << 12)),  # level 6
+        ]
+        return rows
+
+    @pytest.fixture(scope="class")
+    def levels(self, spark):
+        from cloudtiff_spark.operators.meta import levels_df
+
+        rows = [(f"i{i}", *r) for i, r in enumerate(self._cases(np.random.default_rng(7)))]
+        meta = spark.createDataFrame(
+            rows,
+            "image_id string, w int, h int, tile_w int, tile_h int, "
+            "sx double, sy double, req double",
+        )
+        return rows, levels_df(meta)
+
+    @staticmethod
+    def _brute(w, h, tw, th, ok):
+        n = min(grid.num_levels(w, h, tw, th), grid.MAX_LEVELS)
+        return max([lv for lv in range(n) if ok(*grid.level_dims(w, h, lv))], default=0)
+
+    def _check(self, levels, ok_sql, ok_py):
+        from cloudtiff_spark.operators.spatial import _lod_pick
+
+        rows, lv = levels
+        got = {}
+        for r in _lod_pick(lv, ok_sql).select("image_id", "level").collect():
+            assert r["image_id"] not in got, r["image_id"]  # one level per image
+            got[r["image_id"]] = r["level"]
+        want = {iid: self._brute(w, h, tw, th, ok_py(*rest)) for iid, w, h, tw, th, *rest in rows}
+        assert got == want
+        assert {0, grid.MAX_LEVELS - 1} < set(want.values())
+        assert len(set(want.values())) >= 6
+
+    def test_region_condition(self, levels):
+        """region_extract_picked's rule: the level's degrees per pixel
+        beat the query's requirement on both axes."""
+
+        def ok_py(sx, sy, req):
+            return lambda lw, lh: req is not None and max(sx / lw, sy / lh) < req
+
+        self._check(
+            levels, lambda lw, lh: f"GREATEST(sx / {lw}, sy / {lh}) < req", ok_py
+        )
+
+    def test_crop_condition(self, levels):
+        """crop_render's rule: the level keeps at least the output's
+        pixel count inside the crop on both axes."""
+
+        def ok_py(sx, sy, req):
+            return lambda lw, lh: req is not None and lw * sx >= 1 / req and lh * sy >= 1 / req
+
+        self._check(
+            levels, lambda lw, lh: f"{lw} * sx >= 1 / req AND {lh} * sy >= 1 / req", ok_py
+        )
+
+
+class TestOverlapCover:
+    def test_padded_cover_has_no_duplicate_cells(self, spark):
+        """_overlap_join's pad-1 query cover holds each (query, cell) once,
+        also for rects on the lon +-180 and lat +-90 edges, where the pad
+        ring reaches past the grid (cx or cy of -1 or 2^Z_JOIN)."""
+        from cloudtiff_spark.operators.spatial import _bbox_cells
+
+        rects = [
+            (-180.0, -90.0, 180.0, 90.0),
+            (-180.0, 80.0, -179.0, 90.0),
+            (179.5, -90.0, 180.0, -89.9),
+            (180.0, 90.0, 180.0, 90.0),
+            (-180.0, -90.0, -180.0, -90.0),
+            (-10.0, -90.0, 10.0, 90.0),
+        ]
+        q = spark.createDataFrame(
+            [(f"q{i}", *r) for i, r in enumerate(rects)],
+            "query_id string, x0 double, y0 double, x1 double, y1 double",
+        )
+        qc = _bbox_cells(q, ("x0", "y0", "x1", "y1"), cells.Z_JOIN, pad=1)
+        dup = qc.groupBy("query_id", "cell_join").count().filter("count > 1").count()
+        assert dup == 0
+        want = 0
+        for x0, y0, x1, y1 in rects:
+            cx0, cy0 = cells.cell_xy(x0, y1, cells.Z_JOIN)
+            cx1, cy1 = cells.cell_xy(x1, y0, cells.Z_JOIN)
+            want += (cx1 - cx0 + 3) * (cy1 - cy0 + 3)
+        assert qc.count() == want
+
 
 class TestCogTiles:
     """operators/cog.cog_tiles: the one container tile-decode relation

@@ -16,6 +16,13 @@ distance is provably closer than anything outside the scanned block: every
 unscanned point is > R * (180/2^z) degrees away (the lat cell span is the
 smaller of the two, see cells.py). Rings are scanned in geometrically
 growing batches so the number of Spark rounds is O(log(world/cell)).
+
+Each round keeps only the top k per query (rows carried from the last
+round plus the new ring's candidates, deduplicated per image, behind one
+exchange) and checkpoints it, so the last round's checkpoint is the
+result and a duplicated image row counts once. Spark jobs, not rows, set
+the cost at these sizes: a point count, then three per round (the ring
+broadcast, the exchange, the collect); the result plans no exchange.
 """
 
 from __future__ import annotations
@@ -26,8 +33,11 @@ from pyspark.sql import functions as F
 from ..cells import cell_xy_expr
 
 Z_KNN = 4  # 16x16 world grid: hot fixtures resolve in 1-2 rounds
-#: a candidate's rank within its query: distance, then image_id, ascending
-_RANK = "row_number() OVER (PARTITION BY query_id ORDER BY dist_sq ASC, image_id ASC)"
+#: a candidate's rank within its query: distance, then image_id, ascending;
+#: a null-distance pad row ranks after every candidate
+_RANK = (
+    "row_number() OVER (PARTITION BY query_id ORDER BY dist_sq ASC NULLS LAST, image_id ASC)"
+)
 
 
 def _image_points(meta: DataFrame) -> DataFrame:
@@ -41,34 +51,42 @@ def _image_points(meta: DataFrame) -> DataFrame:
 def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8) -> DataFrame:
     """Output: (query_id, rank, image_id) for 'knn' queries.
 
-    r7 round-structure optimization (results identical — scanning a
-    SUPERSET of rings never changes the exact top-k, and the per-query
-    termination bound is unchanged): the first round's radius is sized
-    from the measured point density so typical queries settle immediately
-    (the old fixed 0,1,2,4,... schedule needed 4-6 driver rounds, each a
-    full Spark job on this fixture); termination is decided DRIVER-side
-    from the collected k-th-distance rows (the one action per round —
-    one row per knn query with its k-th distance or null, query metadata
-    not payload, same contract as prepare_pip_queries.polys_dict) instead
-    of a status join plus a separate isEmpty action; ring growth is x4."""
+    The first round's radius is sized from the measured point density so
+    typical queries settle immediately; rings then grow x4. Each round
+    carries only the top k per query:
+
+    - the union of the round's ring candidates (the ring is the broadcast
+      build side, the image points stream), one null-distance pad row per
+      still-active query and the rows carried from the last round goes
+      through ONE ``repartition(defaultParallelism, "query_id")`` (an
+      explicit count is never coalesced, and hashing on query_id also
+      clusters the (query_id, image_id) window, so both windows share it),
+    - a (query_id, image_id) dedup window, then the rank window (distance,
+      then image_id; the pad ranks last), keeps rank <= k and is
+      ``localCheckpoint``-ed: the next round's carried rows,
+    - one driver collect of the unsettled query ids (a pad survived, so
+      the query holds fewer than k candidates, or its k-th distance lies
+      beyond the ring bound) is that checkpoint's materializing action.
+
+    This is exact: top-k(A u B) = top-k(top-k(A) u B) under the
+    (dist_sq, image_id) order, and scanning a superset of rings never
+    changes the exact top-k. The result is the last checkpoint's real rows,
+    so it plans no exchange and no window."""
     n = 1 << z
     lat_span = 180.0 / n  # min cell span in degrees
 
-    pts = _image_points(meta).cache()
+    pts = _image_points(meta)
     qcx, qcy = cell_xy_expr("px", "py", z)
     q = queries.filter("kind = 'knn'").selectExpr(
         "query_id", "px", "py", "k", f"{qcx} AS qcx", f"{qcy} AS qcy"
     )
 
     # density-sized first radius: expect >= ~4*k candidates in the first
-    # scanned block so the common query terminates in one round. count()
-    # doubles as the cache materialization the old first join paid anyway.
+    # scanned block so the common query terminates in one round
     n_pts = pts.count()
     if n_pts == 0:
         # no candidate points: every query "scans the world" and finds
-        # nothing — return the empty result without looping (and without
-        # leaking the just-materialized cache)
-        pts.unpersist()
+        # nothing — return the empty result without looping
         return q.selectExpr("query_id", "CAST(1 AS INT) AS rank", "'' AS image_id").limit(0)
     density = n_pts / float(n * n)
     k_hint = 16.0  # fixture k's are single-digit; 4*k headroom
@@ -76,8 +94,9 @@ def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8
     while (2 * r0 + 1) ** 2 * density < 4.0 * k_hint and r0 < n:
         r0 += 1
 
+    parts = meta.sparkSession.sparkContext.defaultParallelism
     active = q  # the still-active queries
-    acc: DataFrame | None = None
+    top: DataFrame | None = None  # the last round's top k per query
     r_lo = 0  # rings [r_lo, r_hi] scanned this round
     r_hi = r0
     for _ in range(max_rounds):
@@ -95,41 +114,46 @@ def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8
             f"inline(flatten(transform(sequence({-r_hi}, {r_hi}), _dy -> transform({dx}, "
             "_dx -> named_struct('icx', qcx + _dx, 'icy', qcy + _dy)))))",
         ).filter(f"icx >= 0 AND icx < {n} AND icy >= 0 AND icy < {n}")
-        found = ring.join(pts, ["icx", "icy"], "inner").selectExpr(
-            "query_id",
-            "k",
-            "image_id",
-            "(ilon - px) * (ilon - px) + (ilat - py) * (ilat - py) AS dist_sq",
-        )
-        acc = found if acc is None else acc.unionByName(found)
-        acc = acc.localCheckpoint(eager=False)
-
-        # a query is settled when its k-th candidate beats the ring bound,
-        # or the whole world has been scanned. One tiny collect per round
-        # decides it driver-side: per query, its k-th distance, or null
-        # while it holds fewer than k candidates — each active query adds
-        # one null-distance row, ranked after its candidates, which is the
-        # row kept when no k-th exists. Settled queries' rows come back
-        # too, but their candidates never change while the bound only
-        # grows, so they stay settled. The collect is also the action that
-        # materializes this round's checkpoint.
-        guard = (r_hi * lat_span) ** 2
-        kth = (
-            acc.unionByName(
+        cand = (
+            F.broadcast(ring)
+            .join(pts, ["icx", "icy"], "inner")
+            .selectExpr(
+                "query_id",
+                "k",
+                "image_id",
+                "(ilon - px) * (ilon - px) + (ilat - py) * (ilat - py) AS dist_sq",
+            )
+            .unionByName(
                 active.selectExpr(
                     "query_id", "k", "CAST(NULL AS STRING) AS image_id",
                     "CAST(NULL AS DOUBLE) AS dist_sq",
                 )
             )
-            .selectExpr(
-                "query_id", "k", "dist_sq",
-                "row_number() OVER (PARTITION BY query_id "
-                "ORDER BY dist_sq ASC NULLS LAST, image_id ASC) AS rank",
-            )
-            .filter("rank = k OR (dist_sq IS NULL AND rank < k)")
         )
+        if top is not None:
+            cand = cand.unionByName(top.filter("image_id IS NOT NULL").drop("rank"))
+        top = (
+            cand.repartition(parts, "query_id")
+            .selectExpr(
+                "*",
+                "row_number() OVER (PARTITION BY query_id, image_id ORDER BY dist_sq ASC) AS _dup",
+            )
+            .filter("_dup = 1")
+            .selectExpr("query_id", "k", "image_id", "dist_sq", f"{_RANK} AS rank")
+            .filter("rank <= k")
+            .localCheckpoint(eager=False)
+        )
+
+        # a query is settled when its k-th candidate beats the ring bound,
+        # or the whole world has been scanned. Settled queries' rows are
+        # carried too, but their candidates never change while the bound
+        # only grows, so they stay settled.
+        guard = (r_hi * lat_span) ** 2
         active_ids = [
-            r["query_id"] for r in kth.collect() if r["dist_sq"] is None or r["dist_sq"] > guard
+            r["query_id"]
+            for r in top.filter(
+                f"image_id IS NULL OR (rank = k AND dist_sq > {guard!r}D)"
+            ).select("query_id").collect()
         ]
         if not active_ids or r_hi >= n:
             break
@@ -144,10 +168,4 @@ def knn(meta: DataFrame, queries: DataFrame, z: int = Z_KNN, max_rounds: int = 8
     else:
         raise RuntimeError("kNN ring expansion did not converge")
 
-    pts.unpersist()  # acc rows are checkpoint-materialized; pts is done
-    return (
-        acc.dropDuplicates(["query_id", "image_id"])
-        .selectExpr("query_id", "k", "image_id", f"{_RANK} AS rank")
-        .filter("rank <= k")
-        .selectExpr("query_id", "rank", "image_id")
-    )
+    return top.filter("image_id IS NOT NULL").selectExpr("query_id", "rank", "image_id")

@@ -5,7 +5,10 @@ equi-join against the vector (query) side -> exact refine. Join strategy is
 explicit (north_rule): pip_join broadcasts the query cover, which is small
 by design (one row per (query, cell)); hot cells (the fixture plants 3 hot
 regions) are salted with ``phash % S`` on the tile side and the query cover
-is exploded x S on those cells.
+is exploded x S on those cells. The hot list is collected on the driver and
+spliced in as one ``cell_join IN (...)`` literal set: a hot cell holds more
+than ``fraction`` of all tiles, so there are fewer than 1/fraction of them
+(50 at HOT_FRACTION), and the pass plans one join, not a flag join per side.
 
 Reference analogs: the tile-cache hash join (render/tiles.rs:26-57,
 renderer.rs:137-175) and the crop -> tile-range pruning (level.rs:204-231);
@@ -58,11 +61,16 @@ def _bbox_cells(df: DataFrame, rect: tuple[str, str, str, str], z: int, pad: int
 
 
 def hot_cells(tiles: DataFrame, fraction: float = HOT_FRACTION) -> DataFrame:
-    """Cheap pre-pass: cells holding > fraction of all tiles (skew list).
-    One partial+final hash aggregation; the result is tiny and broadcast."""
+    """Cheap pre-pass: cells holding > fraction of all tiles (skew list),
+    as one lazy plan (no job at call time): a hash aggregation per cell,
+    then the all-tiles total as an unpartitioned window over its tiny
+    output. There are fewer than 1/fraction such cells."""
     counts = tiles.groupBy("cell_join").agg(F.count(F.lit(1)).alias("n"))
-    total = tiles.count()
-    return counts.filter(F.col("n") > fraction * total).select("cell_join")
+    return (
+        counts.selectExpr("cell_join", f"n > {fraction!r}D * sum(n) OVER () AS _hot")
+        .filter("_hot")
+        .select("cell_join")
+    )
 
 
 class PreparedQueries:
@@ -112,9 +120,12 @@ def prepare_pip_queries(queries: DataFrame) -> PreparedQueries:
     """Build (and cache) the query-side plan: bbox cells at Z_JOIN + polygon
     table. The cell cover is broadcast per job — kept LEAN: only (query_id,
     cell, bbox); polygon arrays never ride the exploded side. The explode is
-    repartitioned first (query tables usually arrive as one file split, and
-    a single-task explode would serialize every broadcast build)."""
+    repartitioned first into ``defaultParallelism`` partitions (query tables
+    usually arrive as one file split, and a single-task explode would
+    serialize every broadcast build); an explicit count, because adaptive
+    execution coalesces a by-column exchange of a few KB into one task."""
     q = queries.filter("kind = 'pip'")
+    parts = queries.sparkSession.sparkContext.defaultParallelism
     qc = _bbox_cells(
         q.selectExpr(
             "query_id",
@@ -122,7 +133,7 @@ def prepare_pip_queries(queries: DataFrame) -> PreparedQueries:
             "array_min(poly_y) AS bymin",
             "array_max(poly_x) AS bxmax",
             "array_max(poly_y) AS bymax",
-        ).repartition("query_id"),
+        ).repartition(parts, "query_id"),
         ("bxmin", "bymin", "bxmax", "bymax"),
         Z_JOIN,
     )
@@ -144,6 +155,12 @@ def pip_join(
     -> project. Output grain matches FIXTURES.md golden_pip_rows:
     (query_id, image_id, level, tile_idx, caption).
 
+    Salting (``salt`` > 1) collects ``hot`` (default: ``hot_cells(tiles)``)
+    and tests membership with one SQL ``IN`` over its fewer than
+    1/fraction cells: a hot tile gets ``_salt = pmod(phash, salt)``, a hot
+    cover row is replicated ``salt`` times, so each tile still matches one
+    copy per query. An empty list joins on ``cell_join`` alone.
+
     ``refine`` picks the containment rule: ``"arrow_bcast"`` (default) is
     even-odd (crossing number), the formula the DuckDB oracle in
     __spark_entry__.oracle_sql evaluates byte-identically; ``"winding"`` is
@@ -160,32 +177,26 @@ def pip_join(
     qc = prepared.qc
 
     t = tiles
+    join_keys = ["cell_join"]
     if salt and salt > 1:
         # the skew list is computed once per snapshot in production (it only
         # changes when the data distribution does) — callers amortize it by
-        # passing a cached `hot`
+        # passing a cached `hot`. It is collected here and spliced in as a
+        # literal set: fewer than 1/fraction cells, so no flag join.
         if hot is None:
             hot = hot_cells(tiles)
-        flag = F.broadcast(hot.selectExpr("*", "true AS _hot"))
-        t = (
-            t.join(flag, "cell_join", "left")
-            .selectExpr(
-                "*", f"CASE WHEN _hot IS NOT NULL THEN pmod(phash, {salt}) ELSE 0 END AS _salt"
+        cells = sorted(r["cell_join"] for r in hot.collect() if r["cell_join"] is not None)
+        if cells:
+            is_hot = f"cell_join IN ({', '.join(map(str, cells))})"
+            t = t.selectExpr(
+                "*", f"CASE WHEN {is_hot} THEN pmod(phash, {salt}) ELSE 0 END AS _salt"
             )
-            .drop("_hot")
-        )
-        qc = (
-            qc.join(flag, "cell_join", "left")
-            .selectExpr(
+            qc = qc.selectExpr(
                 "*",
-                f"explode(CASE WHEN _hot IS NOT NULL THEN sequence(0, {salt - 1}) "
+                f"explode(CASE WHEN {is_hot} THEN sequence(0, {salt - 1}) "
                 "ELSE array(0) END) AS _salt",
             )
-            .drop("_hot")
-        )
-        join_keys = ["cell_join", "_salt"]
-    else:
-        join_keys = ["cell_join"]
+            join_keys = ["cell_join", "_salt"]
 
     cand = t.join(F.broadcast(qc), join_keys, "inner")
 

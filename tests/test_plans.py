@@ -357,3 +357,138 @@ class TestHeaderScanShape:
                 "length",
                 "path",
             ]
+
+
+def _jobs(spark, run) -> int:
+    """Spark jobs ``run()`` submits, counted in the status tracker under a
+    job group of its own (once the listener bus, which fills the tracker
+    asynchronously, has drained)."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _force(df) -> None:
+    """Evaluate every output column of ``df`` (a bare count would let
+    Catalyst prune them)."""
+    df.select(F.count(F.lit(1)), F.bit_xor(F.xxhash64(*df.columns))).first()
+
+
+class TestSpatialJoinPass:
+    """The spatial-join pass is set by how many Spark jobs it runs: each
+    action over a persisted relation costs about 0.1 s on a 4-CPU host. kNN carries only
+    each query's top k through its rounds and returns the last round's
+    checkpoint; pip_join salts hot cells from a literal set instead of two
+    LEFT joins against a broadcast flag relation.
+
+    Jobs per call, force-evaluated, on sf_small with meta, the hot list and
+    the prepared query cover persisted (8 shuffle partitions; kNN settles
+    in two rounds there): ``knn`` ran 13 (a cached point count 3, each
+    round 3, the final dedup + rank and the evaluation 4), now 10 (count 2,
+    each round 3, evaluation 2); ``pip_join`` ran 5, now 4."""
+
+    KNN_JOBS = 10
+    PIP_JOBS = 4
+
+    @pytest.fixture(scope="class")
+    def inputs(self, spark, sf_small):
+        from cloudtiff_spark.operators.meta import tile_assignments
+        from cloudtiff_spark.operators.spatial import hot_cells, prepare_pip_queries
+
+        meta = spark.read.parquet(os.path.join(sf_small, "images_meta.parquet")).cache()
+        queries = spark.read.parquet(os.path.join(sf_small, "queries.parquet")).cache()
+        # a low threshold, so sf_small has hot cells to salt
+        hot = hot_cells(tile_assignments(meta), fraction=0.005).cache()
+        assert hot.count() > 0
+        prepared = prepare_pip_queries(queries)
+        prepared.qc = prepared.qc.cache()
+        prepared.qc.count()
+        prepared.polys_dict()
+        yield meta, queries, hot, prepared
+        # a leaked InMemoryRelation would replace parquet scans in the
+        # pushdown / pruning guards above
+        for df in (meta, queries, hot, prepared.qc):
+            df.unpersist()
+
+    def test_knn_result_plans_no_exchange_or_window(self, inputs):
+        from cloudtiff_spark.operators.knn import knn
+
+        meta, queries, _, _ = inputs
+        plan = knn(meta, queries)._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert "Window" not in plan, plan
+
+    def test_pip_hot_salting_joins_once(self, inputs):
+        from cloudtiff_spark.operators.meta import tile_assignments
+        from cloudtiff_spark.operators.spatial import pip_join
+
+        meta, queries, hot, prepared = inputs
+        pj = pip_join(tile_assignments(meta), queries, hot=hot, prepared=prepared)
+        plan = pj._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("BroadcastHashJoin") == 1, plan
+        assert "LeftOuter" not in plan, plan
+        assert "_salt" in plan, plan  # the hot list is not empty: salting runs
+
+    def test_jobs_per_call(self, spark, inputs):
+        from cloudtiff_spark.operators.knn import knn
+        from cloudtiff_spark.operators.meta import tile_assignments
+        from cloudtiff_spark.operators.spatial import pip_join
+
+        meta, queries, hot, prepared = inputs
+        runs = {
+            "knn": lambda: _force(knn(meta, queries)),
+            "pip": lambda: _force(
+                pip_join(tile_assignments(meta), queries, hot=hot, prepared=prepared)
+            ),
+        }
+        for run in runs.values():
+            run()  # warm: first-use broadcasts and code generation
+        got = {name: _jobs(spark, run) for name, run in runs.items()}
+        assert got["knn"] <= self.KNN_JOBS, got
+        assert got["pip"] <= self.PIP_JOBS, got
+
+
+
+class TestSpatialJoinSetUp:
+    """The pass's per-snapshot inputs, on fresh unpersisted reads (a cached
+    relation of the same plan would be read instead)."""
+
+    def test_hot_cells_is_lazy_and_exact(self, spark, sf_small):
+        """hot_cells runs no job when called, and its plan gives the
+        brute-force set of cells holding more than the fraction of tiles."""
+        from cloudtiff_spark.operators.meta import tile_assignments
+        from cloudtiff_spark.operators.spatial import HOT_FRACTION, hot_cells
+
+        meta = spark.read.parquet(os.path.join(sf_small, "images_meta.parquet"))
+        ta = tile_assignments(meta)
+        cells = ta.select("cell_join").toPandas()["cell_join"]
+        per_cell = cells.value_counts()
+        for fraction in (HOT_FRACTION, 0.005):
+            box = []
+            assert _jobs(spark, lambda: box.append(hot_cells(ta, fraction))) == 0
+            want = set(per_cell[per_cell > fraction * len(cells)].index)
+            assert {r["cell_join"] for r in box[0].collect()} == want, fraction
+        assert per_cell.max() > 0.005 * len(cells)  # the low threshold flags a cell
+
+    def test_pip_cover_explode_not_coalesced(self, spark, sf_small):
+        """The cell-cover explode reads its repartition uncoalesced on a
+        fresh, unpersisted read: adaptive execution would run a by-column
+        exchange of a few KB of polygons as one task."""
+        from cloudtiff_spark.operators.spatial import prepare_pip_queries
+
+        queries = spark.read.parquet(os.path.join(sf_small, "queries.parquet"))
+        qc = prepare_pip_queries(queries).qc
+        assert qc.collect()
+        plan = qc._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+        assert "Generate explode" in final, final
+        assert not any("AQEShuffleRead" in ln and "coalesced" in ln for ln in final.splitlines()), final

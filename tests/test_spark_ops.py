@@ -196,6 +196,29 @@ class TestKnn:
         assert got == _brute_knn(meta_pd, qs.toPandas())
         assert sum(1 for g in got if g[0] == "q_all") == len(meta_pd)
 
+    def test_duplicated_meta_row_counts_once(self, spark):
+        """A meta row listed twice is one candidate: the query must not
+        settle on the copy and return fewer than k images. Image A sits
+        twice on the query point, B 30 degrees north, and a 2,000-point
+        cluster far away sizes the first ring to miss B."""
+        from cloudtiff_spark.operators.knn import knn
+
+        rng = np.random.default_rng(5)
+        far = [
+            (f"c{i:04d}", x - 0.01, y - 0.01, x + 0.01, y + 0.01)
+            for i, (x, y) in enumerate(rng.normal((100.0, 50.0), 1.0, (2000, 2)).tolist())
+        ]
+        meta = spark.createDataFrame(
+            [("A", -0.1, -0.1, 0.1, 0.1)] * 2 + [("B", -0.1, 29.9, 0.1, 30.1)] + far,
+            "image_id string, xmin double, ymin double, xmax double, ymax double",
+        )
+        queries = spark.createDataFrame(
+            [("q0", "knn", 0.0, 0.0, 2)],
+            "query_id string, kind string, px double, py double, k int",
+        )
+        got = sorted((r.rank, r.image_id) for r in knn(meta, queries).collect())
+        assert got == [(1, "A"), (2, "B")]
+
 
 class TestTiling:
     def test_level0_tiles_bit_exact(self, tables):

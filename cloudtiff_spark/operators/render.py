@@ -36,7 +36,13 @@ from pyspark.sql.types import (
 )
 
 from ..codecs import decode_image
-from .spatial import _explode_tiles, _lod_pick, _tile_range, region_extract, slippy_bounds_np
+from .spatial import (
+    _explode_tiles,
+    _lod_pick,
+    _tile_range,
+    region_extract_picked,
+    slippy_bounds_np,
+)
 
 RENDER_SCHEMA = StructType(
     [
@@ -319,8 +325,10 @@ def region_render(
 ) -> DataFrame:
     """Render every 'region' query against every intersecting image.
 
-    Pipeline: region_extract (LOD pick + tile-range pruning) -> inner join
-    to the materialized tiles table on (image_id, level, tile_idx) [J1] ->
+    Pipeline: region_extract_picked (LOD pick + tile-range pruning, with
+    the level and query render params) -> explode of the tile range ->
+    inner join to the materialized tiles table on (image_id, level,
+    tile_idx) [J1] ->
     stream_groups keyed by (query, image): mosaic + nearest gather, one
     output row per group.
 
@@ -338,23 +346,22 @@ def region_render(
     no decode and no extra pass — the decode-once trade without its
     per-call key-set cost, amortized across every render query of the
     session (r7; byte-identical outputs, _mosaic_bbox's ``raw`` path)."""
-    wanted = region_extract(levels, queries)  # query_id, image_id, level, tile_idx
-    # re-attach the per-(query,image) render parameters (res_w/res_h ride
-    # along when the caller fixed the output resolution — wmts_render)
     res_cols = [c for c in ("res_w", "res_h") if c in queries.columns]
     if len(res_cols) == 1:
         raise ValueError(
             f"queries carry {res_cols[0]} without its partner; fixed "
             "output resolution needs BOTH res_w and res_h columns"
         )
-    q = queries.filter("kind = 'region'").selectExpr(
-        "query_id", "rxmin", "rymin", "rxmax", "rymax", "mp_limit", *res_cols
-    )
-    lv = levels.selectExpr(
-        "image_id", "level", "lw", "lh", "tile_w", "tile_h", "cols", "rows",
+    # one row per (query, image, tile) with the pair's render parameters
+    # (res_w/res_h ride along when the caller fixed the output resolution
+    # — wmts_render), all from the one extract relation
+    params = [
+        "query_id", "image_id", "level", "lw", "lh", "tile_w", "tile_h", "cols", "rows",
         "xmin", "ymin", "xmax", "ymax", "epsg", "origin_x", "origin_y", "scale_px",
-        "w", "h",
-    )
+        "w", "h", "rxmin", "rymin", "rxmax", "rymax", "mp_limit", *res_cols,
+    ]
+    picked = region_extract_picked(levels, queries).selectExpr(*params, "tr0", "tr1", "tc0", "tc1")
+    wanted = _explode_tiles(picked, "tr0", "tr1", "tc0", "tc1").selectExpr(*params, "tile_idx")
     keys = ["image_id", "level", "tile_idx"]
     if decode_once and "raw" not in tiles.columns:
         # `wanted` (a small pruned key set) is consumed by BOTH the
@@ -366,11 +373,7 @@ def region_render(
         tile_side = decode_tiles_once(tiles.join(needed, keys, "left_semi"))
     else:
         tile_side = _tile_side(tiles)
-    joined = (
-        wanted.join(F.broadcast(q), "query_id")
-        .join(lv, ["image_id", "level"])
-        .join(tile_side, keys, "inner")
-    )
+    joined = wanted.join(tile_side, keys, "inner")
 
     def assemble(pdf: pd.DataFrame) -> dict:
         return _render_one(pdf.iloc[0], *_mosaic_bbox(pdf))
@@ -510,8 +513,6 @@ def region_render_blocked(
             "region_render_blocked does not support fixed-resolution "
             "(res_w/res_h) queries; use region_render / wmts_render"
         )
-    from .spatial import region_extract_picked
-
     # the pre-explosion relation carries the pruned tile rectangle
     # (tr0..tc1) as columns, so the pixel-work stages never re-join
     # against region_extract (an earlier shape evaluated the join three

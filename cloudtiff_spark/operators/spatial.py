@@ -316,17 +316,20 @@ def region_extract_picked(levels: DataFrame, queries: DataFrame) -> DataFrame:
     """The PRE-EXPLOSION region-extract relation: one row per
     (query, image) with the LOD-picked level, full level/render params,
     and the covered tile-range rectangle as columns (tr0..tr1, tc0..tc1).
-    region_render_blocked consumes this directly so the spatial join runs
-    once and the pruned range travels as data instead of a re-join.
+    region_render and region_render_blocked consume this directly, so the
+    spatial join runs once and the pruned range and the render params
+    travel as data instead of through re-joins.
 
     Output columns: query_id, image_id, level + level params + the query's
-    render params + tr0/tr1/tc0/tc1."""
+    render params (res_w/res_h too when the queries carry them) +
+    tr0/tr1/tc0/tc1."""
     # output dims from megapixel cap + aspect (O4, util.rs:131-142)
     aspect = "((rxmax - rxmin) / (rymax - rymin))"
     out_h = f"SQRT(mp_limit * 1000000.0D / {aspect})"
     out_w = f"({aspect} * {out_h})"
+    res_cols = [c for c in ("res_w", "res_h") if c in queries.columns]
     q = queries.filter("kind = 'region'").selectExpr(
-        "query_id", "rxmin", "rymin", "rxmax", "rymax", "mp_limit",
+        "query_id", "rxmin", "rymin", "rxmax", "rymax", "mp_limit", *res_cols,
         f"(rxmax - rxmin) / {out_w} AS req_x",
         f"(rymax - rymin) / {out_h} AS req_y",
     )

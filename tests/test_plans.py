@@ -492,3 +492,39 @@ class TestSpatialJoinSetUp:
         final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
         assert "Generate explode" in final, final
         assert not any("AQEShuffleRead" in ln and "coalesced" in ln for ln in final.splitlines()), final
+
+
+class TestRegionRenderReadsPickedParams:
+    """region_render takes each (query, image) pair's level and query
+    render params from the extract relation itself: the optimized plan
+    holds the cell-key overlap join and the tile join only, and scans the
+    image metadata once. wmts_render's slippy bounds are one MapInPandas,
+    so they are evaluated once per call."""
+
+    @pytest.fixture(scope="class")
+    def optimized(self, spark, sf_small):
+        from cloudtiff_spark.operators.meta import levels_df
+        from cloudtiff_spark.operators.render import region_render, wmts_render
+        from cloudtiff_spark.operators.tiling import build_tiles
+
+        read = lambda name: spark.read.parquet(os.path.join(sf_small, f"{name}.parquet"))  # noqa: E731
+        levels, tiles = levels_df(read("images_meta")), build_tiles(read("images"))
+        queries = read("queries")
+        return {
+            name: df._jdf.queryExecution().optimizedPlan().toString()
+            for name, df in (
+                ("region", region_render(levels, tiles, queries)),
+                ("wmts", wmts_render(levels, tiles, queries)),
+            )
+        }
+
+    def test_no_join_against_levels(self, optimized):
+        for name, plan in optimized.items():
+            lines = plan.splitlines()
+            assert sum(" Join " in ln for ln in lines) == 2, (name, plan)
+            meta_scans = [ln for ln in lines if "Relation [" in ln and "origin_x" in ln]
+            assert len(meta_scans) == 1, (name, plan)
+
+    def test_wmts_bounds_planned_once(self, optimized):
+        plan = optimized["wmts"]
+        assert plan.count("MapInPandas bounds(") == 1, plan

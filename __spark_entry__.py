@@ -402,7 +402,6 @@ def q_crop_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 crop render of a fixed normalized crop over a 10% subset;
     reports dims + mean pixel (micro). Rows-only check (pixel content is
     pytest-verified against the decode oracle, tests/test_spark_ops.py)."""
-    from cloudtiff_spark.operators.meta import levels_df
     from cloudtiff_spark.operators.render import crop_render
 
     lv = _shared_sub_levels(spark, sf_dir)
@@ -422,7 +421,6 @@ def q_region_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a hash of decoded pixel bytes, which SQL cannot recompute — pixel
     content is pytest-verified against the numpy decode oracle instead
     (tests/test_spark_ops.py::TestRender)."""
-    from cloudtiff_spark.operators.meta import levels_df
     from cloudtiff_spark.operators.render import region_render
 
     _, _, queries = _fixture_tables(spark, sf_dir)
@@ -446,7 +444,6 @@ def q_wmts_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick + tile-range prune + pruned tile join + bounded-canvas gather.
     Oracle: the expected_wmts parquet (sequential recompute sharing the
     numpy slippy-bounds helper — bit-identical tile rects)."""
-    from cloudtiff_spark.operators.meta import levels_df
     from cloudtiff_spark.operators.render import wmts_render
 
     _, _, queries = _fixture_tables(spark, sf_dir)
@@ -472,7 +469,6 @@ def q_blocked_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pytest-pinned), so the SAME expected_region table value-checks it —
     a hash mismatch here but not in region_render isolates a blocked-path
     defect. Rows-only oracle caveat identical to region_render."""
-    from cloudtiff_spark.operators.meta import levels_df
     from cloudtiff_spark.operators.render import region_render_blocked
 
     _, _, queries = _fixture_tables(spark, sf_dir)
@@ -571,9 +567,9 @@ def q_cog_blocked_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, meta, _ = _fixture_tables(spark, sf_dir)
     images = _shared_decoded(spark, sf_dir)
     # persisted: the sink pipeline drives FOUR driver-side actions (two
-    # meta collects, the tile-size collect, the final evaluation) and
-    # each would otherwise re-scan the full decoded-raster cache for this
-    # 1% slice (measured ~3 s/action at sf0.1)
+    # meta collects, assemble's per-image settings aggregate, the final
+    # evaluation) and each would otherwise re-scan the full decoded-raster
+    # cache for this 1% slice (measured ~3 s/action at sf0.1)
     sub = (
         images.filter(F.col("image_id").endswith("00"))
         .filter(F.col("raster").isNotNull())

@@ -15,20 +15,25 @@ same block grain it was produced:
            in parallel (mapInPandas, one Arrow batch of blocks per task).
   stage 2  overview pyramid, level by level (log2 driver loop, the
            encode/mod.rs:525-584 step): one narrow mapInPandas over the
-           persisted level-(i-1) raw tiles (the source-side feed) emits
-           each tile once per level-i dest tile whose footprint reads it
-           (usually one or two per axis, _readers); stream_groups keyed
-           by DEST tile mosaics them, resamples with the exact global
-           index formula (_footprint), and the level is compressed.
-           Work per level shrinks 4x, so the whole pyramid costs ~1/3
-           of level 0 — same ratio as the single-pass writer.
+           level-(i-1) raw tiles (the source-side feed) emits each tile
+           once per level-i dest tile whose footprint reads it (usually
+           one or two per axis, _readers); stream_groups keyed by DEST
+           tile mosaics them, resamples with the exact global index
+           formula (_footprint), and the level is compressed. The
+           pyramid is one plan over the local-checkpointed blocks: an
+           action runs each level's stream_groups exchange once and
+           reuses it (ReusedExchange) for that level's compress and the
+           next level's feed. Work per level shrinks 4x, so the whole
+           pyramid costs ~1/3 of level 0 — same ratio as the single-pass
+           writer.
   stage 3  container assembly: every tile row carries the codec settings
            it was compressed with (tile, compression, predictor, quality,
            nodata), and each header/IFD prefix (tiff.py:container_prefix)
            is built from images_meta geometry plus the settings its own
            rows carry — they survive a filter, union or parquet round
            trip of the relation. Prefix offsets come from tile SIZES
-           (12 bytes/tile metadata), and payloads are either
+           (12 bytes/tile metadata), checked against each image's level
+           plan by one validator (_byte_counts), and payloads are either
            concatenated per image (assemble_cogs — one bounded fan-in
            task per image, the contiguous-file contract) or streamed to
            a path in offset order, the driver holding one
@@ -131,6 +136,14 @@ def _pixel_format(m: dict, comp: int, predictor: int) -> tuple[int, int, int]:
     return fmt
 
 
+def _disagree(img: str) -> ValueError:
+    """Tiles compressed under different settings cannot share one
+    container prefix."""
+    return ValueError(
+        f"{img}: its tile rows disagree on {', '.join(_SETTINGS)} — tiles of different encodes"
+    )
+
+
 def _tile_settings(tiles: DataFrame) -> dict[str, dict]:
     """{image_id: {tile, compression, predictor, quality, nodata}} — the
     codec settings each image's rows carry, from ONE per-image aggregate
@@ -144,10 +157,7 @@ def _tile_settings(tiles: DataFrame) -> dict[str, dict]:
         F.expr(f"count(DISTINCT {s}) AS n_settings"), F.expr(f"min({s}) AS s")
     ).collect():
         if r["n_settings"] != 1:
-            raise ValueError(
-                f"{r['image_id']}: its tile rows disagree on {', '.join(_SETTINGS)} "
-                "— tiles of different encodes"
-            )
+            raise _disagree(r["image_id"])
         out[r["image_id"]] = r["s"].asDict()
     return out
 
@@ -178,9 +188,9 @@ def _tile_array(
 
 def _image_prefix(levels, byte_counts, m: dict, s: dict, big: bool) -> bytes:
     """One image's header/IFD prefix (tiff.container_prefix) from its
-    _collect_meta geometry ``m`` and the codec settings ``s`` its tile
-    rows carry (_tile_settings). A JPEG image gets the shared tag-347
-    tables rebuilt from the quality its tiles were compressed at."""
+    _collect_meta geometry ``m`` and the codec settings ``s`` all its
+    tile rows carry. A JPEG image gets the shared tag-347 tables rebuilt
+    from the quality its tiles were compressed at."""
     jpeg = s["compression"] == COMPRESSION_JPEG
     bits, sample_format, photometric = _pixel_format(m, s["compression"], s["predictor"])
     return container_prefix(
@@ -211,6 +221,41 @@ def _check_payload(img: str, lv: int, ti: int, data: bytes, nb: int) -> None:
             f"{img} level {lv} tile {ti}: payload is {len(data)} "
             f"bytes but nbytes says {nb} — offsets would corrupt"
         )
+
+
+def _byte_counts(img: str, levels, lvs, tis, nbs) -> list[list[int]]:
+    """Per-level tile sizes of one image from its (level, tile_idx,
+    nbytes) rows sorted by (level, tile_idx), for the container prefix.
+    The rows must be exactly tile_idx 0..n-1 of each planned level
+    (``levels``, tiff.plan_levels) and nothing else: a missing, duplicate
+    or out-of-grid tile, or a tile of a level past the plan, would shift
+    or pad the payload stream behind offsets the prefix does not declare
+    — a silently corrupt container. Both writers check here."""
+    byte_counts = []
+    pos = 0
+    for lv, lev in enumerate(levels):
+        cols_g, rows_g = lev.grid
+        n = cols_g * rows_g
+        seg_ti = tis[pos : pos + n]
+        seg_lv = lvs[pos : pos + n]
+        if len(seg_ti) != n or (seg_lv != lv).any() or (seg_ti != np.arange(n)).any():
+            got = int((lvs == lv).sum())
+            if got != n:
+                raise ValueError(f"{img} level {lv}: {got} tiles != {n} expected")
+            bad = tis[lvs == lv]
+            dup = bad[:-1][np.diff(bad) == 0]
+            if len(dup):
+                raise ValueError(
+                    f"{img} level {lv}: duplicate tile_idx {int(dup[0])} in the tile relation"
+                )
+            raise ValueError(
+                f"{img} level {lv}: out-of-grid tile_idx {int(bad.max())} in the tile relation"
+            )
+        byte_counts.append([int(b) for b in nbs[pos : pos + n]])
+        pos += n
+    if pos != len(tis):
+        raise ValueError(f"{img}: {len(tis) - pos} tiles beyond the {len(levels)}-level plan")
+    return byte_counts
 
 
 def blocks_from_images(images: DataFrame, tile: int = TILE) -> DataFrame:
@@ -324,7 +369,16 @@ def encode_cog_blocked(
     _footprint reads it, so the output is byte-identical to encode_cog
     for both (test-pinned). The catmullrom Encoder filter needs
     cross-tile 4-tap windows with globally-derived weights and stays on
-    the single-pass writer."""
+    the single-pass writer.
+
+    The result caches nothing for the session: one action runs each
+    level's resample exchange once and reuses it for that level's
+    compress and the next level's feed (each level but the last is
+    resampled twice, once per reader). The blocks are read once, through
+    a lazy local checkpoint freed with the result; read straight, a
+    cached blocks relation would defeat the reuse, as each level's copy
+    of its InMemoryRelation has fresh attribute ids and canonicalizes
+    apart."""
     if resample not in ("nearest", "average"):
         raise ValueError(f"unknown blocked resample filter {resample!r}")
     avg = resample == "average"
@@ -431,21 +485,12 @@ def encode_cog_blocked(
 
         return resample_group
 
-    # each level's raw tiles feed BOTH its compress stage and the next
-    # level's resample — persist so one action computes each level once;
-    # handles are attached to the returned DataFrame so the consumers
-    # (assemble_cogs / write_cog_ranged) can release the raw-tile caches
-    # once the compressed tiles are materialized
-    cur = blocks.select("image_id", "row", "col", "data").persist()
-    persisted = [cur]
+    cur = blocks.select("image_id", "row", "col", "data").localCheckpoint(eager=False)
     out = cur.mapInPandas(compress_level(0), schema=TILE_SCHEMA)
     for lv in range(1, max(m["n_levels"] for m in meta.values())):
         fed = cur.mapInPandas(make_feed(lv), schema=_FEED_SCHEMA)
         cur = stream_groups(fed, ["image_id", "rd", "cd"], make_resample(lv), _RAW_SCHEMA)
-        cur = cur.persist()
-        persisted.append(cur)
         out = out.unionByName(cur.mapInPandas(compress_level(lv), schema=TILE_SCHEMA))
-    out._cogsink_persisted = persisted
     return out
 
 
@@ -457,8 +502,8 @@ def assemble_cogs(tiles: DataFrame, images_meta: DataFrame, big: bool = False) -
 
     The header/IFD prefix is built INSIDE each image's fan-in task (r7 —
     VERDICT r6 "what's wrong" #1): the per-image stream_groups group
-    already holds every tile of its image, so it derives the byte_counts,
-    validates completeness/duplicates, builds the prefix (_image_prefix),
+    already holds every tile of its image, so it derives and validates
+    the byte_counts (_byte_counts), builds the prefix (_image_prefix),
     and emits prefix + payloads in (level, tile_idx) order. The driver collects
     ONLY per-image aggregates (the images_meta rows, plus one row per
     image with its tile count and codec settings) — never the
@@ -469,29 +514,27 @@ def assemble_cogs(tiles: DataFrame, images_meta: DataFrame, big: bool = False) -
     single task goes to write_cog_ranged instead.
 
     Validation surface note: with the prefix built in-task, the
-    duplicate/missing/out-of-grid/nbytes checks raise AT ACTION TIME from
-    the failing image's task (a Spark PythonException carrying the
-    message), not eagerly from this call — only the absent-image and
+    duplicate/missing/out-of-grid/past-plan/nbytes checks raise AT ACTION
+    TIME from the failing image's task (a Spark PythonException carrying
+    the message), not eagerly from this call — only the absent-image and
     settings-disagreement checks stay driver-side. A consumer that never
     computes a corrupt image's group (e.g. behind a filter) does not
-    observe its error."""
+    observe its error. The input is local-checkpointed (lineage
+    truncated), so its blocks are released once the output is dropped."""
     spark = tiles.sparkSession
     meta = _collect_meta(images_meta)
     if not meta:
         return spark.createDataFrame([], "image_id string, cog binary, cog_bytes long")
-    upstream = getattr(tiles, "_cogsink_persisted", [])
-    tiles = tiles.persist()
-    # ONE per-image aggregate row materializes the compressed-tile cache
-    # (so the raw-tile level caches can be released), reads each image's
-    # codec settings and catches images whose tiles are entirely absent —
-    # a missing GROUP would otherwise silently drop the image from the
-    # lazy output instead of failing
+    # read twice: by the per-image aggregate below and by the fan-in
+    tiles = tiles.localCheckpoint(eager=False)
+    # ONE per-image aggregate row materializes the checkpoint, reads each
+    # image's codec settings and catches images whose tiles are entirely
+    # absent — a missing GROUP would otherwise silently drop the image
+    # from the lazy output instead of failing
     settings = _tile_settings(tiles)
     for img in meta:
         if img not in settings:
             raise ValueError(f"{img}: 0 tiles in the tile relation")
-    for df in upstream:
-        df.unpersist()
     bmeta = spark.sparkContext.broadcast({"meta": meta, "settings": settings, "big": big})
 
     def concat(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -509,44 +552,7 @@ def assemble_cogs(tiles: DataFrame, images_meta: DataFrame, big: bool = False) -
         lvs = pdf["level"].to_numpy()
         tis = pdf["tile_idx"].to_numpy()
         nbs = pdf["nbytes"].to_numpy()
-        byte_counts = []
-        pos = 0
-        for lv, lev in enumerate(levels):
-            cols_g, rows_g = lev.grid
-            n = cols_g * rows_g
-            seg_ti = tis[pos : pos + n]
-            seg_lv = lvs[pos : pos + n]
-            # the sorted segment must be exactly tile_idx 0..n-1 of this
-            # level: anything else is a missing, duplicate, or
-            # out-of-grid tile_idx whose concat would shift every later
-            # offset — a silently corrupt container; fail here instead
-            if (
-                len(seg_ti) != n
-                or (seg_lv != lv).any()
-                or (seg_ti != np.arange(n)).any()
-            ):
-                got = int((lvs == lv).sum())
-                if got != n:
-                    raise ValueError(
-                        f"{img} level {lv}: {got} tiles != {n} expected"
-                    )
-                bad = tis[lvs == lv]
-                dup = bad[:-1][np.diff(bad) == 0]
-                if len(dup):
-                    raise ValueError(
-                        f"{img} level {lv}: duplicate tile_idx {int(dup[0])} "
-                        "in the tile relation"
-                    )
-                raise ValueError(
-                    f"{img} level {lv}: out-of-grid tile_idx {int(bad.max())} "
-                    "in the tile relation"
-                )
-            byte_counts.append([int(b) for b in nbs[pos : pos + n]])
-            pos += n
-        if pos != len(pdf):
-            raise ValueError(
-                f"{img}: {len(pdf) - pos} tiles beyond the {len(levels)}-level plan"
-            )
+        byte_counts = _byte_counts(img, levels, lvs, tis, nbs)
         prefix = _image_prefix(levels, byte_counts, m, s, p["big"])
         for lv, ti, nb, data in zip(lvs, tis, nbs, pdf["data"]):
             _check_payload(img, lv, ti, data, nb)
@@ -563,9 +569,10 @@ def write_cog_ranged(
     the single-gigapixel-raster sink (no task and no driver array ever
     holds the raster or the file).
 
-    The prefix is built from the image's codec settings (its TILE_SCHEMA
-    rows) and its tile sizes, collected as one (level, tile_idx, nbytes)
-    row per tile — metadata, but O(tiles) driver memory. Only payloads
+    The prefix is built from the image's codec settings and its tile
+    sizes, collected in one action as one (level, tile_idx, nbytes,
+    settings) row per tile — metadata, but O(tiles) driver memory — and
+    checked by the validator assemble_cogs runs in-task. Only payloads
     stream: they are appended via toLocalIterator over the (level,
     tile_idx)-sorted tiles, Spark computing partitions on demand, so the
     driver holds one partition of compressed tiles at a time. On object
@@ -577,33 +584,19 @@ def write_cog_ranged(
     if len(meta) != 1:
         raise ValueError("write_cog_ranged sinks exactly one image per path")
     ((img, m),) = meta.items()
-    upstream = getattr(tiles, "_cogsink_persisted", [])
     tiles = tiles.filter(F.col("image_id") == img).persist()
     try:
-        s = _tile_settings(tiles).get(img)
-        if s is None:
+        rows = tiles.select("level", "tile_idx", "nbytes", *_SETTINGS).collect()
+        if not rows:
             raise ValueError(f"{img}: 0 tiles in the tile relation")
+        # repr, so a NaN nodata equals itself and stays apart from null
+        if len({repr([r[c] for c in _SETTINGS]) for r in rows}) != 1:
+            raise _disagree(img)
+        s = {c: rows[0][c] for c in _SETTINGS}
         levels = plan_levels(m["w"], m["h"], s["tile"], s["compression"])
-        per: dict[int, dict[int, int]] = {}
-        for r in tiles.select("level", "tile_idx", "nbytes").collect():
-            d = per.setdefault(r["level"], {})
-            if r["tile_idx"] in d:
-                raise ValueError(
-                    f"level {r['level']}: duplicate tile_idx {r['tile_idx']} "
-                    "in the tile relation"
-                )
-            d[r["tile_idx"]] = r["nbytes"]
-        for df in upstream:  # raw-tile caches: dead once tiles materialized
-            df.unpersist()
-        byte_counts = []
-        for lv, lev in enumerate(levels):
-            cols_g, rows_g = lev.grid
-            d = per.get(lv, {})
-            if len(d) != cols_g * rows_g:
-                raise ValueError(
-                    f"level {lv}: {len(d)} tiles != {cols_g * rows_g} expected"
-                )
-            byte_counts.append([d[i] for i in range(cols_g * rows_g)])
+        rows.sort(key=lambda r: (r["level"], r["tile_idx"]))
+        lvs, tis, nbs = (np.array([r[c] for r in rows]) for c in ("level", "tile_idx", "nbytes"))
+        byte_counts = _byte_counts(img, levels, lvs, tis, nbs)
         prefix = _image_prefix(levels, byte_counts, m, s, big)
         n = 0
         with open(path, "wb") as f:
@@ -644,10 +637,11 @@ def render_blocks_to_cogs(
     square-ish — ModelPixelScale carries x and y independently).
     Returns (render_id, query_id, image_id, cog, cog_bytes)."""
     SEP = "\x1f"
-    # the render is the expensive stage and THREE driver-side actions read
-    # it (the meta collect in encode, the meta collect and the per-image
-    # settings aggregate in assemble) — persist so it runs once, released
-    # below once the compressed tiles are materialized
+    # the render is the expensive stage and FOUR driver-side actions read
+    # it (the separator check, the meta collect in encode, the meta
+    # collect and the per-image settings aggregate in assemble) — persist
+    # so it runs once, released below once the compressed tiles are
+    # materialized
     blocks = blocks.persist()
     # the composite key concat/splits on SEP: an id CONTAINING the
     # separator would mis-split the output columns and can collide two
@@ -694,8 +688,8 @@ def render_blocks_to_cogs(
         resample=resample,
     )
     out = assemble_cogs(tiles, meta)
-    # assemble_cogs returned => compressed tiles are cached; the raw
-    # render blocks are no longer needed
+    # assemble_cogs returned => compressed tiles are checkpointed; the
+    # raw render blocks are no longer needed
     blocks.unpersist()
     return out.select(
         F.col("image_id").alias("render_id"),

@@ -258,12 +258,3 @@ def build_tiles(images: DataFrame, tw: int = TILE, th: int = TILE, resample: str
 
     return images.mapInPandas(gen, schema=TILES_SCHEMA)
 
-
-def tiles_with_meta(tiles: DataFrame, meta: DataFrame) -> DataFrame:
-    """Attach the geo columns (bounds/cell keys) to materialized tiles via a
-    broadcast-free equi-join on image_id — at scale both sides are bucketed
-    by image_id so this co-locates without a shuffle."""
-    return tiles.join(
-        meta.select("image_id", "epsg", "xmin", "ymin", "xmax", "ymax", "caption", "phash"),
-        "image_id",
-    )

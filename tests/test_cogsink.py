@@ -5,6 +5,7 @@ streaming writer."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from cloudtiff_spark.errors import UnsupportedPixelFormat
 from cloudtiff_spark.tiff import (
@@ -204,6 +205,49 @@ def test_assemble_rejects_duplicate_tiles(spark):
     broken = tiles.filter("NOT (level = 0 AND tile_idx = 1)").unionByName(dup)
     with pytest.raises(Exception, match="duplicate tile_idx"):
         assemble_cogs(broken, meta).collect()
+
+
+@pytest.mark.parametrize(
+    "break_tiles,msg",
+    [
+        (
+            lambda t: t.withColumn(
+                "tile_idx", F.expr("IF(level = 0 AND tile_idx = 1, 99L, tile_idx)")
+            ),
+            "m level 0: out-of-grid tile_idx 99 in the tile relation",
+        ),
+        (
+            lambda t: t.unionByName(t.filter("level = 0").withColumn("level", F.lit(7))),
+            "m: 8 tiles beyond the 3-level plan",
+        ),
+    ],
+    ids=["out-of-grid", "past-plan"],
+)
+def test_both_writers_reject_tiles_off_the_plan(spark, tmp_path, break_tiles, msg):
+    """A tile whose (level, tile_idx) the image's level plan does not hold
+    would shift or pad the payloads behind the prefix's offsets: both
+    writers reject it with the same message."""
+    from cloudtiff_spark.operators.cogsink import assemble_cogs, write_cog_ranged
+
+    arr = _rng(9).integers(0, 255, size=(100, 200, 3), dtype=np.uint8)
+    tiles, meta = _encoded(spark, arr, "m")
+    broken = break_tiles(tiles)
+    with pytest.raises(Exception, match=msg):
+        assemble_cogs(broken, meta).collect()
+    with pytest.raises(ValueError, match=msg):
+        write_cog_ranged(broken, meta, str(tmp_path / "m.tif"))
+
+
+def test_assemble_caches_nothing(spark):
+    """assemble_cogs reads its input twice (the settings aggregate, the
+    fan-in) through a local checkpoint, released with the output; a
+    persist of the caller's relation stayed cached for the session."""
+    from cloudtiff_spark.operators.cogsink import assemble_cogs
+
+    arr = _rng(10).integers(0, 255, size=(100, 130, 3), dtype=np.uint8)
+    tiles, meta = _encoded(spark, arr, "c")
+    assert assemble_cogs(tiles, meta).collect()
+    assert not tiles.is_cached
 
 
 def test_render_blocks_to_cogs_end_to_end(spark, sf_small):

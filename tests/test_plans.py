@@ -305,18 +305,29 @@ class TestRenderAssembleParallelism:
 
 
 class TestBlockedCogSinkPlanShape:
-    def test_overview_levels_join_nothing(self, spark):
-        """Each overview level of the blocked COG sink is one source-side
-        feed over the previous level's raw tiles, then the per-dest-tile
-        resample: no level may pair tiles through a join, which moves raw
-        payloads through an extra exchange per level."""
+    """The blocked COG sink over one 300x200 image at tile 64 (4 levels).
+    Each overview level is one source-side feed over the previous level's
+    raw tiles, then the per-dest-tile resample; the pyramid caches
+    nothing, and one action runs each level's resample exchange once,
+    reusing it for that level's compress and the next level's feed.
+
+    Encode + assemble + collect, 8 shuffle partitions: 18 jobs and 52
+    stages with every level persisted (the settings aggregate, as the
+    first action over them, submitted each level's exchange as a job of
+    its own), 10 jobs and 26 stages with the lazy pyramid and a
+    local-checkpointed assemble input."""
+
+    JOBS = 10
+
+    @pytest.fixture(scope="class")
+    def inputs(self, spark):
         import numpy as np
 
         from cloudtiff_spark.grid import num_levels
-        from cloudtiff_spark.operators.cogsink import blocks_from_images, encode_cog_blocked
+        from cloudtiff_spark.operators.cogsink import blocks_from_images
 
         w, h = 300, 200
-        assert num_levels(w, h, 64, 64) >= 3  # two overview levels or more
+        assert num_levels(w, h, 64, 64) == 4
         arr = np.zeros((h, w, 3), np.uint8)
         images = spark.createDataFrame(
             [("p", bytearray(arr.tobytes()), w, h, 3, "uint8")],
@@ -327,12 +338,50 @@ class TestBlockedCogSinkPlanShape:
             "image_id string, w int, h int, c int, dtype string, epsg int, "
             "origin_x double, origin_y double, scale_px double",
         )
-        tiles = encode_cog_blocked(blocks_from_images(images, tile=64), meta, tile=64)
-        plan = tiles._jdf.queryExecution().executedPlan().toString()
+        return blocks_from_images(images, tile=64), meta
+
+    def test_overview_levels_join_nothing(self, inputs):
+        """No level may pair tiles through a join, which moves raw
+        payloads through an extra exchange per level."""
+        from cloudtiff_spark.operators.cogsink import encode_cog_blocked
+
+        blocks, meta = inputs
+        plan = encode_cog_blocked(blocks, meta, tile=64)._jdf.queryExecution().executedPlan()
+        plan = plan.toString()
         assert plan.count("MapInPandas") >= 3, plan[:2000]  # the plan is all there
         assert "Join" not in plan, plan[:2000]
-        for df in tiles._cogsink_persisted:
-            df.unpersist()
+
+    @pytest.mark.parametrize("cached", [False, True])
+    def test_levels_reuse_exchanges_not_caches(self, inputs, cached):
+        """Also over a cached blocks relation, as every caller passes one:
+        the copies of its InMemoryRelation in the level plans do not
+        canonicalize equal, so reading it straight defeats the reuse."""
+        from cloudtiff_spark.operators.cogsink import encode_cog_blocked
+
+        blocks, meta = inputs
+        if cached:
+            blocks = blocks.cache()
+        try:
+            tiles = encode_cog_blocked(blocks, meta, tile=64)
+            assert tiles.collect()  # runs this plan: the final plan shows the reuse
+            plan = tiles._jdf.queryExecution().executedPlan().toString()
+        finally:
+            blocks.unpersist()
+        assert "isFinalPlan=true" in plan, plan
+        assert "InMemoryTableScan" not in plan, plan
+        # levels 1 and 2 each feed the level after them
+        assert plan.count("ReusedExchange") >= 2, plan
+
+    def test_jobs_per_encode_and_assemble(self, spark, inputs):
+        from cloudtiff_spark.operators.cogsink import assemble_cogs, encode_cog_blocked
+
+        blocks, meta = inputs
+
+        def run():
+            assert assemble_cogs(encode_cog_blocked(blocks, meta, tile=64), meta).collect()
+
+        run()  # warm: first-use broadcasts and code generation
+        assert _jobs(spark, run) <= self.JOBS
 
 
 class TestHeaderScanShape:

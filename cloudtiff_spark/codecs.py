@@ -104,40 +104,52 @@ def lzw_encode(data: bytes) -> bytes:
     return out.flush()
 
 
+_LZW_ROOTS = [bytes([i]) for i in range(256)] + [b"", b""]  # + CLEAR, EOI
+
+
 def lzw_decode(data: bytes) -> bytes:
-    """Inverse of lzw_encode; also accepts any spec-conforming TIFF LZW."""
-    out = bytearray()
-    table: list[bytes] = []
-    width = 9
-    acc = 0
-    nbits = 0
+    """Inverse of lzw_encode; also accepts any spec-conforming TIFF LZW.
+
+    The loop runs once per code, so its per-iteration work is kept to
+    locals: each refill takes two bytes (one refill always covers a code
+    of at most 12 bits), the width mask and the table size of the next
+    width step change only when the width does, and decoded entries are
+    joined once at the end."""
+    out: list[bytes] = []
+    table = _LZW_ROOTS[:]
+    width, mask, bump = 9, 0x1FF, 510
+    acc = nbits = pos = 0
     prev: bytes | None = None
-    pos = 0
     n = len(data)
-
-    def reset() -> None:
-        nonlocal table, width, prev
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        width = 9
-        prev = None
-
-    reset()
-    while pos < n or nbits >= width:
-        while nbits < width and pos < n:
-            acc = (acc << 8) | data[pos]
-            pos += 1
-            nbits += 8
+    while True:
         if nbits < width:
-            break
+            # drop the consumed high bits at refill time (keeps the int
+            # small, so shifts stay O(1))
+            acc &= (1 << nbits) - 1
+            if pos + 1 < n:
+                acc = (acc << 16) | (data[pos] << 8) | data[pos + 1]
+                pos += 2
+                nbits += 16
+            elif pos < n:
+                acc = (acc << 8) | data[pos]
+                pos += 1
+                nbits += 8
+                if nbits < width:
+                    break
+            else:
+                break
         nbits -= width
-        code = (acc >> nbits) & ((1 << width) - 1)
-        acc &= (1 << nbits) - 1  # keep the int small (O(1) shifts)
+        code = (acc >> nbits) & mask
         if code == _EOI:
             break
         if code == _CLEAR:
-            reset()
+            table = _LZW_ROOTS[:]
+            width, mask, bump = 9, 0x1FF, 510
+            prev = None
             continue
         if prev is None:
+            if code >= _FIRST:
+                raise ValueError(f"corrupt LZW stream: first code {code} is not a literal")
             entry = table[code]
         elif code < len(table):
             entry = table[code]
@@ -147,13 +159,15 @@ def lzw_decode(data: bytes) -> bytes:
             table.append(entry)
         else:
             raise ValueError(f"corrupt LZW stream: code {code} > table {len(table)}")
-        out += entry
+        out.append(entry)
         prev = entry
         # early change, shifted one entry early again because the decoder's
         # table lags the encoder's by exactly one entry
-        if len(table) == (1 << width) - 2 and width < 12:
+        if len(table) == bump:
             width += 1
-    return bytes(out)
+            mask = (1 << width) - 1
+            bump = mask - 1 if width < 12 else -1
+    return b"".join(out)
 
 
 def packbits_decode(data: bytes) -> bytes:
